@@ -10,28 +10,46 @@ means (lambda_code/calculate_average_reserves.py:27-33).
 
 Spark-first differences (deliberate, SURVEY §4.3-1):
 
+* **O(1) draws per policy, same estimator.** ``floor(Exp(mean=β))`` is
+  geometric: ``P(n >= k) = P(x >= k) = q^k`` with ``q = exp(-1/β)``. The
+  sum of ``N`` i.i.d. geometric counts is exactly
+  ``NegativeBinomial(N, 1-q)``, and the sum of ``n`` i.i.d.
+  ``Normal(μ,σ²)`` amounts is exactly ``Normal(nμ, nσ²)``. So one
+  negative-binomial claim count and one normal total per policy have the
+  same distribution as the reference's ``N·(1 + E[n])`` draws — no
+  approximation, only a different random stream.
+  ``simulate_reserves(exact_claims=True)`` keeps the reference's
+  claim-by-claim procedure (N exponentials, then every claim amount) from
+  a per-row ``default_rng``, for procedural parity.
 * **Deterministic, repartition-invariant RNG.** The reference uses
-  ``thread_rng()`` (main.rs:67,71) — nondeterministic run to run. We seed
-  per *row* as ``sha256(seed, policy_id)`` so results are identical under
-  any partitioning or task retry — never ``seed(partition_id)``.
+  ``thread_rng()`` (main.rs:67,71) — nondeterministic run to run. Each
+  policy's stream is Philox (a counter-based generator) keyed by
+  ``sha256(seed, policy_id)`` and started at counter 0, so it depends
+  only on ``(seed, id)``: results are identical under any partitioning,
+  batch size, row order or task retry — never ``seed(partition_id)``.
+  Each Arrow batch builds one Philox and re-keys it for every row
+  (``_rekeyed_philox``); building a generator per row instead cost most
+  of a row's time.
 * **Arrow-vectorized kernel.** ``mapInPandas`` over columnar batches
-  instead of a per-row struct loop; numpy draws all trials of one policy
-  at once. Column pruning to (id, term) happens before the kernel so the
-  scan reads 2 of 9 columns (the reference reads all 9, main.rs:51).
+  instead of a per-row struct loop; the claim probabilities of a batch are
+  computed in one numpy call. Column pruning to (id, term) happens before
+  the kernel so the scan reads 2 of 9 columns (the reference reads all 9,
+  main.rs:51).
 * **Partial+final aggregation is Spark's own.** The worker-mean /
   Lambda-sum split (SURVEY §2.5 A3) is exactly
   ``HashAggregate(partial) → Exchange → HashAggregate(final)``.
 
 At 100 TB: the kernel is a narrow map — no shuffle until the final
 single-row aggregate, whose exchange moves one double per task. Scales
-linearly with input splits; skew-free (cost is ~uniform per row).
+linearly with input splits; skew-free (cost is ~uniform per row and
+independent of ``n_trials``).
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -62,6 +80,30 @@ def row_seed(seed: int, policy_id: str) -> int:
     return int.from_bytes(digest[:8], "little")
 
 
+def _rekeyed_philox() -> tuple[np.random.Generator, Callable[[int], None]]:
+    """One Philox generator and a ``rekey(key)`` that restarts it as
+    ``Generator(Philox(key=key))`` would start: the key set, counter 0,
+    output buffer and cached uint32 cleared — so no state leaks from one
+    row into the next. Setting the state is several times cheaper than
+    constructing a generator per row (SeedSequence + bit generator)."""
+    bitgen = np.random.Philox(0)
+    key = np.zeros(2, dtype=np.uint64)
+    fresh = {
+        "bit_generator": "Philox",
+        "state": {"counter": np.zeros(4, dtype=np.uint64), "key": key},
+        "buffer": np.zeros(4, dtype=np.uint64),
+        "buffer_pos": 4,
+        "has_uint32": 0,
+        "uinteger": 0,
+    }
+
+    def rekey(k: int) -> None:
+        key[0] = k
+        bitgen.state = fresh  # copied into the C state, arrays untouched
+
+    return np.random.Generator(bitgen), rekey
+
+
 def simulate_reserves(
     policies: DataFrame,
     n_trials: int = NUM_SIMULATIONS,
@@ -79,13 +121,21 @@ def simulate_reserves(
     (sum over policies is taken by the caller, so partial aggregation
     stays map-side).
 
-    By default the per-trial claim total is drawn via the exact
-    distributional identity  Σ_{j=1..n} N(μ,σ²) ≡ N(n·μ, n·σ²):
-    one Normal draw per policy replaces the ~E[n]·n_trials individual
-    claim draws (≈100× fewer RNG calls at the default parameters) with
-    an output that is *identical in distribution* to the reference's
-    claim-by-claim loop (main.rs:70-73). ``exact_claims=True`` keeps the
-    claim-by-claim draws for strict procedural parity.
+    By default a policy costs two draws, whatever ``n_trials`` is: the
+    total claim count over all trials, ``n ~ NegativeBinomial(n_trials,
+    1 - exp(-claim_interval/term))`` (the exact law of a sum of
+    ``n_trials`` floored exponentials, main.rs:67-70), then the total
+    amount ``N(n·μ, n·σ²)`` (the exact law of ``n`` i.i.d. claims,
+    main.rs:71-73). Both come from a Philox stream keyed by
+    ``row_seed(seed, id)`` and restarted at counter 0 for every row, so a
+    policy's value depends only on ``(seed, id)`` — not on which batch,
+    partition or position the row arrives in.
+
+    ``exact_claims=True`` keeps the reference's procedure for strict
+    parity: a per-row ``default_rng(row_seed(seed, id))`` draws
+    ``n_trials`` exponentials, floors and sums them, then draws every
+    claim amount. Same distribution, different stream, ~n_trials× the
+    cost.
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -93,26 +143,34 @@ def simulate_reserves(
             ids = pdf["id"].astype(str).to_numpy()
             terms = pdf["term"].to_numpy(dtype="float64")
             out = np.empty(len(ids), dtype="float64")
-            for i in range(len(ids)):
-                rng = np.random.default_rng(row_seed(seed, ids[i]))
-                # x ~ Exp(mean=term/interval)  (main.rs:67)
-                x = rng.exponential(terms[i] / claim_interval, n_trials)
-                # n = floor(x) claims per trial (main.rs:70); total across
-                # trials — sum of per-trial sums == sum of all claims.
-                n_claims = int(np.floor(x).sum())
-                if exact_claims:
+            if exact_claims:
+                for i in range(len(ids)):
+                    rng = np.random.default_rng(row_seed(seed, ids[i]))
+                    # x ~ Exp(mean=term/interval)  (main.rs:67); n = floor(x)
+                    # claims per trial (main.rs:70), summed over trials
+                    x = rng.exponential(terms[i] / claim_interval, n_trials)
+                    n_claims = int(np.floor(x).sum())
                     total = rng.normal(mean_claim, std_claim, n_claims).sum()
-                else:
+                    out[i] = total / n_trials  # mean over trials (main.rs:80)
+            else:
+                rng, rekey = _rekeyed_philox()
+                # P(claim count of one trial stops at k) = (1-q)·q^k,
+                # q = exp(-1/β): 1-q is the negative-binomial success rate
+                p_stop = -np.expm1(-claim_interval / terms)
+                for i in range(len(ids)):
+                    rekey(row_seed(seed, ids[i]))
+                    n_claims = int(rng.negative_binomial(n_trials, p_stop[i]))
                     total = rng.normal(
                         n_claims * mean_claim, math.sqrt(n_claims) * std_claim
                     ) if n_claims > 0 else 0.0
-                out[i] = total / n_trials  # mean over trials (main.rs:80)
+                    out[i] = total / n_trials  # mean over trials (main.rs:80)
             yield pd.DataFrame({"id": ids, "mean_reserve": out})
 
     from actuarial_reserve_modelling_spark.operators import spread_for_kernel
 
-    # Monte Carlo cost is ~n_trials draws per row — thousands of
-    # CPU-seconds per MB of input — so spread even tiny portfolios
+    # Kernel CPU is dense per input byte (a sha256 and a generator restart
+    # per row; ~n_trials draws per row on the claim-by-claim path), so
+    # spread even tiny portfolios
     src = spread_for_kernel(policies.select("id", "term"), bytes_per_task=4096)
     return src.mapInPandas(kernel, schema=_RESULT_SCHEMA)
 

@@ -46,6 +46,13 @@ _BASE_CONFS: dict[str, str] = {
     # raise for wide-row tables, lower only if per-task memory is tight —
     # AQE coalesces the post-shuffle side, this governs the scan side.
     "spark.sql.files.maxPartitionBytes": "134217728",
+    # Every stage's task binary and every parquet scan's Hadoop-conf
+    # broadcast is blockified into chunks of this size on the driver heap
+    # (TorrentBroadcast.blockifyObject); at the 4 MB default a few-KB
+    # broadcast still allocates a whole 4 MB chunk, so short jobs run back
+    # to back grow the driver heap with garbage. The blocks of a large
+    # broadcast just become more numerous.
+    "spark.broadcast.blockSize": "512k",
 }
 
 

@@ -22,6 +22,13 @@ from actuarial_reserve_modelling_spark.operators.similarity import (
 from .conftest import SF_SMOKE
 
 
+def _unstamped(frame):
+    """``frame`` with the params-hash dropped from its ``sig`` column's
+    metadata, like a hand-built presigned frame: only the accept sites'
+    structural probes can reject it."""
+    return frame.withColumn("sig", F.col("sig").cast(frame.schema["sig"].dataType))
+
+
 def test_ann_recall_vs_exact(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
@@ -2816,11 +2823,18 @@ def test_presigned_dedup_batch_shared_across_lookup_and_append(spark, tmp_path):
     wrong = build_dedup_index(new, bands=8, rows_per_band=8).localCheckpoint(
         eager=True
     )
-    with pytest.raises(ValueError, match="presigned sig length"):
+    with pytest.raises(ValueError, match="signed with DIFFERENT parameters"):
         add_to_dedup_index(spark, path_a, committed, presigned=wrong)
-    with pytest.raises(ValueError, match="presigned sig length"):
+    with pytest.raises(ValueError, match="signed with DIFFERENT parameters"):
         minhash_dedup_against_index_persisted(
             spark, path_a, new, threshold=0.9, presigned=wrong
+        )
+    # without the stamp, the signature-length probe still rejects it
+    with pytest.raises(ValueError, match="presigned sig length"):
+        add_to_dedup_index(spark, path_a, committed, presigned=_unstamped(wrong))
+    with pytest.raises(ValueError, match="presigned sig length"):
+        minhash_dedup_against_index_persisted(
+            spark, path_a, new, threshold=0.9, presigned=_unstamped(wrong)
         )
 
 
@@ -2925,11 +2939,18 @@ def test_presigned_vecsig_batch_shared_across_lookup_and_append(spark, tmp_path)
         .withColumn("spart", _vecsig_spart(meta["k_sig_parts"]))
         .localCheckpoint(eager=True)
     )
-    with pytest.raises(ValueError, match="signature tables"):
+    with pytest.raises(ValueError, match="signed with DIFFERENT parameters"):
         add_to_vecsig_index(spark, path_a, committed, presigned=wrong)
-    with pytest.raises(ValueError, match="signature tables"):
+    with pytest.raises(ValueError, match="signed with DIFFERENT parameters"):
         lsh_cosine_dedup_against_index_persisted(
             spark, path_a, new, threshold=0.5, presigned=wrong
+        )
+    # without the stamp, the table-count probe still rejects it
+    with pytest.raises(ValueError, match="signature tables"):
+        add_to_vecsig_index(spark, path_a, committed, presigned=_unstamped(wrong))
+    with pytest.raises(ValueError, match="signature tables"):
+        lsh_cosine_dedup_against_index_persisted(
+            spark, path_a, new, threshold=0.5, presigned=_unstamped(wrong)
         )
     with pytest.raises(ValueError, match="spart"):
         add_to_vecsig_index(
@@ -3089,9 +3110,14 @@ def test_persist_vecsig_presigned_parity(spark, tmp_path):
         )
 
     wrong = hyperplane_signatures_multi(emb, 12, 12, 42, 64)
-    with pytest.raises(ValueError, match="signature tables"):
+    with pytest.raises(ValueError, match="signed with DIFFERENT parameters"):
         persist_vecsig_index(
             admitted, str(tmp_path / "tier_bad"), presigned=wrong
+        )
+    # without the stamp, the table-count probe still rejects it
+    with pytest.raises(ValueError, match="signature tables"):
+        persist_vecsig_index(
+            admitted, str(tmp_path / "tier_bad"), presigned=_unstamped(wrong)
         )
 
 

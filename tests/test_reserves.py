@@ -4,11 +4,15 @@ reproducibility, partition invariance, and the CSV contract."""
 from __future__ import annotations
 
 import math
+from functools import reduce
 
+import numpy as np
 import pytest
+from pyspark.sql import DataFrame
 
 from actuarial_reserve_modelling_spark.catalog import read_policies_csv
 from actuarial_reserve_modelling_spark.functions.reserves import (
+    _rekeyed_philox,
     analytic_moments,
     simulate_reserves,
     total_reserves,
@@ -54,6 +58,20 @@ def test_partition_invariance(spark, policies_dir):
     b = total_reserves(df.repartition(10), n_trials=200).collect()[0][0]
     assert a == b
 
+    # one row per Arrow batch: per policy, bit-identical values — no
+    # generator state leaks from one row into the next
+    def per_policy():
+        return {r["id"]: r["mean_reserve"] for r in simulate_reserves(df, n_trials=200).collect()}
+
+    base = per_policy()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        assert per_policy() == base
+    finally:
+        spark.conf.set(conf, default)
+
 
 def test_per_policy_schema_and_determinism(spark, policies_dir):
     path, _ = policies_dir
@@ -64,6 +82,43 @@ def test_per_policy_schema_and_determinism(spark, policies_dir):
     rows2 = {r["id"]: r["mean_reserve"] for r in simulate_reserves(df, n_trials=100).collect()}
     assert rows == rows2
     assert len(rows) == 200
+
+
+def test_rekeyed_philox_restarts_like_a_fresh_generator():
+    """Re-keying must leave no state behind: after draws that fill the
+    output buffer and cache a uint32, the next key's stream equals that of
+    a newly built ``Generator(Philox(key=k))``."""
+    rng, rekey = _rekeyed_philox()
+
+    def draws(g):
+        return (
+            g.integers(0, 1 << 31, dtype=np.int32),  # caches a uint32
+            g.random(),
+            g.negative_binomial(1_000, 0.4),
+            g.normal(0.0, 1.0),
+        )
+
+    for k in (7, 2**64 - 1, 7, 0):
+        rekey(k)
+        assert draws(rng) == draws(np.random.Generator(np.random.Philox(key=k)))
+
+
+@pytest.mark.parametrize("years", [1, 5, 30])
+def test_per_policy_mean_matches_closed_form(spark, years):
+    """Per policy, E[mean_reserve] = μ·E[n] (``analytic_moments`` of one
+    term), checked on the mean over many (seed, id) streams within 5σ of
+    its standard error."""
+    term = 365.0 * years
+    n_trials, n_ids, seeds = 100, 250, range(8)
+    pf = spark.createDataFrame(
+        [(f"T{years}-{j}", term) for j in range(n_ids)], "id string, term double"
+    )
+    runs = [simulate_reserves(pf, n_trials=n_trials, seed=s) for s in seeds]
+    values = [r["mean_reserve"] for r in reduce(DataFrame.unionAll, runs).collect()]
+    assert len(values) == n_ids * len(seeds)
+    mean, var = analytic_moments([term])
+    se = math.sqrt(var / n_trials / len(values))
+    assert abs(float(np.mean(values)) - mean) < 5 * se, (np.mean(values), mean, se)
 
 
 def test_csv_failfast_on_malformed(spark, tmp_path):
