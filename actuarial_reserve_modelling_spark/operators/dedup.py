@@ -1371,28 +1371,10 @@ def add_to_dedup_index(
     meta = read_dedup_index_meta(spark, path)
     if presigned is not None:
         from actuarial_reserve_modelling_spark.operators.sigparams import (
-            check_presigned_params,
-            minhash_fingerprint,
+            accept_presigned,
         )
 
-        want = meta["bands"] * meta["rows_per_band"]
-        # params-hash first (driver-side, zero jobs): catches a frame
-        # with the SAME signature shape but a different seed, which the
-        # length probe below cannot see (r14 verdict hardening item)
-        check_presigned_params(
-            presigned,
-            "sig",
-            minhash_fingerprint(want, meta["seed"]),
-            "add_to_dedup_index",
-        )
-        probe = presigned.select(F.size("sig").alias("_n")).limit(1).collect()
-        if probe and int(probe[0]["_n"]) != want:
-            raise ValueError(
-                f"add_to_dedup_index: presigned sig length {probe[0]['_n']} "
-                f"!= persisted bands*rows_per_band = {want} — the frame was "
-                "signed with different parameters than this tier; refusing "
-                "to append mismatched signatures"
-            )
+        accept_presigned(presigned, "minhash", meta, "add_to_dedup_index")
         signed = presigned.join(
             new_docs.select("doc_id"), "doc_id", "leftsemi"
         )
@@ -1838,27 +1820,12 @@ def minhash_dedup_against_index_persisted(
     meta = read_dedup_index_meta(spark, path)
     if presigned is not None:
         from actuarial_reserve_modelling_spark.operators.sigparams import (
-            check_presigned_params,
-            minhash_fingerprint,
+            accept_presigned,
         )
 
-        check_presigned_params(
-            presigned,
-            "sig",
-            minhash_fingerprint(
-                meta["bands"] * meta["rows_per_band"], meta["seed"]
-            ),
-            "minhash_dedup_against_index_persisted",
+        accept_presigned(
+            presigned, "minhash", meta, "minhash_dedup_against_index_persisted"
         )
-        probe = presigned.select(F.size("sig").alias("_n")).limit(1).collect()
-        want = meta["bands"] * meta["rows_per_band"]
-        if probe and int(probe[0]["_n"]) != want:
-            raise ValueError(
-                f"minhash_dedup_against_index_persisted: presigned sig "
-                f"length {probe[0]['_n']} != persisted bands*rows_per_band "
-                f"= {want} — the frame was signed with different parameters "
-                "than this tier; refusing to compare mismatched signatures"
-            )
     if meta["k_band_parts"] is None:
         return minhash_dedup_against_index(
             new_docs,

@@ -15,7 +15,8 @@ apply between signing and accept), and every accept site compares it
 against the hash of the tier's persisted parameters.  The check is
 driver-side schema inspection — zero Spark jobs.  Frames without the
 stamp (hand-built, or produced before this round) fall back to the
-structural probes, which remain in place.
+structural probes, which remain in place.  ``accept_presigned`` runs
+both, in that order, for every accept site.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ import hashlib
 import json
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 #: StructField-metadata key carrying the params fingerprint
 SIG_PARAMS_KEY = "arm_sig_params"
@@ -78,4 +80,66 @@ def check_presigned_params(
             f"than this tier (params-hash {got!r} != expected {expected_fp!r}) "
             "— e.g. a different seed with the same signature shape; refusing "
             "to accept mismatched signatures"
+        )
+
+
+# what each accept site refuses to do with a mismatched frame — the
+# tail of its structural-probe error (the persisted lookup's has none)
+_REFUSES = {
+    "add_to_dedup_index": "append",
+    "minhash_dedup_against_index_persisted": "compare",
+    "persist_vecsig_index": "persist",
+    "add_to_vecsig_index": "append",
+}
+
+
+def accept_presigned(frame: DataFrame, kind: str, meta: dict, caller: str) -> None:
+    """The one accept gate for a ``presigned=`` frame: the params-hash
+    check first (zero jobs; catches a different seed with the same
+    shape), then the structural probe, which is all an unstamped frame
+    gets. ``kind`` is ``"minhash"`` (``meta`` = the dedup tier's
+    bands / rows_per_band / seed; one-row ``sig`` length probe) or
+    ``"hyperplane"`` (``meta`` = num_planes / num_tables / seed / dim;
+    one-pass table-count probe). A hyperplane ``meta`` read from a
+    persisted tier carries ``k_sig_parts``: the frame is then checked
+    against that tier's layout and must carry its ``spart`` column;
+    without it, ``meta`` is the parameter set a persist asserts."""
+    verb = _REFUSES.get(caller)
+    tail = f"; refusing to {verb} mismatched signatures" if verb else ""
+    if kind == "minhash":
+        want = meta["bands"] * meta["rows_per_band"]
+        check_presigned_params(
+            frame, "sig", minhash_fingerprint(want, meta["seed"]), caller
+        )
+        probe = frame.select(F.size("sig").alias("_n")).limit(1).collect()
+        if probe and int(probe[0]["_n"]) != want:
+            raise ValueError(
+                f"{caller}: presigned sig length {probe[0]['_n']} != persisted "
+                f"bands*rows_per_band = {want} — the frame was signed with "
+                f"different parameters than this tier{tail}"
+            )
+        return
+    check_presigned_params(
+        frame,
+        "sig",
+        hyperplane_fingerprint(
+            meta["num_planes"], meta["num_tables"], meta["seed"], meta["dim"]
+        ),
+        caller,
+    )
+    persisted = "k_sig_parts" in meta
+    if persisted and "spart" not in frame.columns:
+        raise ValueError(
+            f"{caller}: presigned frame lacks the 'spart' partition column "
+            "— pass the hyperplane_signatures_multi output with spart "
+            "attached (see incremental_semantic_ingest)"
+        )
+    probe = frame.agg(F.countDistinct("table").alias("_t")).collect()
+    got_t = int(probe[0]["_t"] or 0) if probe else 0
+    if got_t not in (0, meta["num_tables"]):
+        raise ValueError(
+            f"{caller}: presigned frame carries {got_t} signature tables != "
+            f"{'persisted' if persisted else 'asserted'} num_tables = "
+            f"{meta['num_tables']} — the frame was signed with different "
+            f"parameters{' than this tier' if persisted else ''}{tail}"
         )

@@ -2381,7 +2381,8 @@ def add_to_ann_index(
 
     ``preassigned`` (r15): a rank-ordered level-1 probe frame over a
     SUPERSET of the batch's ids (``ann_ivf_hier_topk_persisted(...,
-    return_probes=True)`` — the ingest gate's query probes). Its
+    return_probes=True)`` — the ingest gate's query probes); a batch id
+    it does not cover raises a ValueError naming the id. Its
     ``_rank == 0`` rows are the lexicographic (distance, index) minimum
     per vector, i.e. EXACTLY the hard assignment a fresh ``ivf_assign``
     would compute, so the appended rows are identical while the batch's
@@ -2414,23 +2415,40 @@ def add_to_ann_index(
                 "column — pass the with_rank=True ivf_assign output "
                 "(ann_ivf_hier_topk_persisted(..., return_probes=True))"
             )
-        hard = (
-            preassigned.filter(F.col("_rank") == 0)
-            .select(id_col, F.col("cluster").cast("int").alias("super"))
-            .join(new_embeddings.select(id_col), id_col, "leftsemi")
+        hard = preassigned.filter(F.col("_rank") == 0).select(
+            id_col, F.col("cluster").cast("int").alias("super")
         )
+        # left join: a batch id the probe frame does not cover keeps a
+        # null super, which the distinct-supers collect below reports
+        newrows = new_embeddings.select(id_col, vec_col).join(hard, id_col, "left")
     else:
         hard = ivf_assign(
             new_embeddings, super_cent, id_col=id_col, vec_col=vec_col
         ).select(id_col, F.col("cluster").cast("int").alias("super"))
-    newrows = new_embeddings.select(id_col, vec_col).join(hard, id_col)
+        newrows = new_embeddings.select(id_col, vec_col).join(hard, id_col)
+    if check_existing or preassigned is not None:
+        # the distinct supers the batch routes to (≤ k1 ints): they bound
+        # the idempotency read below, and a null among them is a batch id
+        # the preassigned probes missed — fail loudly, never drop the row
+        batch_supers = [
+            r["super"] for r in newrows.select("super").distinct().collect()
+        ]
+        if None in batch_supers:
+            missing = sorted(
+                int(r[id_col])
+                for r in newrows.filter(F.col("super").isNull())
+                .select(id_col)
+                .limit(20)
+                .collect()
+            )
+            raise ValueError(
+                f"add_to_ann_index: preassigned probe frame does not cover "
+                f"batch ids {missing} (at most 20 shown) — pass probes over a "
+                "superset of the batch's ids, or omit preassigned to re-route"
+            )
     if check_existing:
         # idempotent retry: drop batch ids already indexed, reading only
-        # the batch's own hard-super partition directories (bounded by
-        # the distinct supers the batch routes to, ≤ k1 ints)
-        batch_supers = [
-            int(r["super"]) for r in newrows.select("super").distinct().collect()
-        ]
+        # the batch's own hard-super partition directories
         existing = (
             spark.read.parquet(path + "/members")
             .filter(F.col("super").isin(batch_supers))
@@ -4695,25 +4713,15 @@ def persist_vecsig_index(
             k_sig_parts = max(8, min(32768, n_rows // 1000))
     if presigned is not None:
         from actuarial_reserve_modelling_spark.operators.sigparams import (
-            check_presigned_params,
-            hyperplane_fingerprint,
+            accept_presigned,
         )
 
-        check_presigned_params(
+        accept_presigned(
             presigned,
-            "sig",
-            hyperplane_fingerprint(num_planes, num_tables, seed, dim),
+            "hyperplane",
+            dict(num_planes=num_planes, num_tables=num_tables, seed=seed, dim=dim),
             "persist_vecsig_index",
         )
-        probe = presigned.agg(F.countDistinct("table").alias("_t")).collect()
-        got_t = int(probe[0]["_t"] or 0) if probe else 0
-        if got_t not in (0, num_tables):
-            raise ValueError(
-                f"persist_vecsig_index: presigned frame carries {got_t} "
-                f"signature tables != asserted num_tables = {num_tables} — "
-                "the frame was signed with different parameters; refusing "
-                "to persist mismatched signatures"
-            )
         sigs = (
             presigned.select("vec_id", "table", "sig")
             .join(vecs.select("vec_id"), "vec_id", "leftsemi")
@@ -4788,34 +4796,10 @@ def add_to_vecsig_index(
     batch = new_vecs.select("vec_id", "embedding").localCheckpoint(eager=False)
     if presigned is not None:
         from actuarial_reserve_modelling_spark.operators.sigparams import (
-            check_presigned_params,
-            hyperplane_fingerprint,
+            accept_presigned,
         )
 
-        check_presigned_params(
-            presigned,
-            "sig",
-            hyperplane_fingerprint(
-                meta["num_planes"], meta["num_tables"], meta["seed"], meta["dim"]
-            ),
-            "add_to_vecsig_index",
-        )
-        if "spart" not in presigned.columns:
-            raise ValueError(
-                "add_to_vecsig_index: presigned frame lacks the 'spart' "
-                "partition column — pass the hyperplane_signatures_multi "
-                "output with spart attached (see incremental_semantic_ingest)"
-            )
-        probe = presigned.agg(F.countDistinct("table").alias("_t")).collect()
-        got_t = int(probe[0]["_t"] or 0) if probe else 0
-        if got_t not in (0, meta["num_tables"]):
-            raise ValueError(
-                f"add_to_vecsig_index: presigned frame carries {got_t} "
-                f"signature tables != persisted num_tables = "
-                f"{meta['num_tables']} — the frame was signed with "
-                "different parameters than this tier; refusing to append "
-                "mismatched signatures"
-            )
+        accept_presigned(presigned, "hyperplane", meta, "add_to_vecsig_index")
         sigs = presigned.select("vec_id", "table", "sig", "spart").join(
             batch.select("vec_id"), "vec_id", "leftsemi"
         )
@@ -5047,34 +5031,12 @@ def lsh_cosine_dedup_against_index_persisted(
     meta = read_vecsig_index_meta(spark, path)
     if presigned is not None:
         from actuarial_reserve_modelling_spark.operators.sigparams import (
-            check_presigned_params,
-            hyperplane_fingerprint,
+            accept_presigned,
         )
 
-        check_presigned_params(
-            presigned,
-            "sig",
-            hyperplane_fingerprint(
-                meta["num_planes"], meta["num_tables"], meta["seed"], meta["dim"]
-            ),
-            "lsh_cosine_dedup_against_index_persisted",
+        accept_presigned(
+            presigned, "hyperplane", meta, "lsh_cosine_dedup_against_index_persisted"
         )
-        if "spart" not in presigned.columns:
-            raise ValueError(
-                "lsh_cosine_dedup_against_index_persisted: presigned frame "
-                "lacks the 'spart' partition column — pass the "
-                "hyperplane_signatures_multi output with spart attached "
-                "(see incremental_semantic_ingest)"
-            )
-        probe = presigned.agg(F.countDistinct("table").alias("_t")).collect()
-        got_t = int(probe[0]["_t"] or 0) if probe else 0
-        if got_t not in (0, meta["num_tables"]):
-            raise ValueError(
-                f"lsh_cosine_dedup_against_index_persisted: presigned frame "
-                f"carries {got_t} signature tables != persisted num_tables "
-                f"= {meta['num_tables']} — the frame was signed with "
-                "different parameters than this tier"
-            )
     batch = new_vecs.select("vec_id", "embedding").localCheckpoint(eager=False)
     if route == "auto":
         # decide BEFORE signing: the decision needs only |batch| (a

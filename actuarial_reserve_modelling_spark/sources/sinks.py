@@ -340,9 +340,11 @@ def vacuum_index(
     indistinguishable from a dead job's and would be reclaimed
     mid-commit, so a live writer anywhere under the root blocks the
     vacuum (and vice versa: the held root blocks new tier maintenance
-    until the vacuum finishes). The gates' ``auto_vacuum`` hook runs
-    inside the single-writer ``foreachBatch`` step whose adds hold the
-    tier lease reentrantly, so it composes without self-conflict.
+    until the vacuum finishes). The ingest gates' ``auto_vacuum`` hook
+    (``streaming.pipeline._IngestGate``'s compaction policy) runs inside
+    the leased single-writer ``foreachBatch`` step after that epoch's
+    compactions and before its adds, and takes the held work-dir lease
+    reentrantly, so it composes without self-conflict.
     ``dry_run=True`` stays lock-free (pure listing).
 
     ``dry_run=True`` (default) only LISTS the reclaimable paths;

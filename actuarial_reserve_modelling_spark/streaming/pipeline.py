@@ -15,9 +15,13 @@ the batch/SQL answer over the same files).
 
 from __future__ import annotations
 
+import atexit
+import os
 import shutil
 import tempfile
+import time
 import uuid
+from functools import partial
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,8 +50,6 @@ def _committed_parquet(path: str) -> bool:
     instead of re-healing. Hidden/_-prefixed entries (``_temporary``,
     ``_SUCCESS``, ``.crc``) are skipped exactly as Spark's own file
     listing does."""
-    import os
-
     if not os.path.isdir(path):
         return False
     for root, dirs, files in os.walk(path):
@@ -77,22 +79,20 @@ def _run_overlapped(
     note so a dual-failure batch does not hide a root cause — and the
     caller's retry semantics are unchanged.
     Per-action walls are appended to ``marks`` when timing is on."""
-    import time as _time
-
     from pyspark import InheritableThread
 
     errs: dict[str, BaseException] = {}
 
     def _wrap(label: str, fn: Callable[[], None]) -> Callable[[], None]:
         def run() -> None:
-            t0 = _time.time()
+            t0 = time.time()
             try:
                 fn()
             except BaseException as e:  # noqa: BLE001 — re-raised below
                 errs[label] = e
             finally:
                 if marks is not None:
-                    marks.append((label, round(_time.time() - t0, 2)))
+                    marks.append((label, round(time.time() - t0, 2)))
 
         return run
 
@@ -126,8 +126,6 @@ def events_stream_source(
     key = (sf_dir, n_files)
     src_dir = _STAGED_SOURCES.get(key)
     if src_dir is None:
-        import atexit
-
         src_dir = tempfile.mkdtemp(prefix="arm_stream_src_")
         atexit.register(shutil.rmtree, src_dir, ignore_errors=True)
         batch.repartition(n_files).write.mode("overwrite").parquet(src_dir)
@@ -152,12 +150,10 @@ def staged_ordered_source(
     watermark semantics (T5/T6) batch-replayable and oracle-checkable.
     """
     import glob
-    import os
+
     safe = "".join(c if c.isalnum() else "_" for c in cache_key)
     src_dir = _STAGED_SOURCES.get((cache_key, len(frames)))
     if src_dir is None:
-        import atexit
-
         src_dir = tempfile.mkdtemp(prefix=f"arm_stream_{safe}_")
         atexit.register(shutil.rmtree, src_dir, ignore_errors=True)
         base = 1_600_000_000  # any fixed epoch; only relative order matters
@@ -194,32 +190,40 @@ def run_to_table(
     few partitions; a production deployment sizes this to key cardinality
     and leaves it — it's frozen into the checkpoint."""
     spark = stream_df.sparkSession
-    import atexit
-
     name = f"arm_mem_{uuid.uuid4().hex[:12]}"
     ckpt = tempfile.mkdtemp(prefix="arm_stream_ckpt_")
     atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
+    _drain(
+        spark,
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode),
+        ckpt,
+        state_partitions,
+    )
+    return spark.table(name)
+
+
+def _drain(spark: SparkSession, writer, ckpt: str, state_partitions: int) -> None:
+    """Start ``writer`` as an AvailableNow query checkpointed at ``ckpt``
+    and wait until it has drained the source. ``state_partitions`` pins
+    the query's shuffle/state-partition count. StreamExecution clones
+    the session (and its SQLConf) when the query STARTS, so the
+    session-global override only spans the ``.start()`` call; concurrent
+    batch work during the drain sees the restored value. (A query
+    started from another thread during that sliver would still catch
+    the override; drains are single-threaded here.)"""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # StreamExecution clones the session (and its SQLConf) when the query
-    # STARTS, so the session-global override only needs to span the
-    # .start() call, not the whole drain — concurrent batch work during
-    # the drain sees the restored value. (A concurrent query started in
-    # another thread during the .start() sliver would still catch the
-    # override; drains are single-threaded here.)
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
         q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
+            writer.option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.awaitTermination()
-    return spark.table(name)
 
 
 def tumbling_counts(events: DataFrame, width: str = "10 minutes") -> DataFrame:
@@ -359,6 +363,280 @@ def stream_dedup(events: DataFrame, late: str = "10 minutes") -> DataFrame:
     arriving within the watermark horizon are suppressed; state for
     older keys is garbage-collected."""
     return events.withWatermark("ts", late).dropDuplicatesWithinWatermark(["event_id"])
+# One persisted tier the compaction policy folds: (label, present,
+# compact). ``present()`` is probed at epoch start; ``compact(cap)`` runs
+# the tier's threshold compaction at ``cap`` files per partition (the
+# tiers' compact functions take it as their third positional argument).
+# The label names the action's wall when two tiers compact overlapped.
+_Tier = tuple[str, Callable[[], bool], Callable[[int], object]]
+
+
+class _IngestGate:
+    """The step loop the four ``foreachBatch`` ingest gates (t10-t13)
+    share. A gate builds its persisted tiers under ``work`` and hands
+    ``run`` a ``check(batch_df, bid) -> (admitted, append)`` callable
+    holding only its tier phases; ``append`` is None when the check
+    already wrote the tier (a bootstrap). The shared contract:
+
+    * **Work dir.** ``work_dir`` (created if missing, reused if present)
+      or a temp dir removed at exit. Its persisted tiers are the state
+      of record: a later call on the same ``work_dir`` checks its
+      batches against everything admitted before. The stream checkpoint
+      ``ckpt/`` binds one call's staged source, so a call with new
+      batches needs it removed; its epochs then restart at ``e0``.
+    * **Lease.** Each micro-batch holds the work-dir writer lease over
+      its WHOLE check -> sink -> append step, so a second gate process
+      on the same tiers refuses loudly instead of checking against an
+      index another writer is mid-appending to (the per-op leases
+      inside acquire reentrantly under it). ``locked`` runs any other
+      tier mutation (t10's seed bootstrap) under the same lease.
+    * **Epoch-keyed overwrite sink.** Epoch ``bid`` clears and then
+      overwrites ``<sink>/e{bid}``, so a retried epoch replaces its own
+      output. ``append`` gets the committed rows re-read from the sink
+      (a cheap columnar read), so tier appends derive from what was
+      committed and the check plan runs once.
+    * **Idempotent appends, same-id replay convergence.** Every tier
+      append anti-joins the committed rows against the ids already
+      indexed (a read pruned to the batch's own partitions), so a
+      re-append is a no-op. Every cross-batch check ignores matches
+      under the row's OWN id, so an epoch replayed after its append
+      landed recomputes the same admitted set instead of rejecting
+      itself. Ids must therefore be unique across the stream (and
+      disjoint from any seed corpus).
+    * **Compaction policy.** With ``auto_compact`` set, every epoch
+      after the first runs the threshold compaction (``auto_compact``
+      files per partition; only hotter partitions are rewritten, so it
+      is one metadata aggregate when nothing is hot) of each PRESENT
+      tier, overlapped when there are two, then ``vacuum_index`` on
+      the work dir when ``auto_vacuum`` is set. Compaction preserves
+      contents exactly, so the admitted set does not depend on it.
+
+    ``ARM_GATE_TIMING=1`` prints one ``ARM_GATE_TIMING <gate> batch=N
+    label=seconds ...`` line per epoch: ``compact``, the gate's own
+    phase marks, ``sink`` and ``appends``, plus the wall of each
+    overlapped action."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        work_dir: str | None,
+        prefix: str,
+        sink: str = "admitted",
+    ) -> None:
+        if work_dir is None:
+            work_dir = tempfile.mkdtemp(prefix=prefix)
+            atexit.register(shutil.rmtree, work_dir, ignore_errors=True)
+        self.spark = spark
+        self.work = work_dir
+        self.sink = os.path.join(work_dir, sink)
+        os.makedirs(self.sink, exist_ok=True)
+        timing = os.environ.get("ARM_GATE_TIMING") == "1"
+        self._marks: list[tuple[str, float]] | None = [] if timing else None
+        self._t0 = time.time()
+
+    def path(self, name: str) -> str:
+        return os.path.join(self.work, name)
+
+    def locked(self, fn: Callable, *args):
+        from actuarial_reserve_modelling_spark.sources.lease import writer_lease
+
+        with writer_lease(self.work):
+            return fn(*args)
+
+    def mark(self, label: str) -> None:
+        """Close the current timing phase under ``label``."""
+        if self._marks is not None:
+            self._marks.append((label, round(time.time() - self._t0, 2)))
+        self._t0 = time.time()
+
+    def overlap(self, labeled_fns: list[tuple[str, Callable[[], None]]]) -> None:
+        _run_overlapped(labeled_fns, self._marks)
+
+    def run(
+        self,
+        name: str,
+        batches: list[DataFrame],
+        cols: tuple[str, ...],
+        cache_key: str,
+        state_partitions: int,
+        check: Callable[[DataFrame, int], tuple[DataFrame, Callable | None]],
+        sink_cols: tuple[str, ...],
+        out_cols: tuple[str, ...],
+        tiers: list[_Tier],
+        auto_compact: int | None,
+        auto_vacuum: bool = False,
+    ) -> DataFrame:
+        spark = self.spark
+
+        def step(batch_df: DataFrame, bid: int) -> None:
+            if self._marks is not None:
+                self._marks.clear()
+            self._t0 = time.time()
+            out_epoch = os.path.join(self.sink, f"e{bid}")
+            shutil.rmtree(out_epoch, ignore_errors=True)
+            if auto_compact and bid > 0:
+                due = [
+                    (label, partial(compact, auto_compact))
+                    for label, present, compact in tiers
+                    if present()
+                ]
+                # tiers live in different directories, each under its
+                # own lease, so their compactions are independent and a
+                # hot epoch's rewrites share the cluster instead of
+                # queueing; vacuum waits for all of them (it reads every
+                # tier's live-file set)
+                if len(due) > 1:
+                    self.overlap(due)
+                elif due:
+                    due[0][1]()
+                if auto_vacuum:
+                    vacuum_index(spark, self.work, dry_run=False)
+            self.mark("compact")
+            admitted, append = check(batch_df, bid)
+            admitted.select(*sink_cols).withColumn(
+                "batch", F.lit(bid).cast("int")
+            ).write.mode("overwrite").parquet(out_epoch)
+            committed = (
+                None
+                if append is None
+                else spark.read.parquet(out_epoch).select(*sink_cols)
+            )
+            self.mark("sink")
+            if append is not None:
+                append(committed)
+            self.mark("appends")
+            if self._marks is not None:
+                print(f"ARM_GATE_TIMING {name} batch={bid} " + " ".join(
+                    f"{k}={v}" for k, v in self._marks), flush=True)
+
+        stream = staged_ordered_source(
+            spark, [b.select(*cols) for b in batches], cache_key
+        )
+        _drain(
+            spark,
+            stream.writeStream.foreachBatch(
+                lambda batch_df, bid: self.locked(step, batch_df, bid)
+            ),
+            self.path("ckpt"),
+            state_partitions,
+        )
+        return (
+            spark.read.option("recursiveFileLookup", "true")
+            .parquet(self.sink)
+            .select(*out_cols)
+        )
+
+
+class _FingerprintTier:
+    """The persisted exact-fingerprint tier of the t10 and t11 gates:
+    ``(doc_id, fingerprint)`` rows hive-partitioned by ``fpart =
+    pmod(xxhash64(fingerprint), fp_parts)``. A batch reads only its own
+    fingerprint-hash partitions, so per-batch index bytes scale with the
+    batch's bucket footprint, never the corpus; at 100 TB the tier is
+    ~24 bytes per kept doc and the check shuffles digests, never
+    documents."""
+
+    def __init__(self, spark: SparkSession, path: str, fp_parts: int) -> None:
+        self.spark = spark
+        self.path = path
+        self.fpart = F.pmod(F.xxhash64(F.col("fingerprint")), F.lit(fp_parts)).cast(
+            "int"
+        )
+
+    def present(self) -> bool:
+        return _committed_parquet(self.path)
+
+    def compact(self, cap: int) -> None:
+        from actuarial_reserve_modelling_spark.operators.similarity import (
+            compact_partitioned_index,
+        )
+
+        compact_partitioned_index(
+            self.spark, self.path, "fpart", max_files_per_partition=cap
+        )
+
+    def fingerprints(self, docs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
+        from actuarial_reserve_modelling_spark.operators.textstats import (
+            content_fingerprints,
+        )
+
+        return content_fingerprints(docs, keep=list(keep)).withColumn(
+            "fpart", self.fpart
+        )
+
+    def first_wins(
+        self, docs: DataFrame, keep: tuple[str, ...] = ()
+    ) -> tuple[DataFrame, list[int]]:
+        """Within-batch first-wins (lowest doc_id per fingerprint) as an
+        eagerly checkpointed ``(doc_id, *keep, fingerprint, fpart)``
+        frame, and the batch's fpart list from ONE collect: the admitted
+        set is a subset of it, so the list also bounds the append-side
+        pruned read. ``keep`` rides the fingerprint projection, so the
+        survivors carry their payload without a re-attaching join."""
+        from pyspark.sql import Window
+
+        w = Window.partitionBy("fingerprint").orderBy("doc_id")
+        first = (
+            self.fingerprints(docs, keep)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select("doc_id", *keep, "fingerprint", "fpart")
+            .localCheckpoint(eager=True)
+        )
+        fparts = [int(r["fpart"]) for r in first.select("fpart").distinct().collect()]
+        return first, fparts
+
+    def _indexed(self, fparts: list[int]) -> DataFrame:
+        return self.spark.read.parquet(self.path).filter(F.col("fpart").isin(fparts))
+
+    def survivors(self, first: DataFrame, fparts: list[int]) -> DataFrame:
+        """``first`` minus the rows whose fingerprint is indexed under a
+        DIFFERENT doc_id (same-id matches are replays, not duplicates)."""
+        if not self.present():
+            return first
+        seen = self._indexed(fparts).select(
+            "fingerprint", F.col("doc_id").alias("_idx_id")
+        )
+        hit = (
+            first.join(seen, "fingerprint")
+            .filter(F.col("doc_id") != F.col("_idx_id"))
+            .select("doc_id")
+            .distinct()
+        )
+        return first.join(hit, "doc_id", "left_anti")
+
+    def append(self, rows: DataFrame, fparts: list[int]) -> None:
+        """Append the ``(doc_id, fingerprint, fpart)`` rows whose doc_id
+        is not indexed yet; the anti-join reads only ``fparts``, which
+        must cover the rows' partitions."""
+        if self.present():
+            existing = self._indexed(fparts).select(
+                F.col("doc_id").cast("long").alias("doc_id")
+            )
+            rows = rows.join(existing, "doc_id", "left_anti")
+        rows.select("doc_id", "fingerprint", "fpart").repartition(
+            F.col("fpart")
+        ).write.mode("append").partitionBy("fpart").parquet(self.path)
+
+
+def _cluster_reps(frame: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """``frame`` minus every non-representative of the connected
+    components of the ``(d1, d2)`` ``pairs`` (``dedup_clusters``: each
+    cluster keeps its minimum id) — the within-batch tier of the t11 and
+    t12 gates. ``pairs`` is checkpointed eagerly: the emptiness probe and
+    the CC rounds would otherwise each re-run the whole LSH pair
+    pipeline."""
+    from actuarial_reserve_modelling_spark.operators.dedup import dedup_clusters
+
+    pairs = pairs.localCheckpoint(eager=True)
+    if pairs.limit(1).count() == 0:
+        return frame
+    non_reps = (
+        dedup_clusters(pairs)
+        .filter(F.col("doc_id") != F.col("rep_id"))
+        .select(F.col("doc_id").alias(id_col))
+    )
+    return frame.join(non_reps, id_col, "left_anti").localCheckpoint(eager=True)
 
 
 def incremental_ingest_dedup(
@@ -367,205 +645,65 @@ def incremental_ingest_dedup(
     cache_key: str,
     seed: DataFrame | None = None,
     state_partitions: int = 8,
-    compact_every: int | None = None,
     auto_compact: int | None = 16,
     fp_parts: int = 64,
     work_dir: str | None = None,
     auto_vacuum: bool = False,
 ) -> DataFrame:
-    """Continuous-ingest exact dedup: stream document batches (one
+    """Continuous-ingest exact dedup (the streaming form of the D8
+    incremental-ingest tier, ``l18``): stream document batches (one
     micro-batch each, in order) and admit only documents whose
     normalized-content fingerprint has not been seen before — by any
     earlier batch, by the optional ``seed`` corpus, or by a
-    lower-doc_id row of the same batch (first-wins).
+    lower-doc_id row of the same batch (first-wins). Per batch: the
+    exact-fingerprint tier's first-wins window, its pruned check, and
+    an append of the survivors, so the index grows batch over batch and
+    yesterday's corpus is never re-scanned. The loop, sink, lease and
+    compaction are ``_IngestGate``'s.
 
-    This is the streaming form of the D8 incremental-ingest tier
-    (``l18``): a ``foreachBatch`` loop that checks each batch against a
-    PERSISTED fingerprint index and appends the survivors' rows back to
-    it, so the index grows batch over batch and yesterday's corpus is
-    never re-scanned. r11: the index is hive-PARTITIONED BY
-    ``fpart = pmod(xxhash64(fingerprint), fp_parts)`` and each batch
-    reads ONLY its own fingerprint-hash partitions — the digest-prefix
-    bucketing the pre-r11 docstring promised "at production scale" is
-    now the implementation, so per-batch index bytes scale with the
-    batch's bucket footprint, never the corpus. Index rows carry
-    (fingerprint, doc_id) and SAME-id matches don't reject, so a
-    replayed epoch whose rows already landed converges instead of
-    rejecting itself (``seed`` doc_ids must therefore be disjoint from
-    the stream's — the caller contract). At 100 TB the index is
-    fingerprints only (~24 bytes/doc) and the pruned check shuffles
-    digests, never documents.
-
-    ``auto_compact`` / ``compact_every``: fold append-accumulated small
-    files via ``compact_partitioned_index`` — the threshold form every
-    epoch (only partitions whose file count exceeds the threshold are
-    rewritten; metadata-only when nothing is hot) and the cadence form
-    every Nth epoch. Compaction preserves contents exactly and the add
-    path's pruned anti-join makes re-appends no-ops, so neither changes
-    the admitted set.
+    ``seed`` doc_ids must be disjoint from the stream's. The seed is
+    appended (under the work-dir lease) through the same pruned doc_id
+    anti-join the epoch appends use, never overwritten: an overwrite
+    under a reused ``work_dir`` would wipe every earlier batch's
+    fingerprints and re-admit their duplicates, while the append makes
+    a re-run with the same seed a no-op and indexes exactly the new
+    docs of a grown seed.
 
     Returns the accepted rows ``(doc_id, fingerprint, batch)``.
     """
-    import atexit
-    import os
-    import shutil
-    import tempfile
+    gate = _IngestGate(spark, work_dir, "arm_ingest_", sink="accepted")
+    fpt = _FingerprintTier(spark, gate.path("index"), fp_parts)
 
-    from pyspark.sql import Window
-
-    from actuarial_reserve_modelling_spark.operators.similarity import (
-        compact_partitioned_index,
-    )
-    from actuarial_reserve_modelling_spark.operators.textstats import (
-        content_fingerprints,
-    )
-
-    if work_dir is None:
-        work = tempfile.mkdtemp(prefix="arm_ingest_")
-        atexit.register(shutil.rmtree, work, ignore_errors=True)
-    else:
-        work = work_dir
-        os.makedirs(work, exist_ok=True)
-    idx_dir = os.path.join(work, "index")
-    out_dir = os.path.join(work, "accepted")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
-
-    _fpart = F.pmod(F.xxhash64(F.col("fingerprint")), F.lit(fp_parts)).cast("int")
-
-    def _has_index() -> bool:
-        return _committed_parquet(idx_dir)
-
-    # Seed bootstrap: an overwrite is only safe when no committed index
-    # exists yet — a whole-root overwrite under a reused persistent
-    # work_dir would wipe every prior batch's accumulated fingerprints
-    # and silently re-admit their duplicates. On RESUME (index exists)
-    # the seed is APPENDED through the same pruned doc_id anti-join the
-    # epoch appends use: a re-run with the same seed no-ops, and a
-    # resumed run whose seed corpus GREW indexes exactly the new seed
-    # docs (skipping entirely would silently never index them).
     if seed is not None:
-        from actuarial_reserve_modelling_spark.sources.lease import writer_lease
 
-        seed_fp = (
-            content_fingerprints(seed)
-            .select("doc_id", "fingerprint")
-            .withColumn("fpart", _fpart)
-        )
-        # the bootstrap mutates the index OUTSIDE the per-batch step, so
-        # it takes the same work-dir lease the steps hold (r13): a second
-        # gate's bootstrap cannot interleave with a first gate's batch
-        with writer_lease(work):
-            if not _has_index():
-                seed_fp.repartition(F.col("fpart")).write.mode(
-                    "overwrite"
-                ).partitionBy("fpart").parquet(idx_dir)
-            else:
-                seed_fp = seed_fp.localCheckpoint(eager=False)
-                sparts = [
-                    int(r["fpart"])
-                    for r in seed_fp.select("fpart").distinct().collect()
-                ]
-                existing = (
-                    spark.read.parquet(idx_dir)
-                    .filter(F.col("fpart").isin(sparts))
-                    .select(F.col("doc_id").cast("long").alias("doc_id"))
-                )
-                seed_fp.join(existing, "doc_id", "left_anti").repartition(
-                    F.col("fpart")
-                ).write.mode("append").partitionBy("fpart").parquet(idx_dir)
+        def bootstrap() -> None:
+            seed_fp = fpt.fingerprints(seed).localCheckpoint(eager=False)
+            sparts = []
+            if fpt.present():  # the list bounds the anti-join's read
+                rows = seed_fp.select("fpart").distinct().collect()
+                sparts = [int(r["fpart"]) for r in rows]
+            fpt.append(seed_fp, sparts)
 
-    def _step(batch_df: DataFrame, bid: int) -> None:
-        # the gate's admission decision spans check -> sink -> append:
-        # hold the work-dir writer lease for the WHOLE step (r13), so a
-        # second gate process on the same tier refuses loudly instead of
-        # checking against an index another writer is mid-appending to
-        # (the per-op leases inside acquire reentrantly under this one)
-        from actuarial_reserve_modelling_spark.sources.lease import writer_lease
+        gate.locked(bootstrap)
 
-        with writer_lease(work):
-            _step_locked(batch_df, bid)
+    def check(batch_df: DataFrame, bid: int):
+        first, fparts = fpt.first_wins(batch_df)
+        return fpt.survivors(first, fparts), lambda committed: fpt.append(
+            committed, fparts
+        )
 
-    def _step_locked(batch_df: DataFrame, bid: int) -> None:
-        shutil.rmtree(os.path.join(out_dir, f"e{bid}"), ignore_errors=True)
-        cadence_due = compact_every and bid > 0 and bid % compact_every == 0
-        if (cadence_due or auto_compact) and bid > 0 and _has_index():
-            cap = state_partitions if cadence_due else auto_compact
-            compact_partitioned_index(
-                spark, idx_dir, "fpart", max_files_per_partition=cap
-            )
-            if auto_vacuum:
-                vacuum_index(spark, work, dry_run=False)
-        fp = content_fingerprints(batch_df).withColumn("fpart", _fpart)
-        w = Window.partitionBy("fingerprint").orderBy("doc_id")
-        first = (
-            fp.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .localCheckpoint(eager=True)
-        )
-        # one fpart collect per batch: the admitted set is a subset of
-        # first, so this list also bounds the append-side pruned read
-        fparts = [
-            int(r["fpart"]) for r in first.select("fpart").distinct().collect()
-        ]
-        if _has_index():
-            seen = (
-                spark.read.parquet(idx_dir)
-                .filter(F.col("fpart").isin(fparts))
-                .select("fingerprint", F.col("doc_id").alias("_idx_id"))
-            )
-            hit = (
-                first.join(seen, "fingerprint")
-                .filter(F.col("doc_id") != F.col("_idx_id"))
-                .select("doc_id")
-                .distinct()
-            )
-            surv = first.join(hit, "doc_id", "left_anti")
-        else:
-            surv = first
-        surv = surv.select(
-            "doc_id", "fingerprint", "fpart", F.lit(bid).cast("int").alias("batch")
-        )
-        # epoch-keyed overwrite on the survivor sink: a retried epoch
-        # replaces its own output. The index append derives from the
-        # committed sink (cheap columnar re-read) with a pruned doc_id
-        # anti-join, so re-appends are no-ops rather than duplicates.
-        out_epoch = os.path.join(out_dir, f"e{bid}")
-        surv.write.mode("overwrite").parquet(out_epoch)
-        newfp = spark.read.parquet(out_epoch).select(
-            "doc_id", "fingerprint", "fpart"
-        )
-        if _has_index():
-            existing = (
-                spark.read.parquet(idx_dir)
-                .filter(F.col("fpart").isin(fparts))
-                .select(F.col("doc_id").cast("long").alias("doc_id"))
-            )
-            newfp = newfp.join(existing, "doc_id", "left_anti")
-        newfp.repartition(F.col("fpart")).write.mode("append").partitionBy(
-            "fpart"
-        ).parquet(idx_dir)
-
-    stream = staged_ordered_source(
-        spark, [b.select("doc_id", "text") for b in batches], cache_key
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_step)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(out_dir)
-        .select("doc_id", "fingerprint", "batch")
+    return gate.run(
+        "incremental_ingest_dedup",
+        batches,
+        ("doc_id", "text"),
+        cache_key,
+        state_partitions,
+        check,
+        sink_cols=("doc_id", "fingerprint", "fpart"),
+        out_cols=("doc_id", "fingerprint", "batch"),
+        tiers=[("compact", fpt.present, fpt.compact)],
+        auto_compact=auto_compact,
+        auto_vacuum=auto_vacuum,
     )
 
 
@@ -577,50 +715,37 @@ def incremental_neardup_ingest(
     bands: int = 16,
     rows_per_band: int = 16,
     state_partitions: int = 8,
-    compact_every: int | None = None,
     auto_compact: int | None = 8,
     fp_parts: int = 64,
     work_dir: str | None = None,
     auto_vacuum: bool = False,
 ) -> DataFrame:
     """The FULL continuous-ingest gate — the production loop a training
-    corpus actually runs — riding PARTITION-PRUNED persisted tiers
-    (r11: both tiers previously re-read their whole index per batch;
-    now per-batch index I/O is the batch's own partition footprint):
-    per arriving batch,
+    corpus runs — over two partition-pruned persisted tiers (the loop,
+    sink, lease and compaction are ``_IngestGate``'s). Per arriving
+    batch:
 
-    1. **exact tier** — within-batch first-wins on the normalized
-       content fingerprint, then a check against the persisted
-       fingerprint dataset read pruned to the batch's OWN fingerprint-
-       hash partitions (``fpart = pmod(xxhash64(fingerprint),
-       fp_parts)``); index rows carry (fingerprint, doc_id) and
-       SAME-id matches don't reject, so a replayed epoch whose rows
-       already landed converges instead of rejecting itself;
+    1. **exact tier** — the exact-fingerprint tier (``fp_index``):
+       within-batch first-wins, then the check pruned to the batch's
+       own fingerprint-hash partitions;
     2. **within-batch near-dup tier** — MinHash-LSH pairs over the
        batch's exact survivors, connected components
        (``dedup_clusters``), keep each cluster's minimum doc_id;
     3. **cross-batch near-dup tier** — survivors checked AGAINST the
        persisted dedup tier (``minhash_dedup_against_index_persisted``
        — banded projection read pruned to the batch's bucket set, the
-       l40 path; same-id pairs excluded, so replays converge by the
-       same argument: different-id near-dups of a replayed batch were
-       already collapsed by the within-batch tier, deterministically);
-    4. admitted docs append to BOTH tiers partition-locally
-       (``add_to_dedup_index``'s pruned anti-join + the fingerprint
-       dataset's pruned anti-join make re-appends no-ops). Rejected
-       docs contribute NOTHING — the index stays linear in the KEPT
-       corpus, not the ingested stream.
+       l40 path; same-id pairs excluded, so replays converge: the
+       different-id near-dups of a replayed batch were already
+       collapsed by the within-batch tier, deterministically);
+    4. admitted docs append to BOTH tiers partition-locally, overlapped.
+       Rejected docs contribute NOTHING — the tiers stay linear in the
+       KEPT corpus, not the ingested stream.
 
     Batch 0 bootstraps the dedup tier (``persist_dedup_index`` on its
-    admitted set — meta/ is written last, so its presence is the
-    commit marker; a retry re-persists over partial state).
-    ``auto_compact`` (ON by default) runs the threshold form of
-    ``compact_dedup_index`` + the fingerprint dataset's
-    ``compact_partitioned_index`` every epoch — only partitions whose
-    file count exceeds the threshold are rewritten; ``compact_every``
-    additionally folds on a fixed cadence. Compaction preserves
-    contents exactly, so the admitted set is invariant to it (pinned
-    by the pytest).
+    admitted set — meta/ is written last, so its presence is the commit
+    marker; a retry re-persists over partial state). Both tiers compact
+    under ``_IngestGate``'s policy (``compact_dedup_index`` and the
+    fingerprint tier, overlapped).
 
     Iterative CC inside + sequential batch dependence ⇒ not
     SQL-expressible in closed form: the registry oracle replays the
@@ -629,155 +754,33 @@ def incremental_neardup_ingest(
 
     Returns admitted rows ``(doc_id, batch)``.
     """
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
     from actuarial_reserve_modelling_spark.operators.dedup import (
         add_to_dedup_index,
+        build_dedup_index,
         compact_dedup_index,
-        dedup_clusters,
         minhash_dedup_against_index_persisted,
         minhash_near_dup_pairs_with_index,
         persist_dedup_index,
-        build_dedup_index,
         read_dedup_index_meta,
     )
-    from actuarial_reserve_modelling_spark.operators.similarity import (
-        compact_partitioned_index,
-    )
-    from actuarial_reserve_modelling_spark.operators.textstats import (
-        content_fingerprints,
-    )
 
-    if work_dir is None:
-        work = tempfile.mkdtemp(prefix="arm_neardup_ingest_")
-        atexit.register(shutil.rmtree, work, ignore_errors=True)
-    else:
-        work = work_dir
-        os.makedirs(work, exist_ok=True)
-    fp_dir = os.path.join(work, "fp_index")
-    idx_dir = os.path.join(work, "dedup_index")
-    out_dir = os.path.join(work, "admitted")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
+    gate = _IngestGate(spark, work_dir, "arm_neardup_ingest_")
+    fpt = _FingerprintTier(spark, gate.path("fp_index"), fp_parts)
+    idx_dir = gate.path("dedup_index")
 
     def _have_index() -> bool:
         return os.path.exists(os.path.join(idx_dir, "meta"))
 
-    def _have_fp() -> bool:
-        return _committed_parquet(fp_dir)
-
-    _fpart = F.pmod(F.xxhash64(F.col("fingerprint")), F.lit(fp_parts)).cast("int")
-
-    import time as _time
-
-    _timing = os.environ.get("ARM_GATE_TIMING") == "1"
-    _marks: list[tuple[str, float]] = []
-
-    def _mark(label: str, t0: float) -> float:
-        if _timing:
-            _marks.append((label, round(_time.time() - t0, 2)))
-        return _time.time()
-
-    def _step(batch_df: DataFrame, bid: int) -> None:
-        # the gate's admission decision spans check -> sink -> append:
-        # hold the work-dir writer lease for the WHOLE step (r13), so a
-        # second gate process on the same tier refuses loudly instead of
-        # checking against an index another writer is mid-appending to
-        # (the per-op leases inside acquire reentrantly under this one)
-        from actuarial_reserve_modelling_spark.sources.lease import writer_lease
-
-        with writer_lease(work):
-            _step_locked(batch_df, bid)
-
-    def _step_locked(batch_df: DataFrame, bid: int) -> None:
-        _marks.clear()
-        t0 = _time.time()
-        shutil.rmtree(os.path.join(out_dir, f"e{bid}"), ignore_errors=True)
-        cadence_due = compact_every and bid > 0 and bid % compact_every == 0
-        if (cadence_due or auto_compact) and bid > 0:
-            cap = state_partitions if cadence_due else auto_compact
-            # the two tiers compact independently (different directories,
-            # each under its own lease) — overlap them like the appends
-            # below, so a hot epoch's two partition rewrites share the
-            # cluster instead of queueing; vacuum stays after both (it
-            # reads both tiers' live-file sets)
-            compactions = []
-            if _have_index():
-                compactions.append(
-                    (
-                        "compact_index",
-                        lambda: compact_dedup_index(
-                            spark, idx_dir, max_files_per_partition=cap
-                        ),
-                    )
-                )
-            if _have_fp():
-                compactions.append(
-                    (
-                        "compact_fp",
-                        lambda: compact_partitioned_index(
-                            spark, fp_dir, "fpart", max_files_per_partition=cap
-                        ),
-                    )
-                )
-            if len(compactions) > 1:
-                _run_overlapped(compactions, _marks if _timing else None)
-            elif compactions:
-                compactions[0][1]()
-            if auto_vacuum:
-                vacuum_index(spark, work, dry_run=False)
-        t0 = _mark("compact", t0)
-        # 1) exact tier: within-batch first-wins, then the pruned
-        # same-id-excluding check against the fingerprint dataset.
-        # r13: text rides the fingerprint projection (keep=), so the
-        # survivors already carry their payload — the pre-r13 shape
-        # paid a batch_df⨝first join AND a second eager checkpoint to
-        # re-attach text after the fingerprint tier.
-        fp = content_fingerprints(batch_df, keep=["text"]).withColumn(
-            "fpart", _fpart
-        )
-        w = Window.partitionBy("fingerprint").orderBy("doc_id")
-        first = (
-            fp.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("doc_id", "text", "fingerprint", "fpart")
-            .localCheckpoint(eager=True)
-        )
-        # one fpart collect per batch: admitted ⊆ first, so the list
-        # also bounds the append-side pruned read below
-        fparts = [
-            int(r["fpart"]) for r in first.select("fpart").distinct().collect()
-        ]
-        if _have_fp():
-            seen = (
-                spark.read.parquet(fp_dir)
-                .filter(F.col("fpart").isin(fparts))
-                .select("fingerprint", F.col("doc_id").alias("_idx_id"))
-            )
-            hit = (
-                first.join(seen, "fingerprint")
-                .filter(F.col("doc_id") != F.col("_idx_id"))
-                .select("doc_id")
-                .distinct()
-            )
-            # still checkpointed: three downstream stages reuse docs_e
-            docs_e = (
-                first.join(hit, "doc_id", "left_anti")
-                .select("doc_id", "text")
-                .localCheckpoint(eager=True)
-            )
-        else:
-            # select off the already-checkpointed `first` — free reuse
-            docs_e = first.select("doc_id", "text")
-        t0 = _mark("exact_tier", t0)
-        # 2) within-batch near-dup clustering → cluster representatives
-        # eager checkpoint: the emptiness probe and the CC rounds below
-        # would otherwise each re-run the whole LSH pair pipeline.
+    def check(batch_df: DataFrame, bid: int):
+        # 1) exact tier
+        first, fparts = fpt.first_wins(batch_df, keep=("text",))
+        docs_e = fpt.survivors(first, fparts).select("doc_id", "text")
+        if fpt.present():
+            # three downstream stages reuse docs_e; without an index it
+            # is a select off the already-checkpointed ``first``
+            docs_e = docs_e.localCheckpoint(eager=True)
+        gate.mark("exact_tier")
+        # 2) within-batch near-dup clustering → cluster representatives.
         # The _with_index form also hands back the signed exact-collapse
         # rep frame (one materialization), which the cross-batch check,
         # the tier append and the bootstrap persist below reuse instead
@@ -786,24 +789,14 @@ def incremental_neardup_ingest(
         pairs_raw, signed_reps = minhash_near_dup_pairs_with_index(
             docs_e, threshold=threshold, bands=bands, rows_per_band=rows_per_band
         )
-        pairs = pairs_raw.select("d1", "d2").localCheckpoint(eager=True)
-        if pairs.limit(1).count() > 0:
-            non_reps = (
-                dedup_clusters(pairs)
-                .filter(F.col("doc_id") != F.col("rep_id"))
-                .select("doc_id")
-            )
-            docs_e = docs_e.join(non_reps, "doc_id", "left_anti").localCheckpoint(
-                eager=True
-            )
-        t0 = _mark("within_batch", t0)
+        docs_e = _cluster_reps(docs_e, pairs_raw.select("d1", "d2"), "doc_id")
+        gate.mark("within_batch")
         # 3) cross-batch near-dup vs the persisted dedup tier (pruned).
         # The batch is signed ONCE here with the tier's persisted
-        # parameters and the eager-checkpointed frame is shared with
-        # the index append below — committed ⊆ docs_e and signatures
-        # are deterministic, so the appended rows are identical to a
-        # re-sign of the committed batch (the pre-r14 shape paid the
-        # tokenize+MinHash kernel twice per batch).
+        # parameters and the frame is shared with the index append —
+        # committed ⊆ docs_e and signatures are deterministic, so the
+        # appended rows are identical to a re-sign of the committed
+        # batch.
         if _have_index():
             meta_idx = read_dedup_index_meta(spark, idx_dir)
             if (
@@ -838,99 +831,72 @@ def incremental_neardup_ingest(
                 .distinct()
             )
             admitted = docs_e.join(hits, "doc_id", "left_anti")
-            bootstrapped = False
         else:
             signed_e = None
             admitted = docs_e
-            bootstrapped = True
         admitted = admitted.localCheckpoint(eager=True)
-        t0 = _mark("cross_batch", t0)
-        # 4) epoch-keyed admitted sink, then partition-local tier
-        # appends derived from the committed sink
-        out_epoch = os.path.join(out_dir, f"e{bid}")
-        admitted.select("doc_id", "text").withColumn(
-            "batch", F.lit(bid).cast("int")
-        ).write.mode("overwrite").parquet(out_epoch)
-        committed = spark.read.parquet(out_epoch).select("doc_id", "text")
-        t0 = _mark("sink", t0)
+        gate.mark("cross_batch")
 
-        def _index_append() -> None:
-            if bootstrapped:
-                # the rep frame was signed with exactly these parameters
-                # — restrict to committed ids instead of re-signing
-                persist_dedup_index(
-                    signed_reps.join(
+        def append(committed: DataFrame) -> None:
+            def _index_append() -> None:
+                if signed_e is None:
+                    # bootstrap: the rep frame was signed with exactly
+                    # these parameters — restrict to committed ids
+                    # instead of re-signing
+                    persist_dedup_index(
+                        signed_reps.join(
+                            committed.select("doc_id"), "doc_id", "leftsemi"
+                        ),
+                        idx_dir,
+                        bands=bands,
+                        rows_per_band=rows_per_band,
+                    )
+                else:
+                    add_to_dedup_index(spark, idx_dir, committed, presigned=signed_e)
+
+            def _fp_append() -> None:
+                # committed ⊆ first, so a semi-join of the exact tier's
+                # checkpointed rows replaces a re-normalize+md5 pass over
+                # the committed text (same fingerprint function, same rows)
+                fpt.append(
+                    first.select("doc_id", "fingerprint", "fpart").join(
                         committed.select("doc_id"), "doc_id", "leftsemi"
                     ),
-                    idx_dir,
-                    bands=bands,
-                    rows_per_band=rows_per_band,
+                    fparts,
                 )
-            else:
-                add_to_dedup_index(spark, idx_dir, committed, presigned=signed_e)
 
-        def _fp_append() -> None:
-            # fingerprint append reuses the exact tier's checkpointed
-            # (doc_id, fingerprint, fpart) rows — committed ⊆ first, so
-            # the semi-join replaces a full re-normalize+md5 pass over
-            # the committed text (identical values: same fingerprint
-            # function over the same rows)
-            newfp = first.select("doc_id", "fingerprint", "fpart").join(
-                committed.select("doc_id"), "doc_id", "leftsemi"
-            )
-            if _have_fp():
-                existing = (
-                    spark.read.parquet(fp_dir)
-                    .filter(F.col("fpart").isin(fparts))
-                    .select(F.col("doc_id").cast("long").alias("doc_id"))
-                )
-                newfp = newfp.join(existing, "doc_id", "left_anti")
-            newfp.select("doc_id", "fingerprint", "fpart").repartition(
-                F.col("fpart")
-            ).write.mode("append").partitionBy("fpart").parquet(fp_dir)
+            # the two appends run from two driver threads: both derive
+            # only from the committed sink (plus frames eagerly
+            # checkpointed above, so nothing upstream re-executes) and
+            # write to DIFFERENT directories, so the jobs are independent
+            # and the scheduler back-fills one append's straggler tail
+            # with the other's tasks. Crash states are the set a retry
+            # already heals (the stream replays a failed step before any
+            # later batch runs, and both appends are anti-join
+            # idempotent), so only the wall changes, never the tiers.
+            gate.overlap([("index_append", _index_append), ("fp_append", _fp_append)])
 
-        # 5+6) tier appends OVERLAPPED from two driver threads: both
-        # derive only from the committed sink (plus frames eagerly
-        # checkpointed above — nothing upstream re-executes) and write
-        # to DIFFERENT directories, so the jobs are independent and the
-        # scheduler back-fills one append's straggler tail with the
-        # other's tasks instead of leaving the cluster idle. Crash
-        # states are the same set a retry already heals — the stream
-        # replays a failed step before any later batch runs, the
-        # admitted sink is epoch-overwritten, and BOTH appends are
-        # anti-join idempotent — so only the wall changes, never the
-        # tier contents (pinned by the restart pytest + replay checks).
-        _run_overlapped(
-            [("index_append", _index_append), ("fp_append", _fp_append)],
-            _marks if _timing else None,
-        )
-        t0 = _mark("appends", t0)
-        if _timing:
-            # label = the driving function, not a hardcoded query name
-            # (r12 ADVICE: tools reusing this gate got 't11'-labelled
-            # timings regardless of what drove it)
-            print(f"ARM_GATE_TIMING incremental_neardup_ingest batch={bid} " + " ".join(
-                f"{k}={v}" for k, v in _marks), flush=True)
+        return admitted, append
 
-    stream = staged_ordered_source(
-        spark, [b.select("doc_id", "text") for b in batches], cache_key
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_step)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(out_dir)
-        .select("doc_id", "batch")
+    return gate.run(
+        "incremental_neardup_ingest",
+        batches,
+        ("doc_id", "text"),
+        cache_key,
+        state_partitions,
+        check,
+        sink_cols=("doc_id", "text"),
+        out_cols=("doc_id", "batch"),
+        tiers=[
+            (
+                "compact_index",
+                _have_index,
+                partial(compact_dedup_index, spark, idx_dir),
+            ),
+            ("compact_fp", fpt.present, fpt.compact),
+        ],
+        auto_compact=auto_compact,
+        auto_vacuum=auto_vacuum,
     )
 
 
@@ -944,20 +910,16 @@ def incremental_semantic_ingest(
     seed: int = 42,
     dim: int = 64,
     state_partitions: int = 8,
-    compact_every: int | None = None,
     auto_compact: int | None = 8,
     work_dir: str | None = None,
     auto_vacuum: bool = False,
 ) -> DataFrame:
     """Continuous-ingest SEMANTIC dedup — the embedding-tier gate a
     multimodal/RAG corpus runs alongside the text gate
-    (``incremental_neardup_ingest``), riding the PERSISTED vector-
-    signature tier (r11: before, every batch re-read and re-shuffled
-    the ENTIRE signature index inside
-    ``lsh_cosine_dedup_against_index`` — the O(index)-per-batch
-    pattern the verdicts flagged on the ANN rerank and MinHash lookup;
-    now per-batch index I/O is the batch's own partition footprint):
-    per arriving batch of (vec_id, embedding),
+    (``incremental_neardup_ingest``), riding the persisted vector-
+    signature tier with per-batch index I/O pruned to the batch's own
+    partition footprint (the loop, sink, lease and compaction are
+    ``_IngestGate``'s). Per arriving batch of (vec_id, embedding):
 
     1. **within-batch tier** — hyperplane-LSH pairs over the batch
        (``lsh_cosine_pairs``), connected components
@@ -972,18 +934,10 @@ def incremental_semantic_ingest(
        corpus and later batches never re-sign or re-scan earlier data.
 
     Batch 0 bootstraps the tier (``persist_vecsig_index`` on its
-    admitted set — overwrite clears partial state); retried later
-    batches re-admit through the epoch-keyed overwrite sink while the
-    add path's pruned anti-join drops already-indexed ids (the S7
-    pattern shared with the ANN gate). ``auto_compact`` (ON by
-    default) runs the threshold form of ``compact_vecsig_index`` every
-    epoch — only partitions whose file count exceeds the threshold are
-    rewritten, so the per-epoch cost is one metadata aggregate when
-    nothing is hot and file counts stay bounded at production batch
-    cadence; ``compact_every`` additionally folds on a fixed cadence.
-    Identical vectors sign identically in every table, so exact
-    re-encounters are rejected with probability 1 — the property the
-    registry oracle exploits.
+    admitted set — overwrite clears partial state). Identical vectors
+    sign identically in every table, so exact re-encounters are
+    rejected with probability 1 — the property the registry oracle
+    exploits.
 
     Iterative CC inside + sequential batch dependence ⇒ not
     SQL-expressible in general; the planted-duplicate registry query
@@ -991,12 +945,6 @@ def incremental_semantic_ingest(
 
     Returns admitted rows ``(vec_id, batch)``.
     """
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from actuarial_reserve_modelling_spark.operators.dedup import dedup_clusters
     from actuarial_reserve_modelling_spark.operators.similarity import (
         _vecsig_spart,
         add_to_vecsig_index,
@@ -1008,41 +956,13 @@ def incremental_semantic_ingest(
         read_vecsig_index_meta,
     )
 
-    if work_dir is None:
-        work = tempfile.mkdtemp(prefix="arm_sem_ingest_")
-        atexit.register(shutil.rmtree, work, ignore_errors=True)
-    else:
-        work = work_dir
-        os.makedirs(work, exist_ok=True)
-    idx_dir = os.path.join(work, "vecsig_index")
-    out_dir = os.path.join(work, "admitted")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
+    gate = _IngestGate(spark, work_dir, "arm_sem_ingest_")
+    idx_dir = gate.path("vecsig_index")
 
     def _have_index() -> bool:
         return os.path.exists(os.path.join(idx_dir, "meta"))
 
-    def _step(batch_df: DataFrame, bid: int) -> None:
-        # the gate's admission decision spans check -> sink -> append:
-        # hold the work-dir writer lease for the WHOLE step (r13), so a
-        # second gate process on the same tier refuses loudly instead of
-        # checking against an index another writer is mid-appending to
-        # (the per-op leases inside acquire reentrantly under this one)
-        from actuarial_reserve_modelling_spark.sources.lease import writer_lease
-
-        with writer_lease(work):
-            _step_locked(batch_df, bid)
-
-    def _step_locked(batch_df: DataFrame, bid: int) -> None:
-        shutil.rmtree(os.path.join(out_dir, f"e{bid}"), ignore_errors=True)
-        if compact_every and bid > 0 and bid % compact_every == 0 and _have_index():
-            compact_vecsig_index(
-                spark, idx_dir, max_files_per_partition=state_partitions
-            )
-        if auto_compact and bid > 0 and _have_index():
-            compact_vecsig_index(spark, idx_dir, max_files_per_partition=auto_compact)
-            if auto_vacuum:
-                vacuum_index(spark, work, dry_run=False)
+    def check(batch_df: DataFrame, bid: int):
         vecs = batch_df.select("vec_id", "embedding").localCheckpoint(eager=True)
         # 1) within-batch semantic clustering → cluster representatives.
         # The _with_index form also hands back the batch's signature
@@ -1058,18 +978,11 @@ def incremental_semantic_ingest(
             seed=seed,
             dim=dim,
         )
-        pairs = pairs_raw.select(
-            F.col("v1").alias("d1"), F.col("v2").alias("d2")
-        ).localCheckpoint(eager=True)
-        if pairs.limit(1).count() > 0:
-            non_reps = (
-                dedup_clusters(pairs)
-                .filter(F.col("doc_id") != F.col("rep_id"))
-                .select(F.col("doc_id").alias("vec_id"))
-            )
-            vecs = vecs.join(non_reps, "vec_id", "left_anti").localCheckpoint(
-                eager=True
-            )
+        vecs = _cluster_reps(
+            vecs,
+            pairs_raw.select(F.col("v1").alias("d1"), F.col("v2").alias("d2")),
+            "vec_id",
+        )
         if not _have_index():
             # batch 0 (or its retry): bootstrap the persisted tier on
             # the admitted set; persist's overwrite clears partial
@@ -1085,83 +998,62 @@ def incremental_semantic_ingest(
                 dim=dim,
                 presigned=batch_sigs,
             )
-            admitted = vecs
-            bootstrapped = True
+            return vecs, None
+        # 2) cross-batch check, pruned to the batch's own partitions.
+        # The batch is signed ONCE with the tier's persisted parameters
+        # and the frame is shared with the index append — committed ⊆
+        # vecs and the hyperplane signatures are deterministic, so the
+        # appended rows are identical to a re-sign of the committed
+        # batch.
+        meta_idx = read_vecsig_index_meta(spark, idx_dir)
+        if (
+            meta_idx["num_planes"],
+            meta_idx["num_tables"],
+            meta_idx["seed"],
+            meta_idx["dim"],
+        ) == (num_planes, num_tables, seed, dim):
+            # reuse the within-batch kernel run: spart is a pure
+            # projection of the (table, sig) cell, and the semi-join
+            # restricts to the surviving vectors
+            sigs_e = batch_sigs.withColumn(
+                "spart", _vecsig_spart(meta_idx["k_sig_parts"])
+            ).join(vecs.select("vec_id"), "vec_id", "leftsemi")
         else:
-            # 2) cross-batch check, pruned to the batch's own
-            # partitions. The batch is signed ONCE with the tier's
-            # persisted parameters and the eager-checkpointed frame is
-            # shared with the index append below — committed ⊆ vecs
-            # and the hyperplane signatures are deterministic, so the
-            # appended rows are identical to a re-sign of the
-            # committed batch (the pre-r14 shape paid the signing
-            # kernel twice per batch).
-            meta_idx = read_vecsig_index_meta(spark, idx_dir)
-            if (
-                meta_idx["num_planes"],
-                meta_idx["num_tables"],
-                meta_idx["seed"],
-                meta_idx["dim"],
-            ) == (num_planes, num_tables, seed, dim):
-                # reuse the within-batch kernel run: spart is a pure
-                # projection of the (table, sig) cell, and the
-                # semi-join restricts to the surviving vectors
-                sigs_e = (
-                    batch_sigs.withColumn(
-                        "spart", _vecsig_spart(meta_idx["k_sig_parts"])
-                    ).join(vecs.select("vec_id"), "vec_id", "leftsemi")
+            # foreign tier in the work dir: sign with ITS params
+            sigs_e = (
+                hyperplane_signatures_multi(
+                    vecs,
+                    meta_idx["num_planes"],
+                    meta_idx["num_tables"],
+                    meta_idx["seed"],
+                    meta_idx["dim"],
                 )
-            else:
-                # foreign tier in the work dir: sign with ITS params
-                sigs_e = (
-                    hyperplane_signatures_multi(
-                        vecs,
-                        meta_idx["num_planes"],
-                        meta_idx["num_tables"],
-                        meta_idx["seed"],
-                        meta_idx["dim"],
-                    )
-                    .withColumn("spart", _vecsig_spart(meta_idx["k_sig_parts"]))
-                    .localCheckpoint(eager=True)
-                )
-            hits = (
-                lsh_cosine_dedup_against_index_persisted(
-                    spark, idx_dir, vecs, threshold=threshold, presigned=sigs_e
-                )
-                .select(F.col("new_id").alias("vec_id"))
-                .distinct()
+                .withColumn("spart", _vecsig_spart(meta_idx["k_sig_parts"]))
+                .localCheckpoint(eager=True)
             )
-            admitted = vecs.join(hits, "vec_id", "left_anti")
-            bootstrapped = False
-        # 3) epoch-keyed sink; the index append derives from the
-        # committed sink (cheap re-read) so the dedup plan runs once
-        out_epoch = os.path.join(out_dir, f"e{bid}")
-        admitted.select("vec_id", "embedding").withColumn(
-            "batch", F.lit(bid).cast("int")
-        ).write.mode("overwrite").parquet(out_epoch)
-        if not bootstrapped:
-            committed = spark.read.parquet(out_epoch).select("vec_id", "embedding")
-            add_to_vecsig_index(spark, idx_dir, committed, presigned=sigs_e)
-
-    stream = staged_ordered_source(
-        spark, [b.select("vec_id", "embedding") for b in batches], cache_key
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_step)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        hits = (
+            lsh_cosine_dedup_against_index_persisted(
+                spark, idx_dir, vecs, threshold=threshold, presigned=sigs_e
+            )
+            .select(F.col("new_id").alias("vec_id"))
+            .distinct()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(out_dir)
-        .select("vec_id", "batch")
+        return vecs.join(hits, "vec_id", "left_anti"), lambda committed: (
+            add_to_vecsig_index(spark, idx_dir, committed, presigned=sigs_e)
+        )
+
+    return gate.run(
+        "incremental_semantic_ingest",
+        batches,
+        ("vec_id", "embedding"),
+        cache_key,
+        state_partitions,
+        check,
+        sink_cols=("vec_id", "embedding"),
+        out_cols=("vec_id", "batch"),
+        tiers=[("compact", _have_index, partial(compact_vecsig_index, spark, idx_dir))],
+        auto_compact=auto_compact,
+        auto_vacuum=auto_vacuum,
     )
 
 
@@ -1172,16 +1064,15 @@ def incremental_ann_ingest(
     threshold: float = 0.999999,
     k: int = 1,
     state_partitions: int = 8,
-    compact_every: int | None = None,
     auto_compact: int | None = 8,
     work_dir: str | None = None,
     refresh_recall_curve: int | None = None,
 ) -> DataFrame:
     """Continuous ingest with the PERSISTED hierarchical ANN index as
     the gate state (the L10 tier driving a T-row stream — t12's
-    semantic gate re-based onto the partition-pruned index instead of
-    recursive whole-index reads): per arriving batch of
-    (vec_id, embedding),
+    semantic gate re-based onto the partition-pruned index; the loop,
+    sink, lease and compaction are ``_IngestGate``'s). Per arriving
+    batch of (vec_id, embedding):
 
     1. **within-batch tier** — bitwise-identical vectors collapse to
        their minimum id (group on the vector itself, no hashing — the
@@ -1198,24 +1089,13 @@ def incremental_ann_ingest(
        KEPT corpus, per-batch index I/O is the probed fraction.
 
     Batch 0 bootstraps the index (``ivf_hier_build`` +
-    ``persist_ann_index(embeddings=...)``) — the quantizer trains on
-    the first batch and is immutable after, the standard
-    train-on-first-chunk contract (routing quality for later batches
-    follows the add-path guarantee, not retraining). Retried
-    micro-batches are idempotent: batch 0 re-persists (overwrite), and
-    later batches re-admit through the epoch-keyed overwrite sink
-    while ``add_to_ann_index``'s pruned anti-join drops already-indexed
-    ids (the S7 pattern). ``compact_every`` folds append-accumulated
-    member files via ``compact_ann_index`` every N batches;
-    ``auto_compact`` (r10 verdict #3, ON by default) additionally runs
-    the threshold form EVERY epoch — ``compact_ann_index`` itself
-    rewrites only partitions whose file count exceeds the threshold,
-    so the per-epoch cost is one metadata aggregate when nothing is
-    hot, and file counts stay bounded at production batch cadence
-    without the caller remembering a cadence. Both are safe mid-stream:
-    members/ holds only job-committed rows (a retried add heals via
-    the anti-join, never via file removal), and compaction preserves
-    contents exactly.
+    ``persist_ann_index(embeddings=...)``; overwrite clears partial
+    state) — the quantizer trains on the first batch and is immutable
+    after, the standard train-on-first-chunk contract (routing quality
+    for later batches follows the add-path guarantee, not retraining).
+    Compaction (``compact_ann_index``) is safe mid-stream: members/
+    holds only job-committed rows (a retried add heals via the
+    anti-join, never via file removal).
 
     Sizing contract: the cross-batch query rides the ANN family's
     bounded-query-batch contract (the batch is broadcast into the
@@ -1230,154 +1110,98 @@ def incremental_ann_ingest(
     evidence (exact twins planted across and within batches must all
     be rejected, originals all admitted).
 
-    ``refresh_recall_curve=N`` (opt-in, r14) re-runs
-    ``persist_recall_audit`` on the tier every N batches after the
-    append — the ingested corpus drifts away from whatever curve the
-    tier was audited at, and this keeps ``nprobe="auto"`` consumers
-    routing on a measured curve instead of tripping the 2×-staleness
-    warning. One bounded exact pass per refresh (n_sample=32 × corpus,
-    the sweep's shared-exact cost) — pick N so that cost amortizes
-    over your batch cadence; OFF by default because the gate itself
-    queries at an explicit k/threshold and never consumes the curve.
+    ``refresh_recall_curve=N`` (opt-in) re-runs ``persist_recall_audit``
+    on the tier every N batches after the append — the ingested corpus
+    drifts away from whatever curve the tier was audited at, and this
+    keeps ``nprobe="auto"`` consumers routing on a measured curve
+    instead of tripping the 2×-staleness warning. One bounded exact
+    pass per refresh (n_sample=32 × corpus, the sweep's shared-exact
+    cost) — pick N so that cost amortizes over your batch cadence; OFF
+    by default because the gate itself queries at an explicit
+    k/threshold and never consumes the curve.
 
     Returns admitted rows ``(vec_id, batch)``.
     """
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from actuarial_reserve_modelling_spark.operators.similarity import (
         add_to_ann_index,
         ann_ivf_hier_topk_persisted,
         compact_ann_index,
         ivf_hier_build,
         persist_ann_index,
+        persist_recall_audit,
     )
 
-    if work_dir is None:
-        work = tempfile.mkdtemp(prefix="arm_ann_ingest_")
-        atexit.register(shutil.rmtree, work, ignore_errors=True)
-    else:
-        work = work_dir
-        os.makedirs(work, exist_ok=True)
-    idx_dir = os.path.join(work, "ann_index")
-    out_dir = os.path.join(work, "admitted")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(out_dir)
+    gate = _IngestGate(spark, work_dir, "arm_ann_ingest_")
+    idx_dir = gate.path("ann_index")
 
-    def _step(batch_df: DataFrame, bid: int) -> None:
-        # the gate's admission decision spans check -> sink -> append:
-        # hold the work-dir writer lease for the WHOLE step (r13), so a
-        # second gate process on the same tier refuses loudly instead of
-        # checking against an index another writer is mid-appending to
-        # (the per-op leases inside acquire reentrantly under this one)
-        from actuarial_reserve_modelling_spark.sources.lease import writer_lease
+    def _have_index() -> bool:
+        return os.path.exists(os.path.join(idx_dir, "supers"))
 
-        with writer_lease(work):
-            _step_locked(batch_df, bid)
-
-    def _step_locked(batch_df: DataFrame, bid: int) -> None:
-        shutil.rmtree(os.path.join(out_dir, f"e{bid}"), ignore_errors=True)
-        have_index = os.path.exists(os.path.join(idx_dir, "supers"))
-        if compact_every and bid > 0 and bid % compact_every == 0 and have_index:
-            compact_ann_index(spark, idx_dir, max_files_per_partition=state_partitions)
-        if auto_compact and bid > 0 and have_index:
-            compact_ann_index(spark, idx_dir, max_files_per_partition=auto_compact)
-        vecs = batch_df.select("vec_id", "embedding")
+    def check(batch_df: DataFrame, bid: int):
         # 1) within-batch exact collapse: one row per distinct vector,
         # minimum id wins (first-wins under the deterministic id order)
         reps = (
-            vecs.groupBy("embedding")
+            batch_df.select("vec_id", "embedding")
+            .groupBy("embedding")
             .agg(F.min("vec_id").alias("vec_id"))
             .select("vec_id", "embedding")
             .localCheckpoint(eager=True)
         )
-        probes = None
-        if not os.path.exists(os.path.join(idx_dir, "supers")):
+        if not _have_index():
             # batch 0 (or its retry): bootstrap the index on the
             # admitted set; persist's overwrite clears partial state
             index, super_cent = ivf_hier_build(reps)
             persist_ann_index(index, super_cent, idx_dir, embeddings=reps)
-            admitted = reps
-        else:
-            # 2) pruned query against the persisted tier. The same-id
-            # exclusion is the replay-convergence guard (r11, the
-            # contract the other three gates share): ids are unique
-            # across the stream, so in the normal flow a query never
-            # meets its own id — but a micro-batch retried after its
-            # add_to_ann_index already committed WOULD find each of its
-            # vectors in the index at sim 1.0 under its own id, reject
-            # everything, and overwrite its epoch sink empty (silent
-            # data loss). Excluding the query's own id makes the replay
-            # recompute the identical admitted set instead: different-id
-            # exact twins were already collapsed by the within-batch
-            # tier, deterministically, both times.
-            # k+1 so the excluded self can't shadow a true duplicate
-            # out of the window on replay; rejection depends only on
-            # the MAX non-self sim ≥ τ, so normal-flow decisions are
-            # bit-identical to the plain k query.
-            # r15 (guide §2.3): return_probes hands back the query's
-            # rank-ordered level-1 assignment — its top-1 rows ARE the
-            # append's hard membership supers (same kernel, same
-            # (distance, index) tie rule), so the batch's level-1
-            # matmul runs ONCE per step instead of once for the query
-            # and again inside add_to_ann_index.
-            topk, probes = ann_ivf_hier_topk_persisted(
-                spark, idx_dir, None, reps, k=k + 1, return_probes=True
-            )
-            hits = (
-                topk.filter(
-                    (F.col("sim") >= threshold)
-                    & (F.col("query_id") != F.col("neighbor_id"))
-                )
-                .select(F.col("query_id").alias("vec_id"))
-                .distinct()
-            )
-            admitted = reps.join(hits, "vec_id", "left_anti")
-        # 3) epoch-keyed sink; the index append derives from the
-        # committed sink (cheap re-read) so the gate plan runs once
-        out_epoch = os.path.join(out_dir, f"e{bid}")
-        admitted.withColumn("batch", F.lit(bid).cast("int")).write.mode(
-            "overwrite"
-        ).parquet(out_epoch)
-        if os.path.exists(os.path.join(idx_dir, "supers")) and bid > 0:
-            committed = spark.read.parquet(out_epoch).select("vec_id", "embedding")
-            # preassigned: the query's checkpointed probe frame covers
-            # reps ⊇ committed (committed rows are bitwise copies of
-            # admitted reps through the parquet sink), so the append's
-            # hard supers are read off rank 0 instead of re-running the
-            # level-1 matmul; None on a bootstrap epoch
-            add_to_ann_index(spark, idx_dir, committed, preassigned=probes)
-        if refresh_recall_curve and bid > 0 and bid % refresh_recall_curve == 0:
-            # post-append: audit the corpus the NEXT batch will query.
-            # Reentrant under the step lease (persist_recall_audit's own
-            # lease nests inside the held work-dir lease, like add's).
-            from actuarial_reserve_modelling_spark.operators.similarity import (
-                persist_recall_audit,
-            )
-
-            persist_recall_audit(
-                spark, idx_dir, probe_settings=(1, 2, 4), n_sample=32
-            )
-
-    stream = staged_ordered_source(
-        spark, [b.select("vec_id", "embedding") for b in batches], cache_key
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_step)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            return reps, None
+        # 2) pruned query against the persisted tier. ids are unique
+        # across the stream, so in the normal flow a query never meets
+        # its own id; a batch retried after its add committed would
+        # find each vector under its own id at sim 1.0, reject it and
+        # overwrite its epoch sink empty, so same-id hits are excluded
+        # (``_IngestGate``'s replay contract). k+1 so the
+        # excluded self can't shadow a true duplicate out of the
+        # window on replay; rejection depends only on the MAX non-self
+        # sim ≥ τ, so normal-flow decisions are bit-identical to the
+        # plain k query. return_probes hands back the query's
+        # rank-ordered level-1 assignment — its top-1 rows ARE the
+        # append's hard membership supers (same kernel, same
+        # (distance, index) tie rule), so the batch's level-1 matmul
+        # runs once per step.
+        topk, probes = ann_ivf_hier_topk_persisted(
+            spark, idx_dir, None, reps, k=k + 1, return_probes=True
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(out_dir)
-        .select("vec_id", "batch")
+        hits = (
+            topk.filter(
+                (F.col("sim") >= threshold)
+                & (F.col("query_id") != F.col("neighbor_id"))
+            )
+            .select(F.col("query_id").alias("vec_id"))
+            .distinct()
+        )
+
+        def append(committed: DataFrame) -> None:
+            # the checkpointed probe frame covers reps ⊇ committed
+            # (committed rows are bitwise copies of admitted reps
+            # through the parquet sink)
+            add_to_ann_index(spark, idx_dir, committed, preassigned=probes)
+            if refresh_recall_curve and bid > 0 and bid % refresh_recall_curve == 0:
+                # post-append: audit the corpus the NEXT batch will
+                # query (its lease nests inside the held work-dir lease)
+                persist_recall_audit(
+                    spark, idx_dir, probe_settings=(1, 2, 4), n_sample=32
+                )
+
+        return reps.join(hits, "vec_id", "left_anti"), append
+
+    return gate.run(
+        "incremental_ann_ingest",
+        batches,
+        ("vec_id", "embedding"),
+        cache_key,
+        state_partitions,
+        check,
+        sink_cols=("vec_id", "embedding"),
+        out_cols=("vec_id", "batch"),
+        tiers=[("compact", _have_index, partial(compact_ann_index, spark, idx_dir))],
+        auto_compact=auto_compact,
     )

@@ -1427,6 +1427,52 @@ def test_ann_index_add_preassigned_parity(spark, tmp_path):
         )
 
 
+def test_ann_index_add_preassigned_must_cover_batch(spark, tmp_path):
+    """add_to_ann_index(preassigned=...) over a probe frame that misses
+    some batch ids must raise naming them, not append the covered rest
+    and silently drop the others."""
+    import numpy as np
+    from pyspark.sql import types as T
+
+    from actuarial_reserve_modelling_spark.operators.similarity import (
+        add_to_ann_index,
+        ann_ivf_hier_topk_persisted,
+        ivf_hier_build,
+        persist_ann_index,
+    )
+
+    rng = np.random.default_rng(7)
+    pts = rng.standard_normal((120, 8))
+    schema = T.StructType(
+        [
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("embedding", T.ArrayType(T.DoubleType())),
+        ]
+    )
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in pts[i]]) for i in range(120)], schema
+    )
+    batch = emb.filter(F.col("vec_id") % 20 == 0).select(
+        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
+    )
+    path = str(tmp_path / "tier")
+    index, super_cent = ivf_hier_build(emb)
+    persist_ann_index(index, super_cent, path, embeddings=emb)
+    # probes over a strict SUBSET of the batch: 100020, 100060 and
+    # 100100 are missing from them
+    _topk, probes = ann_ivf_hier_topk_persisted(
+        spark, path, None, batch.filter(F.col("vec_id") % 40 == 0), k=2,
+        return_probes=True,
+    )
+    with pytest.raises(
+        ValueError, match=r"does not cover batch ids \[100020, 100060, 100100\]"
+    ):
+        add_to_ann_index(spark, path, batch, preassigned=probes)
+    # nothing was appended: the batch ids are still absent from the tier
+    members = spark.read.parquet(path + "/members")
+    assert members.filter(F.col("vec_id") >= 100000).count() == 0
+
+
 @pytest.mark.slow
 def test_ann_index_delete_semantics(spark, tmp_path):
     """delete_from_ann_index: deleted ids vanish from the member rows,

@@ -431,7 +431,7 @@ def test_incremental_neardup_ingest_matches_reference(spark):
             batches,
             cache_key="test_neardup_gate_c",
             threshold=0.95,
-            compact_every=2,
+            auto_compact=1,
         ).collect()
     }
     assert got == got_compacted
@@ -532,7 +532,7 @@ def test_ingest_dedup_with_compaction_preserves_output(spark, tmp_path):
     compacted = {
         (r["doc_id"], r["batch"])
         for r in incremental_ingest_dedup(
-            spark, batches, cache_key="test_compact_on", compact_every=2
+            spark, batches, cache_key="test_compact_on", auto_compact=1
         ).collect()
     }
     assert plain == compacted
@@ -661,7 +661,7 @@ def test_incremental_semantic_ingest_closed_form_and_compaction(spark):
     got_compacted = {
         (r["vec_id"], r["batch"])
         for r in incremental_semantic_ingest(
-            spark, batches, cache_key="test_sem_ingest_c", compact_every=2
+            spark, batches, cache_key="test_sem_ingest_c", auto_compact=1
         ).collect()
     }
     assert got_compacted == got
@@ -711,7 +711,7 @@ def test_incremental_ann_ingest_closed_form_and_compaction(spark):
     got_compacted = {
         (r["vec_id"], r["batch"])
         for r in incremental_ann_ingest(
-            spark, batches, cache_key="test_ann_ingest_c", compact_every=1
+            spark, batches, cache_key="test_ann_ingest_c", auto_compact=1
         ).collect()
     }
     assert got_compacted == got
@@ -1156,3 +1156,31 @@ def test_ann_ingest_gate_refreshes_recall_curve(spark, tmp_path):
     # the curve was measured after batch 2's append: its corpus stamp
     # covers at least the first two batches' admitted rows
     assert curve[0]["n_corpus"] >= batches[0].count() + batches[1].count()
+    # a second call on the same work_dir resumes from the persisted
+    # index (the checkpoint binds the first call's staged source, so it
+    # goes): fresh vectors are admitted, exact twins of the first call's
+    # rows are rejected, and so are twins of the fresh ones one batch
+    # later, which only the resumed call's batch-0 append can catch
+    import shutil
+
+    shutil.rmtree(work + "/ckpt")
+    src = emb.filter(F.col("vec_id") % 10 == 0)
+    fresh = src.select(
+        (F.col("vec_id") + 500_000).alias("vec_id"),
+        F.transform("embedding", lambda x: -x).alias("embedding"),
+    )
+
+    def shifted(frame, offset):
+        return frame.select((F.col("vec_id") + offset).alias("vec_id"), "embedding")
+
+    resumed = {
+        (r["vec_id"], r["batch"])
+        for r in incremental_ann_ingest(
+            spark,
+            [fresh.unionByName(shifted(src, 400_000)), shifted(fresh, 100_000)],
+            cache_key="test_ann_ingest_recall_resume",
+            work_dir=work,
+        ).collect()
+        if r["vec_id"] >= 400_000
+    }
+    assert resumed == {(r["vec_id"], 0) for r in fresh.collect()}
