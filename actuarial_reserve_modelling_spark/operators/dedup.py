@@ -23,13 +23,27 @@ Scale design (the 100 TB story):
 
 from __future__ import annotations
 
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from actuarial_reserve_modelling_spark.operators.sigparams import accept_presigned
 from actuarial_reserve_modelling_spark.sources.lease import leased
+from actuarial_reserve_modelling_spark.sources.tiers import (
+    Dataset,
+    Layout,
+    _write_index_stats,
+    add_rows,
+    auto_parts,
+    delete_rows,
+    hash_part,
+    read_meta,
+    route_pruned,
+    write_meta,
+)
 
 # Tokens: distinct, non-empty, whitespace-split. Kept identical to the
 # DuckDB oracle's string_split + filter + DISTINCT.
@@ -1135,6 +1149,15 @@ def build_dedup_index(
     )
 
 
+# fingerprints/ is the id side (verify and delete), banded/ the lookup side
+_DEDUP = Layout(
+    "doc_id",
+    Dataset("fingerprints", "part"),
+    Dataset("banded", "bpart", cell=("band", "bucket")),
+)
+_read_banded_pruned = _DEDUP.lookup.read  # banded/ pruned to a bpart set
+
+
 @leased("path")
 def persist_dedup_index(
     index: DataFrame,
@@ -1157,8 +1180,8 @@ def persist_dedup_index(
       lands new files only in its batch's buckets;
     * ``banded/`` — (doc_id, sz, band, bucket) hive-PARTITIONED BY
       ``bpart = pmod(bucket, k_band_parts)`` and sorted by (band,
-      bucket) within files: the LOOKUP-side projection (r10 verdict #1
-      — the dedup twin of the ANN tier's l34 move). An ingest batch
+      bucket) within files: the LOOKUP-side projection (the dedup twin
+      of the ANN tier's l34 move). An ingest batch
       computes its own bucket set (bounded: ≤ |batch|·bands values)
       and ``minhash_dedup_against_index_persisted`` reads ONLY those
       buckets' partition directories — per-batch index bytes scale
@@ -1169,7 +1192,7 @@ def persist_dedup_index(
       deliberate: partitioning by (band, bpart) would multiply the
       directory count by ``bands`` for identical touched bytes, and at
       bench scale the extra listing/footer overhead dominated the data
-      read (profiled r11) — one level keeps directories few and large
+      read (profiled) — one level keeps directories few and large
       while the in-file (band, bucket) sort preserves row-group
       skipping;
     * ``meta/`` — the signature parameters (bands, rows_per_band,
@@ -1202,11 +1225,11 @@ def persist_dedup_index(
     never reach small-files territory; per-dir bytes then stay
     CONSTANT as the corpus grows, so a batch's banded read is capped
     at ~|batch|·bands·150 KB at ANY corpus size (the verify side is
-    flat in |candidates| the same way) — versus the pre-r11 operator's
+    flat in |candidates| the same way) — versus the full-scan operator's
     unbounded O(corpus) re-band per batch.
 
     The caller-asserted signature parameters are VALIDATED against the
-    index frame before anything is written (r10 ADVICE): one sampled
+    index frame before anything is written: one sampled
     row must carry a sig of length bands·rows_per_band AND re-signing
     that row's htok with the claimed seed must reproduce its sig
     bitwise — otherwise meta/ would lie and ``add_to_dedup_index``
@@ -1217,13 +1240,10 @@ def persist_dedup_index(
     # fingerprint write, banded write) and its lineage usually holds the
     # MinHash kernel — pin it once so signatures are computed once
     index = index.localCheckpoint(eager=False)
-    # counted unconditionally (r12): n_rows seeds the advisory stats/
-    # the adaptive lookup routing consumes, not just the auto-sizing
+    # counted unconditionally: n_rows seeds the advisory stats/ the
+    # adaptive lookup routing consumes, not just the auto-sizing
     n_rows = index.count()
-    if n_buckets is None:
-        n_buckets = max(16, min(65536, n_rows // 500))
-    if k_band_parts is None:
-        k_band_parts = max(8, min(32768, n_rows // 1000))
+    n_buckets, k_band_parts = auto_parts(n_rows, n_buckets, k_band_parts)
     sample = index.select("doc_id", "htok", "sig").limit(1).collect()
     if sample:
         r = sample[0]
@@ -1249,37 +1269,23 @@ def persist_dedup_index(
                 "refusing to persist lying meta"
             )
     rows = index.select(
-        "doc_id",
-        "htok",
-        "sig",
-        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_buckets)).cast("int").alias("part"),
+        "doc_id", "htok", "sig", hash_part(n_buckets, "doc_id").alias("part")
     )
-    rows.repartition(F.col("part")).write.mode("overwrite").partitionBy(
-        "part"
-    ).parquet(path + "/fingerprints")
-    _banded_projection(index, bands, rows_per_band, k_band_parts).repartition(
-        F.col("bpart")
-    ).sortWithinPartitions("band", "bucket").write.mode("overwrite").partitionBy(
-        "bpart"
-    ).parquet(path + "/banded")
-    # advisory corpus size for the adaptive lookup routing (r12) —
-    # before meta/ so the commit marker still lands last
-    from actuarial_reserve_modelling_spark.operators.similarity import (
-        _one_row_meta,
-        _write_index_stats,
+    _DEDUP.ids.write(rows, path, "overwrite")
+    _DEDUP.lookup.write(
+        _banded_projection(index, bands, rows_per_band, k_band_parts), path, "overwrite"
     )
-
     _write_index_stats(spark, path, n_rows)
-    _one_row_meta(
+    write_meta(
         spark,
+        path,
         bands=int(bands),
         rows_per_band=int(rows_per_band),
         seed=int(seed),
         n_buckets=int(n_buckets),
         k_band_parts=int(k_band_parts),
         layout_version=2,
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/meta")
-    _DEDUP_META_CACHE.pop(path, None)
+    )
 
 
 def _banded_projection(
@@ -1303,36 +1309,40 @@ def _banded_projection(
     )
 
 
-_DEDUP_META_CACHE: dict[str, dict] = {}
-
-
 def read_dedup_index_meta(spark: SparkSession, path: str) -> dict:
-    """Signature parameters persisted with the fingerprint tier.
-    Cached per process — meta/ is immutable once written
-    (``persist_dedup_index`` overwrites it and evicts; add/delete
-    never touch it)."""
-    if path in _DEDUP_META_CACHE:
-        return dict(_DEDUP_META_CACHE[path])
-    r = spark.read.parquet(path + "/meta").first()
-    d = r.asDict()
-    meta = {
-        "bands": int(r["bands"]),
-        "rows_per_band": int(r["rows_per_band"]),
-        "seed": int(r["seed"]),
-        "n_buckets": int(r["n_buckets"]),
-        # pre-r11 (layout_version 1) tiers have no banded projection;
-        # k_band_parts=None signals consumers to take the full-index path
-        "k_band_parts": int(d["k_band_parts"]) if d.get("k_band_parts") is not None else None,
-        "layout_version": int(r["layout_version"]),
-    }
-    _DEDUP_META_CACHE[path] = dict(meta)
-    return meta
+    """Signature parameters persisted with the fingerprint tier, cached
+    per process. Tiers persisted before the banded projection existed
+    (layout_version 1) have no k_band_parts: None signals consumers to
+    take the full-index path."""
+    return read_meta(
+        spark,
+        path,
+        "persist_dedup_index",
+        {
+            **dict.fromkeys(("bands", "rows_per_band", "seed", "n_buckets"), int),
+            "k_band_parts": lambda v: None if v is None else int(v),
+            "layout_version": int,
+        },
+    )
+
+
+def _lookup_projection(meta: dict):
+    """The tier's id-side → banded projection, or None on a layout
+    without banded/."""
+    if meta["k_band_parts"] is None:
+        return None
+    return partial(
+        _banded_projection,
+        bands=meta["bands"],
+        rows_per_band=meta["rows_per_band"],
+        k_band_parts=meta["k_band_parts"],
+    )
 
 
 def load_dedup_index(spark: SparkSession, path: str) -> DataFrame:
     """Reload the fingerprint rows in the exact shape
     ``minhash_dedup_against_index`` consumes (doc_id, htok, sig)."""
-    return spark.read.parquet(path + "/fingerprints").select("doc_id", "htok", "sig")
+    return _DEDUP.ids.read(spark, path).select("doc_id", "htok", "sig")
 
 
 @leased("path")
@@ -1370,10 +1380,6 @@ def add_to_dedup_index(
     the tier."""
     meta = read_dedup_index_meta(spark, path)
     if presigned is not None:
-        from actuarial_reserve_modelling_spark.operators.sigparams import (
-            accept_presigned,
-        )
-
         accept_presigned(presigned, "minhash", meta, "add_to_dedup_index")
         signed = presigned.join(
             new_docs.select("doc_id"), "doc_id", "leftsemi"
@@ -1386,92 +1392,15 @@ def add_to_dedup_index(
             seed=meta["seed"],
             text_col=text_col,
         )
-    batch = signed.select(
-        "doc_id",
-        "htok",
-        "sig",
-        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(meta["n_buckets"]))
-        .cast("int")
-        .alias("part"),
+    add_rows(
+        spark,
+        path,
+        _DEDUP,
+        signed.select("doc_id", "htok", "sig"),
+        meta["n_buckets"],
+        _lookup_projection(meta),
+        check_existing,
     )
-    if check_existing:
-        # ONE aggregate yields BOTH prune lists (r13 — was two collect
-        # jobs): the banded projection's rows carry the id-hash part,
-        # so collect_set over it gives the fingerprint-side parts and
-        # the banded-side bparts in a single pass over the PRE-anti-join
-        # batch. Supersets are fine on both sides — pruning with a
-        # superset reads a few more directories, never misses a row the
-        # anti-join needs.
-        if meta["k_band_parts"] is not None:
-            pre_b = _banded_projection(
-                batch, meta["bands"], meta["rows_per_band"], meta["k_band_parts"]
-            )
-            lists = pre_b.agg(
-                F.collect_set("bpart").alias("bp"),
-                F.collect_set(
-                    F.pmod(F.xxhash64(F.col("doc_id")), F.lit(meta["n_buckets"]))
-                    .cast("int")
-                ).alias("p"),
-            ).first()
-            bparts = [int(x) for x in lists["bp"]]
-            batch_parts = [int(x) for x in lists["p"]]
-        else:
-            batch_parts = [
-                int(r["part"]) for r in batch.select("part").distinct().collect()
-            ]
-        existing = (
-            spark.read.parquet(path + "/fingerprints")
-            .filter(F.col("part").isin(batch_parts))
-            .select(F.col("doc_id").cast("long").alias("doc_id"))
-        )
-        batch = batch.join(existing, "doc_id", "left_anti")
-    # the surviving batch feeds BOTH appends — materialize it once
-    batch = batch.localCheckpoint(eager=False)
-    if meta["k_band_parts"] is not None:
-        newb = _banded_projection(
-            batch, meta["bands"], meta["rows_per_band"], meta["k_band_parts"]
-        )
-        if check_existing:
-            # crash-retry healing for the banded side: drop docs whose
-            # banded rows already landed, reading only the batch's own
-            # bpart directories (≤ k_band_parts of them)
-            existing_b = _read_banded_pruned(spark, path, bparts).select(
-                F.col("doc_id").cast("long").alias("doc_id")
-            )
-            newb = newb.join(existing_b.distinct(), "doc_id", "left_anti")
-        newb.repartition(F.col("bpart")).sortWithinPartitions(
-            "band", "bucket"
-        ).write.mode("append").partitionBy("bpart").parquet(path + "/banded")
-    batch.repartition(F.col("part")).write.mode("append").partitionBy(
-        "part"
-    ).parquet(path + "/fingerprints")
-    # advisory stats for the adaptive routing (r12): incremented AFTER
-    # both appends (a crash before this line undercounts, which only
-    # biases routing toward the full scan); the count is over the
-    # checkpointed batch frame, so it is batch-bounded and re-uses the
-    # materialization the writes already paid for
-    from actuarial_reserve_modelling_spark.operators.similarity import (
-        _write_index_stats,
-        read_index_stats,
-    )
-
-    n_before = read_index_stats(spark, path)
-    if n_before is not None:
-        _write_index_stats(spark, path, n_before + batch.count())
-
-
-def _read_banded_pruned(
-    spark: SparkSession, path: str, bparts: list[int]
-) -> DataFrame:
-    """The banded projection restricted to a bounded bpart set — the
-    partition-pruned read every per-batch consumer uses. A plain
-    ``bpart IN (...)`` over the hive partition column, so Catalyst
-    prunes at file-listing time (PartitionFilters, zero data files
-    outside the set)."""
-    banded = spark.read.parquet(path + "/banded")
-    if not bparts:
-        return banded.limit(0)
-    return banded.filter(F.col("bpart").isin(sorted(set(int(b) for b in bparts))))
 
 
 @leased("path")
@@ -1483,7 +1412,7 @@ def delete_from_dedup_index(
 ) -> None:
     """Remove documents from the persisted fingerprint tier
     (retention / right-to-be-forgotten on the dedup side — the l36
-    analogue the r9 verdict flagged as missing): anti-join + dynamic
+    analogue): anti-join + dynamic
     partition overwrite of ONLY the partitions that held deleted rows,
     in BOTH datasets — the id-hash buckets of fingerprints/ and the
     (band, bpart) directories of the banded projection. The banded
@@ -1492,110 +1421,17 @@ def delete_from_dedup_index(
     buckets, BEFORE those buckets are rewritten), so the delete cost is
     O(deleted docs' partition footprint), never an index scan.
 
-    Crash contract: banded/ is rewritten FIRST, then fingerprints/.
-    Re-running the same delete converges — a retry recomputes the
-    doomed set from whatever fingerprints still holds; if the banded
-    rewrite already happened it no-ops, and a crash after only the
-    banded rewrite merely hides the doomed docs from pruned lookups
-    until the retry finishes (staleness in the direction the delete is
-    already going, never a resurrected doc). Deleted documents generate
-    no candidates in any subsequent against-index pass — gone from both
-    the banding and the verify side."""
-    from actuarial_reserve_modelling_spark.operators.similarity import (
-        _delete_partitioned_rows,
-    )
-
+    Crash contract (the lookup-first rule of ``sources/tiers.py``):
+    banded/ is rewritten FIRST, then fingerprints/; re-running the same
+    delete converges, and a crash after only the banded rewrite merely
+    hides the doomed docs from pruned lookups until the retry finishes.
+    Deleted documents generate no candidates in any subsequent
+    against-index pass — gone from both the banding and the verify
+    side."""
     meta = read_dedup_index_meta(spark, path)
-    n_before = n_doomed = None
-    if meta["k_band_parts"] is not None:
-        from actuarial_reserve_modelling_spark.operators.similarity import (
-            read_index_stats,
-        )
-
-        del_ids = ids.select(F.col(id_col).cast("long").alias("doc_id")).distinct()
-        parts = [
-            int(r["part"])
-            for r in del_ids.select(
-                F.pmod(F.xxhash64(F.col("doc_id")), F.lit(meta["n_buckets"]))
-                .cast("int")
-                .alias("part")
-            )
-            .distinct()
-            .collect()
-        ]
-        doomed = (
-            spark.read.parquet(path + "/fingerprints")
-            .filter(F.col("part").isin(parts))
-            .join(del_ids, "doc_id", "left_semi")
-        )
-        n_before = read_index_stats(spark, path)
-        if n_before is not None:
-            # advisory-stats decrement (r12): counted BEFORE the
-            # rewrites mutate fingerprints/ (doomed derives from it);
-            # cost bounded by the deleted ids' bucket footprint
-            doomed = doomed.localCheckpoint(eager=False)
-            n_doomed = doomed.count()
-        doomed_banded = _banded_projection(
-            doomed, meta["bands"], meta["rows_per_band"], meta["k_band_parts"]
-        )
-        bparts = [
-            int(r["bpart"]) for r in doomed_banded.select("bpart").distinct().collect()
-        ]
-        _delete_banded_rows(spark, path + "/banded", del_ids, bparts)
-    _delete_partitioned_rows(spark, path + "/fingerprints", ids, id_col, "part")
-    if n_before is not None and n_doomed is not None:
-        from actuarial_reserve_modelling_spark.operators.similarity import (
-            _write_index_stats,
-        )
-
-        _write_index_stats(spark, path, n_before - n_doomed)
-
-
-def _delete_banded_rows(
-    spark: SparkSession,
-    dataset: str,
-    del_ids: DataFrame,
-    bparts: list[int],
-) -> None:
-    """Partition-pruned delete for the banded layout: read only the
-    bpart directories known to hold doomed rows, anti-join on doc_id,
-    drop fully-emptied directories, and dynamic-overwrite the survivors
-    (same crash contract as ``_delete_partitioned_rows``; a delete that
-    empties the whole dataset leaves one zero-row schema-bearing file
-    so readers keep working)."""
-    from actuarial_reserve_modelling_spark.sources.sinks import overwrite_partitions
-
-    if not bparts:
-        return
-    rows = _read_banded_pruned(spark, dataset.rsplit("/banded", 1)[0], bparts)
-    survivors = rows.join(del_ids, "doc_id", "left_anti").localCheckpoint()
-    kept = {int(r["bpart"]) for r in survivors.select("bpart").distinct().collect()}
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for bpart in set(bparts) - kept:
-        hp = jvm.org.apache.hadoop.fs.Path(f"{dataset}/bpart={bpart}")
-        hp.getFileSystem(hconf).delete(hp, True)
-    if kept:
-        overwrite_partitions(
-            survivors.repartition(F.col("bpart")).sortWithinPartitions(
-                "band", "bucket"
-            ),
-            dataset,
-            ["bpart"],
-        )
-    else:
-        root = jvm.org.apache.hadoop.fs.Path(dataset)
-        fs = root.getFileSystem(hconf)
-        remaining = [
-            st.getPath().getName()
-            for st in fs.listStatus(root)
-            if st.isDirectory() and st.getPath().getName().startswith("bpart=")
-        ]
-        if not remaining:
-            survivors.drop("bpart").limit(0).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{dataset}/bpart={sorted(bparts)[0]}")
-    spark.catalog.refreshByPath(dataset)
+    delete_rows(
+        spark, path, _DEDUP, ids, id_col, meta["n_buckets"], _lookup_projection(meta)
+    )
 
 
 @leased("path")
@@ -1604,21 +1440,13 @@ def compact_dedup_index(
 ) -> int:
     """Fold append-accumulated small files in BOTH persisted dedup
     datasets — the fingerprint tier's id-hash buckets and (on v2
-    layouts) the banded projection's (band, bpart) directories (see
-    operators.similarity.compact_partitioned_index). Returns the total
+    layouts) the banded projection's bpart directories (see
+    ``sources.tiers.compact_partitioned_index``). Returns the total
     number of partitions compacted across the two."""
-    from actuarial_reserve_modelling_spark.operators.similarity import (
-        compact_partitioned_index,
-    )
-
-    n = compact_partitioned_index(
-        spark, path + "/fingerprints", "part", max_files_per_partition
-    )
+    n = 0
     if read_dedup_index_meta(spark, path)["k_band_parts"] is not None:
-        n += compact_partitioned_index(
-            spark, path + "/banded", "bpart", max_files_per_partition
-        )
-    return n
+        n = _DEDUP.lookup.compact(spark, path, max_files_per_partition)
+    return n + _DEDUP.ids.compact(spark, path, max_files_per_partition)
 
 
 def _banded_buckets(index: DataFrame, id_alias: str, bands: int, rows_per_band: int) -> DataFrame:
@@ -1742,8 +1570,8 @@ def _against_index_full_scan(
     )
 
 
-# Adaptive routing crossover for the persisted dedup tier (r12): the
-# r11 stress sweep (tools/dedup_index_stress.py, BASELINE.md) measured
+# Adaptive routing crossover for the persisted dedup tier: the stress
+# sweep (tools/dedup_index_stress.py, BASELINE.md) measured
 # the pruned lookup overtaking the full scan at a 512k-doc corpus for a
 # 200-doc × 16-band batch (3,200 banded cells) — pruned 12.3 s vs full
 # 13.1 s, with full ahead at 32k/128k where fixed driver-job overhead
@@ -1764,8 +1592,7 @@ def minhash_dedup_against_index_persisted(
 ) -> DataFrame:
     """``minhash_dedup_against_index`` against a PERSISTED tier, with
     per-batch cost O(batch's bucket footprint) instead of O(index) —
-    the r10 verdict's one remaining scale-soft pattern, fixed the way
-    l34 fixed the ANN tier:
+    fixed the way l34 fixed the ANN tier:
 
     1. the batch signs itself with the persisted parameters and bands
        into its own (band, bucket) set — bounded at ≤ |batch|·bands;
@@ -1784,22 +1611,22 @@ def minhash_dedup_against_index_persisted(
     The driver-side collects are bpart values (≤ k_band_parts ints)
     and candidate id-hash buckets (≤ n_buckets ints) — nothing scales
     with the corpus. Answers are identical to the full-scan operator
-    under the same parameters (pinned by the twin pytest); pre-r11
-    layouts without a banded projection fall back to the full path so
+    under the same parameters (pinned by the twin pytest); layouts
+    without a banded projection fall back to the full path so
     old tiers keep answering.
 
     Same precondition as the full-scan operator: batch doc_ids should
     be disjoint from index doc_ids unless ``exclude_same_id=False``.
 
-    ``route`` (r12): ``"auto"`` (default) picks pruned vs full scan
+    ``route``: ``"auto"`` (default) picks pruned vs full scan
     from the tier's advisory row count (stats/, maintained by
     persist/add/delete) against the batch's banded-cell footprint —
     below ``_DEDUP_ROUTE_CELLS_FACTOR`` · |batch|·bands the pruned
     path's ~6 fixed driver jobs cost more than scanning the whole
-    (still-small) index, the measured small-scale regression the r11
-    verdict asked to close. Both sides are answer-identical (twin
-    pytest), so routing is pure performance; unknown stats (pre-r12
-    tier, crashed stats rewrite) routes pruned — the scale-safe side.
+    (still-small) index, a measured small-scale regression. Both sides
+    are answer-identical (twin pytest), so routing is pure performance;
+    unknown stats (a tier without stats/, crashed stats rewrite) routes
+    pruned — the scale-safe side.
     ``"pruned"`` / ``"full"`` force a side (stress tools, tests).
 
     ``presigned``: an existing ``build_dedup_index`` output
@@ -1811,18 +1638,10 @@ def minhash_dedup_against_index_persisted(
     signature length against meta/ so foreign-parameter frames fail
     loudly. Answers are identical either way (deterministic
     signatures)."""
-    from actuarial_reserve_modelling_spark.operators.similarity import (
-        read_index_stats,
-    )
-
     if route not in ("auto", "pruned", "full"):
         raise ValueError(f"route must be auto|pruned|full, got {route!r}")
     meta = read_dedup_index_meta(spark, path)
     if presigned is not None:
-        from actuarial_reserve_modelling_spark.operators.sigparams import (
-            accept_presigned,
-        )
-
         accept_presigned(
             presigned, "minhash", meta, "minhash_dedup_against_index_persisted"
         )
@@ -1841,22 +1660,14 @@ def minhash_dedup_against_index_persisted(
         )
     bands, rpb = meta["bands"], meta["rows_per_band"]
     new_docs = new_docs.localCheckpoint(eager=False)
-    if route == "auto":
-        # decide BEFORE signing: the decision needs only |batch| (a
-        # count over the checkpointed batch — no MinHash kernel), so a
-        # full-scan route skips the banded-footprint job entirely and
-        # lands at the bare full twin's wall (the r12 stress sweep
-        # showed the sign-then-decide order costing the full route a
-        # batch-signing job it never needed)
-        n_index = read_index_stats(spark, path)
-        use_pruned = (
-            n_index is None
-            or n_index
-            >= _DEDUP_ROUTE_CELLS_FACTOR * new_docs.count() * bands
-        )
-    else:
-        use_pruned = route == "pruned"
-    if not use_pruned:
+    # decided BEFORE signing: the decision needs only |batch| (a count
+    # over the checkpointed batch — no MinHash kernel), so a full-scan
+    # route skips the banded-footprint job entirely and lands at the bare
+    # full twin's wall
+    if not route_pruned(
+        spark, path, route,
+        lambda: _DEDUP_ROUTE_CELLS_FACTOR * new_docs.count() * bands,
+    ):
         return minhash_dedup_against_index(
             new_docs,
             load_dedup_index(spark, path),
@@ -1885,23 +1696,15 @@ def minhash_dedup_against_index_persisted(
     ).localCheckpoint(eager=False)
     # ONE footprint job: materializes the banded projection and returns
     # the pruned read's directory set
-    bparts = [
-        int(r["bpart"]) for r in new_banded.select("bpart").distinct().collect()
-    ]
-    idx_banded = _read_banded_pruned(spark, path, bparts)
+    bparts = _DEDUP.lookup.parts_of(new_banded)
     # exact skew guard over the pruned read (step 2 above)
-    bucket_sizes = idx_banded.groupBy("band", "bucket").agg(
-        F.count(F.lit(1)).alias("_n")
-    )
-    idx_banded = (
-        idx_banded.join(bucket_sizes, ["band", "bucket"])
-        .filter(F.col("_n") <= max_bucket_size)
-        .select(
-            F.col("doc_id").alias("index_id"),
-            F.col("sz").alias("_sz_index_id"),
-            "band",
-            "bucket",
-        )
+    idx_banded = _DEDUP.lookup.read_guarded(
+        spark, path, bparts, max_bucket_size
+    ).select(
+        F.col("doc_id").alias("index_id"),
+        F.col("sz").alias("_sz_index_id"),
+        "band",
+        "bucket",
     )
     cand = new_banded.select(
         F.col("doc_id").alias("new_id"),
@@ -1920,24 +1723,15 @@ def minhash_dedup_against_index_persisted(
         .distinct()
         # the candidate set is consumed twice (id-bucket collect below +
         # verify join) — lazily pinned so the banded join runs once,
-        # materialized BY the cparts collect (r12: one job where r11
-        # spent two — eager checkpoint then a separate collect)
+        # materialized BY the cparts collect (one job, not an eager
+        # checkpoint and then a separate collect)
         .localCheckpoint(eager=False)
     )
-    cparts = [
-        int(r["part"])
-        for r in cand.select(
-            F.pmod(F.xxhash64(F.col("index_id")), F.lit(meta["n_buckets"]))
-            .cast("int")
-            .alias("part")
-        )
-        .distinct()
-        .collect()
-    ]
-    fp = (
-        spark.read.parquet(path + "/fingerprints")
-        .filter(F.col("part").isin(cparts))
-        .select(F.col("doc_id").alias("index_id"), F.col("htok").alias("tok2"))
+    cparts = _DEDUP.ids.parts_of(
+        cand.select(hash_part(meta["n_buckets"], "index_id").alias("part"))
+    )
+    fp = _DEDUP.ids.read(spark, path, cparts).select(
+        F.col("doc_id").alias("index_id"), F.col("htok").alias("tok2")
     )
     joined = cand.join(
         new_index.select(F.col("doc_id").alias("new_id"), F.col("htok").alias("tok1")),

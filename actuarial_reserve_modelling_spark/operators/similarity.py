@@ -30,27 +30,26 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from actuarial_reserve_modelling_spark.operators.sigparams import accept_presigned
 from actuarial_reserve_modelling_spark.sources.lease import leased
-
-
-def _is_path_missing(e: AnalysisException) -> bool:
-    """True only for the path-does-not-exist AnalysisException — the one
-    failure that legitimately means "this optional dataset was never
-    written". Everything else (permissions, corrupt footer, transient
-    storage) must propagate, never be treated as absence."""
-    cond = None
-    for attr in ("getCondition", "getErrorClass"):
-        fn = getattr(e, attr, None)
-        if fn is not None:
-            try:
-                cond = fn()
-            except Exception:
-                cond = None
-            if cond:
-                break
-    if cond:
-        return "PATH_NOT_FOUND" in cond
-    return "Path does not exist" in str(e)
+from actuarial_reserve_modelling_spark.sources.tiers import (
+    Dataset,
+    Layout,
+    _is_path_missing,
+    _write_index_stats,
+    add_rows,
+    auto_parts,
+    cached_piece,
+    delete_rows,
+    hash_part,
+    read_index_stats,
+    read_meta,
+    route_pruned,
+    write_meta,
+)
+from actuarial_reserve_modelling_spark.sources.tiers import (  # noqa: F401 — public name
+    compact_partitioned_index,
+)
 
 
 def _as_double(col: str):
@@ -2088,6 +2087,12 @@ def ann_ivf_hier_topk(
     )
 
 
+# The hierarchical index's partitioned datasets (supers/ and meta/ are
+# single-file and driver-resident).
+_MEMBERS = Dataset("members", "super")
+_CHILDREN = Dataset("children", "super")
+
+
 @leased("path")
 def persist_ann_index(
     index: DataFrame,
@@ -2117,15 +2122,15 @@ def persist_ann_index(
       vectors are stored, the layout version). Query/ingest paths
       default to the PERSISTED group_cap, so an index built with a
       non-default cap decodes its child-id slot stride correctly even
-      when the caller forgets to repeat the knob (r9 ADVICE).
+      when the caller forgets to repeat the knob.
 
     Pass ``embeddings`` (the corpus the index was built over) to store
     each member's VECTOR inside its members/ row — one extra array
     column of storage, bitwise-preserved by parquet — which is what
     makes the persisted QUERY path corpus-scan-free: the exact rerank
     reads candidate vectors out of the probed partitions instead of
-    joining ids back against the full corpus table (r9 verdict: at 10⁹
-    vectors the id-only layout pays a corpus scan per query batch).
+    joining ids back against the full corpus table (at 10⁹ vectors the
+    id-only layout pays a corpus scan per query batch).
     Omit it for the slim id-only layout when the corpus table is cheap
     to co-read (opt-out, not the default in the registry queries).
 
@@ -2136,7 +2141,7 @@ def persist_ann_index(
     members = index.filter(F.col(id_col).isNotNull()).select(id_col, "child", "super")
     n_members = None
     if embeddings is not None:
-        # LEFT join + loud mismatch checks (r10 ADVICE): an inner join
+        # LEFT join + loud mismatch checks: an inner join
         # would silently DROP members absent from the passed corpus
         # frame, and duplicate ids in it would silently DUPLICATE member
         # rows — both corrupt the index with no signal. A missing vector
@@ -2172,9 +2177,7 @@ def persist_ann_index(
             .alias("vec"),
             "super",
         )
-    members.repartition(F.col("super")).write.mode("overwrite").partitionBy(
-        "super"
-    ).parquet(path + "/members")
+    _MEMBERS.write(members, path, "overwrite")
     if n_members is not None:
         n_written = spark.read.parquet(path + "/members").count()
         if n_written != n_members:
@@ -2186,69 +2189,38 @@ def persist_ann_index(
                 "with a deduplicated corpus frame)"
             )
     children = index.filter(F.col(id_col).isNull()).select("child", "centroid", "super")
-    children.repartition(F.col("super")).write.mode("overwrite").partitionBy(
-        "super"
-    ).parquet(path + "/children")
+    _CHILDREN.write(children, path, "overwrite")
     sup_rows = [(i, [float(x) for x in row]) for i, row in enumerate(super_cent)]
     spark.createDataFrame(
         sup_rows, schema="super int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(path + "/supers")
-    _one_row_meta(
+    write_meta(
         spark,
+        path,
         group_cap=int(group_cap),
         has_vectors=embeddings is not None,
         layout_version=2,
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/meta")
-    _evict_index_cache(path)
-
-
-# Driver-resident pieces of persisted indexes are IMMUTABLE once
-# written (persist_* overwrites them; add/delete never touch them), so
-# a per-process cache is safe and saves 2-3 driver-side Spark jobs per
-# query batch — the fixed cost that dominates small-batch latency.
-# persist_* invalidates its own path; cross-process rebuilds can't be
-# cached stale because the cache is per process.
-_DRIVER_PIECE_CACHE: dict[tuple[str, str], object] = {}
-
-
-def _evict_index_cache(path: str) -> None:
-    for key in [k for k in _DRIVER_PIECE_CACHE if k[0] == path]:
-        del _DRIVER_PIECE_CACHE[key]
+    )
 
 
 def read_ann_index_meta(spark: SparkSession, path: str) -> dict:
     """Build parameters persisted alongside the index (``meta/``).
-    Pre-r10 layouts have no meta dataset — those return the historical
-    defaults so old indexes keep answering identically. ONLY a
-    genuinely-absent path takes that fallback, and the fallback is
-    never cached (r10 ADVICE): a transient read failure — permissions,
-    storage hiccup — must surface as an error, not silently pin the
-    historical defaults for the process lifetime and mis-decode the
-    child-id slot stride on an index built with a non-default
-    group_cap. Successful reads are cached per process (meta is
-    immutable post-persist)."""
-    key = (path, "ann_meta")
-    if key in _DRIVER_PIECE_CACHE:
-        return dict(_DRIVER_PIECE_CACHE[key])
-    try:
-        row = spark.read.parquet(path + "/meta").first()
-    except AnalysisException as e:
-        if not _is_path_missing(e):
-            raise
-        # pre-r10 layout (no meta/): historical defaults, NOT cached
-        return {"group_cap": _GROUP_CAP, "has_vectors": False, "layout_version": 1}
-    if row is None:
-        raise ValueError(
-            f"ann index meta at {path}/meta exists but holds no rows — "
-            "the index is corrupt; rebuild with persist_ann_index"
-        )
-    meta = {
-        "group_cap": int(row["group_cap"]),
-        "has_vectors": bool(row["has_vectors"]),
-        "layout_version": int(row["layout_version"]),
-    }
-    _DRIVER_PIECE_CACHE[key] = dict(meta)
-    return meta
+    Layouts from before meta/ existed return the historical defaults so
+    old indexes keep answering identically. ONLY a genuinely-absent path
+    takes that fallback, and the fallback is never cached: a transient
+    read failure — permissions, storage hiccup — must surface as an
+    error, not silently pin the historical defaults for the process
+    lifetime and mis-decode the child-id slot stride on an index built
+    with a non-default group_cap."""
+    return read_meta(
+        spark,
+        path,
+        "persist_ann_index",
+        {"group_cap": int, "has_vectors": bool, "layout_version": int},
+        missing=lambda e: {
+            "group_cap": _GROUP_CAP, "has_vectors": False, "layout_version": 1
+        },
+    )
 
 
 def load_ann_index(
@@ -2276,14 +2248,14 @@ def _load_ann_supers(spark: SparkSession, path: str) -> np.ndarray:
     """The driver-resident piece of a persisted index: the k1 super
     centroids, reloaded bitwise into the build's ndarray shape. Cached
     per process (supers/ is immutable post-persist)."""
-    key = (path, "ann_supers")
-    if key in _DRIVER_PIECE_CACHE:
-        return _DRIVER_PIECE_CACHE[key]
-    sup = spark.read.parquet(path + "/supers").orderBy("super").collect()
-    arr = np.array([np.asarray(r["centroid"], dtype=np.float64) for r in sup])
-    arr.setflags(write=False)
-    _DRIVER_PIECE_CACHE[key] = arr
-    return arr
+
+    def load() -> np.ndarray:
+        sup = spark.read.parquet(path + "/supers").orderBy("super").collect()
+        arr = np.array([np.asarray(r["centroid"], dtype=np.float64) for r in sup])
+        arr.setflags(write=False)
+        return arr
+
+    return cached_piece(path, "ann_supers", load)
 
 
 def _load_ann_frames(
@@ -2296,12 +2268,8 @@ def _load_ann_frames(
     into the ``ann_ivf_hier_topk_indexed`` input frame, optionally
     pruned to the probed supers (split out of ``load_ann_index`` so the
     persisted query path reads the supers dataset exactly once)."""
-    members = spark.read.parquet(path + "/members")
-    children = spark.read.parquet(path + "/children")
-    if supers is not None:
-        probe_set = sorted({int(s) for s in supers})
-        members = members.filter(F.col("super").isin(probe_set))
-        children = children.filter(F.col("super").isin(probe_set))
+    members = _MEMBERS.read(spark, path, supers)
+    children = _CHILDREN.read(spark, path, supers)
     mcols = [
         F.col(id_col).cast("long"),
         F.col("super").cast("int"),
@@ -2345,7 +2313,7 @@ def add_to_ann_index(
     through the routing kernel untouched into the member rows, keeping
     the corpus-scan-free query contract true across ingests.
 
-    A RETRIED batch is idempotent by default (r9 ADVICE): the batch is
+    A RETRIED batch is idempotent by default: the batch is
     anti-joined against the existing member ids of its hard supers —
     a read pruned to exactly those partition directories, so the check
     costs the probed fraction of the index, never a full scan. Ids
@@ -2373,13 +2341,13 @@ def add_to_ann_index(
     task; only the super-centroid matrix (k1·d, the driver-resident
     piece by design) is broadcast.
 
-    ``group_cap=None`` (default, r10 ADVICE) resolves to the PERSISTED
+    ``group_cap=None`` (default) resolves to the PERSISTED
     build cap from ``meta/`` — the same rule as
     ``ann_ivf_hier_topk_persisted`` — so an index persisted with a
     smaller memory-bounding cap keeps its per-task row bound on ingest
     without the caller repeating the knob.
 
-    ``preassigned`` (r15): a rank-ordered level-1 probe frame over a
+    ``preassigned``: a rank-ordered level-1 probe frame over a
     SUPERSET of the batch's ids (``ann_ivf_hier_topk_persisted(...,
     return_probes=True)`` — the ingest gate's query probes); a batch id
     it does not cover raises a ValueError naming the id. Its
@@ -2449,12 +2417,7 @@ def add_to_ann_index(
     if check_existing:
         # idempotent retry: drop batch ids already indexed, reading only
         # the batch's own hard-super partition directories
-        existing = (
-            spark.read.parquet(path + "/members")
-            .filter(F.col("super").isin(batch_supers))
-            .select(F.col(id_col).cast("long").alias(id_col))
-        )
-        newrows = newrows.join(existing, id_col, "left_anti")
+        newrows = _MEMBERS.unindexed(spark, path, newrows, id_col, batch_supers)
     split_target = max(1, (group_cap * 3) // 4)
     counts = newrows.groupBy("super").agg(F.count(F.lit(1)).alias("_gsz"))
     nsplit = F.ceil(F.col("_gsz") / F.lit(split_target)).cast("long")
@@ -2471,7 +2434,7 @@ def add_to_ann_index(
         F.explode(F.sequence(F.lit(0), (nsplit - 1).cast("int"))).alias("_slot"),
     )
     children = (
-        spark.read.parquet(path + "/children")
+        _CHILDREN.read(spark, path)
         .select(F.col("super").cast("int").alias("super"), "child", "centroid")
         .join(F.broadcast(slots), "super")
     )
@@ -2546,9 +2509,7 @@ def add_to_ann_index(
         .cogroup(children.groupBy("super", "_slot"))
         .applyInArrow(route, schema=out_schema)
     )
-    assigned.repartition(F.col("super")).write.mode("append").partitionBy(
-        "super"
-    ).parquet(path + "/members")
+    _MEMBERS.write(assigned, path)
 
 
 @leased("path")
@@ -2573,215 +2534,9 @@ def delete_from_ann_index(
     Also the compaction hook: rewritten supers come out at one file
     per partition, folding any append-accumulated small files.
 
-    CRASH SEMANTICS (r9 ADVICE): the delete is two filesystem steps —
-    dropping fully-emptied super directories, then dynamic-overwriting
-    the surviving touched supers — and is NOT atomic across them. It
-    IS self-healing: re-running the SAME delete converges (survivors
-    were checkpointed off the old files; a re-run recomputes the
-    touched list from whatever state remains and redoes only the
-    outstanding step), so the operational contract is
-    retry-until-success, the same as every S7 resumable sink. Emptied
-    directories are dropped FIRST so the worst mid-crash state is
-    "some survivors not yet rewritten" (deleted ids transiently
-    visible until the retry) rather than "emptied supers resurrected"
-    — the former is staleness, the latter would be wrong data with no
-    signal."""
-    _delete_partitioned_rows(spark, path + "/members", ids, id_col, "super")
-
-
-def _delete_partitioned_rows(
-    spark: SparkSession,
-    dataset: str,
-    ids: DataFrame,
-    id_col: str,
-    part_col: str,
-) -> None:
-    """Shared delete engine for every persisted partitioned index
-    dataset (ANN members/, IVF-PQ codes/, dedup fingerprints/):
-    anti-join the rows against the delete-set and dynamic-overwrite
-    ONLY the partitions that held deleted ids; partitions emptied
-    entirely lose their directory (dropped BEFORE the overwrite — see
-    delete_from_ann_index's crash contract: re-running the same delete
-    converges). All non-partition columns survive the rewrite."""
-    from actuarial_reserve_modelling_spark.sources.sinks import overwrite_partitions
-
-    rows = spark.read.parquet(dataset)
-    del_ids = ids.select(F.col(id_col).cast("long").alias(id_col)).distinct()
-    # the touched-partition list is the one driver-side collect: bounded
-    # by the number of DISTINCT partitions holding deleted ids (≤ the
-    # partition count, ~n^(1/4)–√n — a few thousand ints at 10⁹ rows)
-    touched = sorted(
-        int(r[part_col])
-        for r in rows.join(del_ids, id_col, "left_semi")
-        .select(part_col)
-        .distinct()
-        .collect()
-    )
-    if not touched:
-        return
-    # survivors read the very files the mutations below replace —
-    # materialize them OFF those files first (eager localCheckpoint),
-    # or the write's commit would invalidate its own input listing
-    survivors = (
-        rows.filter(F.col(part_col).isin(touched))
-        .join(del_ids, id_col, "left_anti")
-        .localCheckpoint()
-    )
-    kept = {
-        int(r[part_col]) for r in survivors.select(part_col).distinct().collect()
-    }
-    # a partition whose rows were ALL deleted is absent from the
-    # survivors frame, so dynamic overwrite would leave its old files
-    # in place — drop those directories explicitly, BEFORE the
-    # overwrite; paths constructed under the dataset root only
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for part in set(touched) - kept:
-        hp = jvm.org.apache.hadoop.fs.Path(f"{dataset}/{part_col}={part}")
-        hp.getFileSystem(hconf).delete(hp, True)
-    if kept:
-        overwrite_partitions(
-            survivors.repartition(F.col(part_col)), dataset, [part_col]
-        )
-    else:
-        # a delete that emptied every touched partition may have emptied
-        # the whole dataset (r10 ADVICE): a root with zero parquet files
-        # fails schema inference in every subsequent load_*/add_to_*
-        # read. If no partition directory survived anywhere, pin the
-        # schema with one zero-row file inside a partition directory —
-        # readers then see a well-typed empty index instead of an
-        # unable-to-infer-schema error.
-        root = jvm.org.apache.hadoop.fs.Path(dataset)
-        fs = root.getFileSystem(hconf)
-        remaining = [
-            st.getPath().getName()
-            for st in fs.listStatus(root)
-            if st.isDirectory() and st.getPath().getName().startswith(part_col + "=")
-        ]
-        if not remaining:
-            survivors.drop(part_col).limit(0).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{dataset}/{part_col}={touched[0]}")
-    # evict the pre-delete file listing from the shared status cache so
-    # readers in this session see the rewritten layout
-    spark.catalog.refreshByPath(dataset)
-
-
-@leased("dataset")
-def compact_partitioned_index(
-    spark: SparkSession,
-    dataset: str,
-    part_col: str | list[str],
-    max_files_per_partition: int = 4,
-) -> int:
-    """OPTIMIZE for the persisted index tiers: every ``add_to_*`` call
-    appends at least one file per touched partition, so a long-running
-    ingest accretes files forever — the #1 operational failure of
-    append-heavy layouts at 100 TB. This rewrites ONLY the partitions
-    whose file count exceeds ``max_files_per_partition`` (found with
-    one metadata-column aggregate — no data moves to the driver) via
-    the same dynamic-partition-overwrite primitive the deletes use, so
-    cold partitions keep their files byte-identical and the rewrite
-    cost scales with the hot fraction, not the index. Contents are
-    preserved exactly; a crash mid-overwrite re-heals on re-run (the
-    partition either kept its old files or has the new single file).
-    Returns the number of partitions compacted.
-
-    Wrappers: ``compact_ann_index`` (members/super),
-    ``compact_ivfpq_index`` (codes/cluster), and the dedup tier's
-    fingerprints/part and banded/(band, bpart) all route here —
-    ``part_col`` accepts a single column or the multi-column hive key
-    of two-level layouts."""
-    from actuarial_reserve_modelling_spark.sources.sinks import overwrite_partitions
-
-    part_cols = [part_col] if isinstance(part_col, str) else list(part_col)
-    hot = _hot_partitions_local(dataset, part_cols, max_files_per_partition)
-    rows = None
-    if hot is None:
-        # non-local root: fall back to the Spark metadata aggregate
-        rows = spark.read.parquet(dataset)
-        hot = [
-            tuple(int(r[c]) for c in part_cols)
-            for r in rows.select(*part_cols, F.col("_metadata.file_path").alias("f"))
-            .groupBy(*part_cols)
-            .agg(F.count_distinct("f").alias("nf"))
-            .filter(F.col("nf") > max_files_per_partition)
-            .collect()
-        ]
-    if not hot:
-        return 0
-    if rows is None:
-        rows = spark.read.parquet(dataset)
-    if len(part_cols) == 1:
-        cond = F.col(part_cols[0]).isin([t[0] for t in hot])
-    else:
-        cond = None
-        for t in hot:
-            term = F.lit(True)
-            for c, v in zip(part_cols, t):
-                term = term & (F.col(c) == v)
-            cond = term if cond is None else (cond | term)
-    packed = rows.filter(cond).localCheckpoint()
-    overwrite_partitions(
-        packed.repartition(*[F.col(c) for c in part_cols]), dataset, part_cols
-    )
-    spark.catalog.refreshByPath(dataset)
-    return len(hot)
-
-
-def _hot_partitions_local(
-    dataset: str, part_cols: list[str], cap: int
-) -> list[tuple] | None:
-    """Hot-partition detection by plain driver-side ``os.scandir`` —
-    returns the partition-value tuples whose data-file count exceeds
-    ``cap``, or None for non-local roots (caller falls back to the
-    Spark metadata aggregate). The gates run the threshold compact
-    EVERY batch, and the pre-r13 Spark aggregate paid a full
-    file-listing job per call — O(index directories) per batch at a
-    65k-directory tier, the exact growth term the per-batch-bounded
-    contract forbids. A scandir walk costs the same order of syscalls
-    WITHOUT the JVM job, plan, and listing-cache churn (~1 s/batch
-    measured in the t11 gate), and when nothing is hot — the steady
-    state — the whole check stays on the driver."""
-    import os
-    from urllib.parse import urlparse
-
-    p = urlparse(dataset)
-    if p.scheme not in ("", "file"):
-        return None
-    root = p.path if p.scheme == "file" else dataset
-    if not os.path.isdir(root):
-        return None
-
-    hot: list[tuple] = []
-
-    def _walk(d: str, depth: int, vals: tuple) -> None:
-        try:
-            entries = list(os.scandir(d))
-        except OSError:
-            return
-        if depth == len(part_cols):
-            n = sum(
-                1
-                for e in entries
-                if e.is_file()
-                and e.name.endswith(".parquet")
-                and not e.name.startswith(("_", "."))
-            )
-            if n > cap:
-                hot.append(vals)
-            return
-        prefix = part_cols[depth] + "="
-        for e in entries:
-            if e.is_dir() and e.name.startswith(prefix):
-                try:
-                    v = int(e.name[len(prefix):])
-                except ValueError:
-                    continue
-                _walk(e.path, depth + 1, vals + (v,))
-
-    _walk(root, 0, ())
-    return hot
+    Not atomic, but re-running the same delete converges (the crash
+    contract of ``sources/tiers.py``)."""
+    _MEMBERS.delete(spark, path, ids, id_col)
 
 
 @leased("path")
@@ -2790,9 +2545,7 @@ def compact_ann_index(
 ) -> int:
     """Fold append-accumulated small files in a persisted hierarchical
     ANN index's members/ partitions (see compact_partitioned_index)."""
-    return compact_partitioned_index(
-        spark, path + "/members", "super", max_files_per_partition
-    )
+    return _MEMBERS.compact(spark, path, max_files_per_partition)
 
 
 @leased("path")
@@ -2801,158 +2554,7 @@ def compact_ivfpq_index(
 ) -> int:
     """Fold append-accumulated small files in a persisted IVF-PQ
     index's codes/ partitions (see compact_partitioned_index)."""
-    return compact_partitioned_index(
-        spark, path + "/codes", "cluster", max_files_per_partition
-    )
-
-
-# ---------------------------------------------------------------------------
-# Advisory corpus-size stats for the persisted tiers (r12): one bigint,
-# maintained incrementally by persist/add/delete, consumed by the
-# adaptive pruned-vs-full routing in the against-index lookups. Kept in
-# its OWN stats/ dataset — NOT meta/ — because meta/ is the tier's
-# commit marker and must stay write-once (a crash mid-overwrite of
-# meta/ would brick the tier; a crash mid-overwrite of stats/ merely
-# loses the advisory count, and every consumer treats a missing or
-# unreadable stats/ as "unknown" and takes the conservative pruned
-# path). Stale-by-one-batch counts are harmless for the same reason:
-# routing is a performance decision, never a correctness one (both
-# paths are answer-identical, pinned by the twin pytests).
-# ---------------------------------------------------------------------------
-
-_INDEX_STATS_CACHE: dict[str, tuple[float | None, int, float]] = {}
-
-
-def _stats_mtime(path: str) -> float | None:
-    """Newest mtime under stats/ for cache invalidation, or None when
-    the path isn't a stat-able local filesystem (remote FS: the cache
-    then only invalidates on same-process writes — cross-process
-    staleness there is bounded advisory drift, performance-only)."""
-    import os
-
-    try:
-        root = path + "/stats"
-        return max(
-            (e.stat().st_mtime for e in os.scandir(root) if e.is_file()),
-            default=os.stat(root).st_mtime,
-        )
-    except OSError:
-        return None
-
-
-def read_index_stats(spark: SparkSession, path: str) -> int | None:
-    """The tier's advisory corpus row count, or None when stats/ is
-    absent (pre-r12 tier) or unreadable (crash mid-rewrite). Cached per
-    process, keyed by the stats files' mtime where the path is locally
-    stat-able — so a DIFFERENT process's add/delete (which rewrites
-    stats/) invalidates this process's cache on the next read instead
-    of routing on an arbitrarily stale count forever.
-    ``_write_index_stats`` additionally evicts on same-process
-    updates.
-
-    Non-stat-able roots (remote FS, mtime None) additionally carry a
-    60 s TTL (r12 ADVICE): cross-process adds there can't bump an
-    observable mtime, so without the TTL this process would route on a
-    frozen count for its whole lifetime; with it, staleness is bounded
-    by one TTL — still advisory drift, never a correctness input."""
-    import time as _time
-
-    mt = _stats_mtime(path)
-    hit = _INDEX_STATS_CACHE.get(path)
-    if hit is not None and hit[0] == mt:
-        if mt is not None or (_time.monotonic() - hit[2]) <= 60.0:
-            return hit[1]
-    try:
-        r = spark.read.parquet(path + "/stats").first()
-        n = int(r["n_rows"]) if r is not None else None
-    except Exception:
-        return None
-    if n is not None:
-        _INDEX_STATS_CACHE[path] = (mt, n, _time.monotonic())
-    return n
-
-
-def _one_row_meta(spark: SparkSession, **cols) -> DataFrame:
-    """One-row metadata frame from literals via ``spark.range(1)`` —
-    the createDataFrame Python-list path costs ~5 s per call in driver
-    overhead (measured r12); this is ~0.3 s. Values: int → int column,
-    bool → boolean, float → double. Ints outside int32 raise loudly —
-    a non-ANSI cast would WRAP silently and persist corrupted meta
-    (e.g. a wrapped seed signs every later batch wrong, so duplicate
-    lookups quietly return empty forever), where the replaced
-    explicit-schema createDataFrame raised."""
-    sels = []
-    for name, v in cols.items():
-        if isinstance(v, bool):
-            sels.append(F.lit(v).alias(name))
-        elif isinstance(v, int):
-            if not -(2**31) <= v < 2**31:
-                raise ValueError(
-                    f"meta field {name}={v} does not fit int32 — refusing "
-                    "to persist a silently wrapped value"
-                )
-            sels.append(F.lit(int(v)).cast("int").alias(name))
-        else:
-            sels.append(F.lit(v).alias(name))
-    return spark.range(1).select(*sels)
-
-
-def _write_index_stats(spark: SparkSession, path: str, n_rows: int) -> None:
-    """Overwrite the advisory row count (one tiny single-file dataset)
-    and evict the per-process cache. Written AFTER the data-bearing
-    datasets in every maintenance path, so a crash before this line
-    leaves a stale count — on the ADD paths an undercount (biases
-    routing toward the full scan), on the DELETE paths an overcount
-    that a retried delete does not re-decrement (the doomed set is
-    already gone, so it biases toward pruned — the scale-safe side;
-    answers are unaffected either way, and the next persist resets the
-    count exactly).
-
-    Built from ``spark.range`` + a literal, NOT ``createDataFrame``:
-    this runs once per ingest batch, and the Python-list path costs
-    ~5 s per call in driver RPC/inference overhead (measured r12)
-    versus ~0.3 s for the JVM-literal plan — the difference between an
-    invisible constant and a visible per-batch tax on every gate.
-
-    Atomic swap (r13): the rewrite lands in a ``_tmp_stats_*`` staging
-    directory, then two renames swap it in (move old aside → move new
-    in) — local-FS renames are atomic, so a reader never sees a TORN
-    stats dataset mid-rewrite; in the instant between the renames it
-    sees no ``stats/`` at all, which every consumer already treats as
-    "unknown → pruned path" (the safe side). ``mode('overwrite')`` on
-    the live directory, by contrast, deletes then writes — a reader in
-    that window got a half-written parquet dir. Crash leftovers
-    (``_tmp_stats_*``) match ``vacuum_index``'s ``_tmp_`` orphan class.
-    Non-local roots (no ``os.rename``) keep the direct overwrite: a
-    torn read there degrades to "unknown", never a wrong answer.
-    Multi-writer interleaving of the read-modify-write COUNT itself is
-    excluded by the tier lease every caller of this function holds
-    (sources/lease.py)."""
-    import os
-    import shutil
-    import uuid
-    from urllib.parse import urlparse
-
-    frame = spark.range(1).select(
-        F.lit(int(max(0, n_rows))).cast("bigint").alias("n_rows")
-    ).coalesce(1)
-    parsed = urlparse(path)
-    if parsed.scheme not in ("", "file"):
-        frame.write.mode("overwrite").parquet(path + "/stats")
-        _INDEX_STATS_CACHE.pop(path, None)
-        return
-    local = parsed.path if parsed.scheme == "file" else path
-    gen = uuid.uuid4().hex[:8]
-    tmp = os.path.join(local, f"_tmp_stats_{gen}")
-    frame.write.mode("overwrite").parquet(tmp)
-    live = os.path.join(local, "stats")
-    old = os.path.join(local, f"_tmp_statsold_{gen}")
-    if os.path.exists(live):
-        os.rename(live, old)
-    os.rename(tmp, live)
-    shutil.rmtree(old, ignore_errors=True)
-    spark.catalog.refreshByPath(path + "/stats")
-    _INDEX_STATS_CACHE.pop(path, None)
+    return _CODES.compact(spark, path, max_files_per_partition)
 
 
 # --- recall-driven probe defaulting (r13 verdict #6) ------------------------
@@ -3017,8 +2619,7 @@ def persist_recall_audit(
     tier = _detect_tier(spark, path)
     n_corpus = read_index_stats(spark, path)
     if n_corpus is None:
-        ds = "members" if tier == "hier" else "codes"
-        n_corpus = spark.read.parquet(f"{path}/{ds}").count()
+        n_corpus = (_MEMBERS if tier == "hier" else _CODES).read(spark, path).count()
     if tier == "hier":
         meta = read_ann_index_meta(spark, path)
     else:
@@ -4095,6 +3696,9 @@ def _ivfpq_query(
     )
 
 
+_CODES = Dataset("codes", "cluster")
+
+
 @leased("path")
 def persist_ivfpq_index(
     embeddings: DataFrame,
@@ -4107,8 +3711,7 @@ def persist_ivfpq_index(
     vec_col: str = "embedding",
     store_vectors: bool = True,
 ) -> None:
-    """Persist an IVF-PQ index (the r9 verdict's missing lifecycle for
-    the PQ tier): train the coarse quantizer and residual codebooks
+    """Persist an IVF-PQ index: train the coarse quantizer and residual codebooks
     once, encode the corpus, and write the build-once/query-many
     layout —
 
@@ -4154,9 +3757,7 @@ def persist_ivfpq_index(
         ).select(id_col, "codes", "vec", "cluster")
     else:
         codes = codes.select(id_col, "codes", "cluster")
-    codes.repartition(F.col("cluster")).write.mode("overwrite").partitionBy(
-        "cluster"
-    ).parquet(path + "/codes")
+    _CODES.write(codes, path, "overwrite")
     cent_rows = [(i, [float(x) for x in row]) for i, row in enumerate(centroids)]
     spark.createDataFrame(
         cent_rows, schema="cluster int, centroid array<double>"
@@ -4170,14 +3771,14 @@ def persist_ivfpq_index(
     spark.createDataFrame(
         book_rows, schema="sub int, code int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(path + "/books")
-    _one_row_meta(
+    write_meta(
         spark,
+        path,
         m_subspaces=int(m),
         n_codes=int(nc),
         has_vectors=store_vectors,
         layout_version=1,
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/meta")
-    _evict_index_cache(path)
+    )
 
 
 def load_ivfpq_index(
@@ -4188,33 +3789,32 @@ def load_ivfpq_index(
     meta dict). Parquet doubles are bitwise, so a reloaded index
     routes, encodes, and scores identically to the in-memory build.
     The codes/ dataset stays on disk — queries read it pruned."""
-    key = (path, "ivfpq_pieces")
-    if key in _DRIVER_PIECE_CACHE:
-        centroids, books, meta = _DRIVER_PIECE_CACHE[key]
-        return centroids, books, dict(meta)
-    meta_row = spark.read.parquet(path + "/meta").first()
-    meta = {
-        "m_subspaces": int(meta_row["m_subspaces"]),
-        "n_codes": int(meta_row["n_codes"]),
-        "has_vectors": bool(meta_row["has_vectors"]),
-        "layout_version": int(meta_row["layout_version"]),
-    }
-    cent_rows = spark.read.parquet(path + "/cents").orderBy("cluster").collect()
-    centroids = np.array(
-        [np.asarray(r["centroid"], dtype=np.float64) for r in cent_rows]
+    meta = read_meta(
+        spark,
+        path,
+        "persist_ivfpq_index",
+        {"m_subspaces": int, "n_codes": int, "has_vectors": bool, "layout_version": int},
     )
-    book_rows = spark.read.parquet(path + "/books").orderBy("sub", "code").collect()
-    m, nc = meta["m_subspaces"], meta["n_codes"]
-    ds = len(book_rows[0]["centroid"])
-    books = np.zeros((m, nc, ds), dtype=np.float64)
-    for r in book_rows:
-        books[int(r["sub"]), int(r["code"])] = np.asarray(
-            r["centroid"], dtype=np.float64
+
+    def load() -> tuple[np.ndarray, np.ndarray]:
+        cent_rows = spark.read.parquet(path + "/cents").orderBy("cluster").collect()
+        centroids = np.array(
+            [np.asarray(r["centroid"], dtype=np.float64) for r in cent_rows]
         )
-    centroids.setflags(write=False)
-    books.setflags(write=False)
-    _DRIVER_PIECE_CACHE[key] = (centroids, books, dict(meta))
-    return centroids, books, dict(meta)
+        book_rows = spark.read.parquet(path + "/books").orderBy("sub", "code").collect()
+        m, nc = meta["m_subspaces"], meta["n_codes"]
+        ds = len(book_rows[0]["centroid"])
+        books = np.zeros((m, nc, ds), dtype=np.float64)
+        for r in book_rows:
+            books[int(r["sub"]), int(r["code"])] = np.asarray(
+                r["centroid"], dtype=np.float64
+            )
+        centroids.setflags(write=False)
+        books.setflags(write=False)
+        return centroids, books
+
+    centroids, books = cached_piece(path, "ivfpq_pieces", load)
+    return centroids, books, meta
 
 
 @leased("path")
@@ -4244,16 +3844,9 @@ def add_to_ivfpq_index(
     hard = ivf_assign(new_embeddings, centroids, id_col=id_col, vec_col=vec_col)
     with_cluster = new_embeddings.select(id_col, vec_col).join(hard, id_col)
     if check_existing:
-        batch_clusters = [
-            int(r["cluster"])
-            for r in with_cluster.select("cluster").distinct().collect()
-        ]
-        existing = (
-            spark.read.parquet(path + "/codes")
-            .filter(F.col("cluster").isin(batch_clusters))
-            .select(F.col(id_col).cast("long").alias(id_col))
+        with_cluster = _CODES.unindexed(
+            spark, path, with_cluster, id_col, _CODES.parts_of(with_cluster)
         )
-        with_cluster = with_cluster.join(existing, id_col, "left_anti")
     residuals = _ivf_residuals(with_cluster, centroids, id_col=id_col, vec_col=vec_col)
     codes = pq_encode(residuals, books, id_col=id_col, vec_col=vec_col).join(
         hard, id_col
@@ -4264,9 +3857,7 @@ def add_to_ivfpq_index(
         ).select(id_col, "codes", "vec", "cluster")
     else:
         codes = codes.select(id_col, "codes", "cluster")
-    codes.repartition(F.col("cluster")).write.mode("append").partitionBy(
-        "cluster"
-    ).parquet(path + "/codes")
+    _CODES.write(codes, path)
 
 
 @leased("path")
@@ -4280,7 +3871,7 @@ def delete_from_ivfpq_index(
     immutable-quantizer/mutable-membership semantics, crash contract,
     and touched-partition-only rewrite as ``delete_from_ann_index``,
     over the ``cluster``-partitioned codes/ dataset."""
-    _delete_partitioned_rows(spark, path + "/codes", ids, id_col, "cluster")
+    _CODES.delete(spark, path, ids, id_col)
 
 
 def ann_ivfpq_topk_persisted(
@@ -4581,55 +4172,49 @@ def mine_hard_negatives(
 
 # ---------------------------------------------------------------------------
 # Persisted vector-signature tier: the embedding near-dup analogue of the
-# dedup fingerprint tier (operators/dedup.py::persist_dedup_index). Before
-# r11 the vector ingest gate (t12) re-read and re-shuffled the ENTIRE
-# sig_index per batch inside lsh_cosine_dedup_against_index — the same
-# O(index)-per-batch pattern the r10/r11 verdicts flagged (and fixed) on
-# the ANN rerank and the MinHash lookup. This tier closes it for vectors.
+# dedup fingerprint tier (operators/dedup.py::persist_dedup_index), so the
+# vector ingest gate (t12) reads per batch only its own signature cells
+# instead of re-reading and re-shuffling the whole sig_index.
 # ---------------------------------------------------------------------------
 
-_VECSIG_META_CACHE: dict[str, dict] = {}
+# vectors/ is the id side (verify and delete), sigs/ the lookup side
+_VECSIG = Layout(
+    "vec_id", Dataset("vectors", "part"), Dataset("sigs", "spart", cell=("table", "sig"))
+)
 
 
 def read_vecsig_index_meta(spark: SparkSession, path: str) -> dict:
-    """Signature parameters persisted with the vector tier. Cached per
-    process — meta/ is immutable once written (``persist_vecsig_index``
-    overwrites it and evicts; add/delete never touch it). A missing
-    meta/ raises loudly (there is no pre-r11 vecsig layout to fall back
-    to); transient read failures propagate and are never cached."""
-    if path in _VECSIG_META_CACHE:
-        return dict(_VECSIG_META_CACHE[path])
-    try:
-        r = spark.read.parquet(path + "/meta").first()
-    except AnalysisException as e:
-        if _is_path_missing(e):
-            raise ValueError(
-                f"no vecsig index meta at {path}/meta — build the tier with "
-                "persist_vecsig_index first"
-            ) from e
-        raise
-    meta = {
-        "num_planes": int(r["num_planes"]),
-        "num_tables": int(r["num_tables"]),
-        "seed": int(r["seed"]),
-        "dim": int(r["dim"]),
-        "n_buckets": int(r["n_buckets"]),
-        "k_sig_parts": int(r["k_sig_parts"]),
-        "layout_version": int(r["layout_version"]),
-    }
-    _VECSIG_META_CACHE[path] = dict(meta)
-    return meta
+    """Signature parameters persisted with the vector tier, cached per
+    process. A missing meta/ raises loudly (there is no vecsig layout
+    without one to fall back to); transient read failures propagate and
+    are never cached."""
+
+    def missing(e: AnalysisException) -> dict:
+        raise ValueError(
+            f"no vecsig index meta at {path}/meta — build the tier with "
+            "persist_vecsig_index first"
+        ) from e
+
+    return read_meta(
+        spark,
+        path,
+        "persist_vecsig_index",
+        dict.fromkeys(
+            ("num_planes", "num_tables", "seed", "dim", "n_buckets", "k_sig_parts",
+             "layout_version"),
+            int,
+        ),
+        missing,
+    )
 
 
-def _vecsig_spart(k_sig_parts: int):
+def vecsig_spart(k_sig_parts: int):
     """Hive partition key of the signature dataset: a hash of the FULL
     (table, sig) cell, so any batch can compute its own directory set
     from nothing but its signatures — the property partition pruning
     needs. pmod(xxhash64(...)) mixes both columns; sig alone spans only
     2^num_planes values and would alias tables together."""
-    return F.pmod(F.xxhash64(F.col("table"), F.col("sig")), F.lit(k_sig_parts)).cast(
-        "int"
-    )
+    return hash_part(k_sig_parts, "table", "sig")
 
 
 @leased("path")
@@ -4687,8 +4272,8 @@ def persist_vecsig_index(
     spark = vecs.sparkSession
     vecs = vecs.select("vec_id", "embedding").localCheckpoint(eager=False)
     # duplicate ids would silently duplicate rows in BOTH datasets (and
-    # every later verify join's output) — the persist_ann_index ADVICE
-    # class; one metadata-light aggregate fails loudly instead
+    # every later verify join's output); one metadata-light aggregate
+    # fails loudly instead
     counts = vecs.agg(
         F.count(F.lit(1)).alias("n"), F.countDistinct("vec_id").alias("d")
     ).first()
@@ -4699,23 +4284,8 @@ def persist_vecsig_index(
             "vec_id rows in the input — the tier requires unique ids "
             "(dedupe or re-key before persisting)"
         )
-    if n_buckets is None or k_sig_parts is None:
-        if n_buckets is None:
-            n_buckets = max(16, min(65536, n_rows // 500))
-        if k_sig_parts is None:
-            # ~1000 VECTORS (·num_tables sig rows ≈ 180 KB) per spart
-            # directory — the dedup tier's banded sizing. Profiled r11:
-            # sizing per sig ROW instead gave 24× more directories of
-            # ~7 KB each and file-listing dominated the pruned read
-            # (29 s vs 12 s full-scan at 512k); per-vector sizing keeps
-            # directories few and large while the per-batch touched
-            # cap stays ≤ |batch|·num_tables·dir_bytes at any corpus
-            k_sig_parts = max(8, min(32768, n_rows // 1000))
+    n_buckets, k_sig_parts = auto_parts(n_rows, n_buckets, k_sig_parts)
     if presigned is not None:
-        from actuarial_reserve_modelling_spark.operators.sigparams import (
-            accept_presigned,
-        )
-
         accept_presigned(
             presigned,
             "hyperplane",
@@ -4725,25 +4295,20 @@ def persist_vecsig_index(
         sigs = (
             presigned.select("vec_id", "table", "sig")
             .join(vecs.select("vec_id"), "vec_id", "leftsemi")
-            .withColumn("spart", _vecsig_spart(k_sig_parts))
+            .withColumn("spart", vecsig_spart(k_sig_parts))
         )
     else:
         sigs = hyperplane_signatures_multi(
             vecs, num_planes, num_tables, seed, dim
-        ).withColumn("spart", _vecsig_spart(k_sig_parts))
-    sigs.repartition(F.col("spart")).sortWithinPartitions(
-        "table", "sig"
-    ).write.mode("overwrite").partitionBy("spart").parquet(path + "/sigs")
-    vecs.withColumn(
-        "part", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_buckets)).cast("int")
-    ).repartition(F.col("part")).write.mode("overwrite").partitionBy("part").parquet(
-        path + "/vectors"
+        ).withColumn("spart", vecsig_spart(k_sig_parts))
+    _VECSIG.lookup.write(sigs, path, "overwrite")
+    _VECSIG.ids.write(
+        vecs.withColumn("part", hash_part(n_buckets, "vec_id")), path, "overwrite"
     )
-    # advisory corpus size for the adaptive lookup routing (r12) —
-    # before meta/ so the commit marker still lands last
     _write_index_stats(spark, path, n_rows)
-    _one_row_meta(
+    write_meta(
         spark,
+        path,
         num_planes=int(num_planes),
         num_tables=int(num_tables),
         seed=int(seed),
@@ -4751,16 +4316,15 @@ def persist_vecsig_index(
         n_buckets=int(n_buckets),
         k_sig_parts=int(k_sig_parts),
         layout_version=1,
-    ).coalesce(1).write.mode("overwrite").parquet(path + "/meta")
-    _VECSIG_META_CACHE.pop(path, None)
+    )
 
 
 def load_vecsig_index(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """Reload (sig_index, vec_index) in the exact shapes the in-memory
     ``lsh_cosine_dedup_against_index`` consumes — the parity hook the
     pruned-path tests use."""
-    sigs = spark.read.parquet(path + "/sigs").select("vec_id", "table", "sig")
-    vecs = spark.read.parquet(path + "/vectors").select("vec_id", "embedding")
+    sigs = _VECSIG.lookup.read(spark, path).select("vec_id", "table", "sig")
+    vecs = _VECSIG.ids.read(spark, path).select("vec_id", "embedding")
     return sigs, vecs
 
 
@@ -4779,10 +4343,9 @@ def add_to_vecsig_index(
     reads pruned to the batch's own partitions (batch ids must be
     unique WITHIN the batch — the gates collapse within-batch
     duplicates first; the anti-join only guards re-ingesting
-    already-indexed ids). sigs/ is written FIRST
-    — the worst mid-crash state is orphaned signature rows, which the
-    verify join's inner join on vectors/ neutralizes, never an indexed
-    vector invisible to lookups (the dedup tier's crash contract).
+    already-indexed ids). sigs/ is written FIRST (the lookup-first rule
+    of ``sources/tiers.py``): the worst mid-crash state is orphaned
+    signature rows, which the verify join on vectors/ neutralizes.
 
     ``presigned``: an existing ``hyperplane_signatures_multi`` output
     (with ``spart``) covering a SUPERSET of ``new_vecs``'s ids, built
@@ -4795,63 +4358,22 @@ def add_to_vecsig_index(
     meta = read_vecsig_index_meta(spark, path)
     batch = new_vecs.select("vec_id", "embedding").localCheckpoint(eager=False)
     if presigned is not None:
-        from actuarial_reserve_modelling_spark.operators.sigparams import (
-            accept_presigned,
-        )
-
         accept_presigned(presigned, "hyperplane", meta, "add_to_vecsig_index")
-        sigs = presigned.select("vec_id", "table", "sig", "spart").join(
-            batch.select("vec_id"), "vec_id", "leftsemi"
-        )
+        sigs = presigned.select("vec_id", "table", "sig", "spart")
     else:
         sigs = hyperplane_signatures_multi(
             batch, meta["num_planes"], meta["num_tables"], meta["seed"], meta["dim"]
-        ).withColumn("spart", _vecsig_spart(meta["k_sig_parts"]))
+        ).withColumn("spart", vecsig_spart(meta["k_sig_parts"]))
         sigs = sigs.localCheckpoint(eager=False)
-    if check_existing:
-        sparts = [int(r["spart"]) for r in sigs.select("spart").distinct().collect()]
-        existing_s = (
-            _read_sigs_pruned(spark, path, sparts)
-            .select(F.col("vec_id").cast("long").alias("vec_id"))
-            .distinct()
-        )
-        sigs = sigs.join(existing_s, "vec_id", "left_anti")
-    sigs.repartition(F.col("spart")).sortWithinPartitions(
-        "table", "sig"
-    ).write.mode("append").partitionBy("spart").parquet(path + "/sigs")
-    rows = batch.withColumn(
-        "part",
-        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(meta["n_buckets"])).cast("int"),
+    add_rows(
+        spark,
+        path,
+        _VECSIG,
+        batch,
+        meta["n_buckets"],
+        lambda rows: sigs.join(rows.select("vec_id"), "vec_id", "leftsemi"),
+        check_existing,
     )
-    if check_existing:
-        parts = [int(r["part"]) for r in rows.select("part").distinct().collect()]
-        existing_v = (
-            spark.read.parquet(path + "/vectors")
-            .filter(F.col("part").isin(parts))
-            .select(F.col("vec_id").cast("long").alias("vec_id"))
-        )
-        rows = rows.join(existing_v, "vec_id", "left_anti")
-    n_before = read_index_stats(spark, path)
-    if n_before is not None:
-        # the stats maintenance re-counts the appended frame — pin it
-        # so the anti-join runs once (batch-bounded either way)
-        rows = rows.localCheckpoint(eager=False)
-    rows.repartition(F.col("part")).write.mode("append").partitionBy("part").parquet(
-        path + "/vectors"
-    )
-    if n_before is not None:
-        _write_index_stats(spark, path, n_before + rows.count())
-
-
-def _read_sigs_pruned(
-    spark: SparkSession, path: str, sparts: list[int]
-) -> DataFrame:
-    """The signature dataset restricted to a bounded spart set — a
-    plain partition-column IN filter, pruned at file-listing time."""
-    sigs = spark.read.parquet(path + "/sigs")
-    if not sparts:
-        return sigs.limit(0)
-    return sigs.filter(F.col("spart").isin(sorted(set(int(s) for s in sparts))))
 
 
 @leased("path")
@@ -4868,82 +4390,22 @@ def delete_from_vecsig_index(
     both datasets are rewritten partition-locally — delete cost is
     O(doomed footprint), never an index scan.
 
-    Crash contract (mirrors the dedup tier): sigs/ is rewritten FIRST —
-    a crash after only that rewrite hides the doomed vectors from
-    pruned lookups until the retry finishes (staleness in the direction
-    the delete is going, never a resurrected vector), and the retry
-    recomputes the doomed set from the still-intact vectors/."""
-    from actuarial_reserve_modelling_spark.sources.sinks import overwrite_partitions
-
+    Crash contract (the lookup-first rule of ``sources/tiers.py``):
+    sigs/ is rewritten FIRST — a crash after only that rewrite hides the
+    doomed vectors from pruned lookups until the retry finishes, and the
+    retry recomputes the doomed set from the still-intact vectors/."""
     meta = read_vecsig_index_meta(spark, path)
-    del_ids = ids.select(F.col(id_col).cast("long").alias("vec_id")).distinct()
-    parts = [
-        int(r["part"])
-        for r in del_ids.select(
-            F.pmod(F.xxhash64(F.col("vec_id")), F.lit(meta["n_buckets"]))
-            .cast("int")
-            .alias("part")
-        )
-        .distinct()
-        .collect()
-    ]
-    doomed = (
-        spark.read.parquet(path + "/vectors")
-        .filter(F.col("part").isin(parts))
-        .join(del_ids, "vec_id", "left_semi")
-        .select("vec_id", "embedding")
-    )
-    n_before = read_index_stats(spark, path)
-    if n_before is not None:
-        # counted BEFORE the rewrites below mutate vectors/ (doomed is
-        # derived from it); cost bounded by the deleted ids' footprint
-        doomed = doomed.localCheckpoint(eager=False)
-        n_doomed = doomed.count()
-    doomed_sigs = hyperplane_signatures_multi(
-        doomed, meta["num_planes"], meta["num_tables"], meta["seed"], meta["dim"]
-    ).withColumn("spart", _vecsig_spart(meta["k_sig_parts"]))
-    sparts = [
-        int(r["spart"]) for r in doomed_sigs.select("spart").distinct().collect()
-    ]
-    if sparts:
-        rows = _read_sigs_pruned(spark, path, sparts)
-        survivors = rows.join(del_ids, "vec_id", "left_anti").localCheckpoint()
-        kept = {int(r["spart"]) for r in survivors.select("spart").distinct().collect()}
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        for spart in set(sparts) - kept:
-            hp = jvm.org.apache.hadoop.fs.Path(f"{path}/sigs/spart={spart}")
-            hp.getFileSystem(hconf).delete(hp, True)
-        if kept:
-            overwrite_partitions(
-                survivors.repartition(F.col("spart")).sortWithinPartitions(
-                    "table", "sig"
-                ),
-                path + "/sigs",
-                ["spart"],
-            )
-        else:
-            # a delete that emptied every touched spart may have emptied
-            # the whole dataset — a root with zero parquet files fails
-            # schema inference in every later pruned read (the r10
-            # ADVICE edge, same fix as _delete_partitioned_rows): if no
-            # spart directory survived anywhere, pin the schema with one
-            # zero-row file so readers see a well-typed empty tier
-            root = jvm.org.apache.hadoop.fs.Path(path + "/sigs")
-            fs = root.getFileSystem(hconf)
-            remaining = [
-                st.getPath().getName()
-                for st in fs.listStatus(root)
-                if st.isDirectory() and st.getPath().getName().startswith("spart=")
-            ]
-            if not remaining:
-                survivors.drop("spart").limit(0).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(f"{path}/sigs/spart={sparts[0]}")
-        spark.catalog.refreshByPath(path + "/sigs")
-    _delete_partitioned_rows(spark, path + "/vectors", del_ids, "vec_id", "part")
-    if n_before is not None:
-        _write_index_stats(spark, path, n_before - n_doomed)
+
+    def resign(doomed: DataFrame) -> DataFrame:
+        return hyperplane_signatures_multi(
+            doomed.select("vec_id", "embedding"),
+            meta["num_planes"],
+            meta["num_tables"],
+            meta["seed"],
+            meta["dim"],
+        ).withColumn("spart", vecsig_spart(meta["k_sig_parts"]))
+
+    delete_rows(spark, path, _VECSIG, ids, id_col, meta["n_buckets"], resign)
 
 
 @leased("path")
@@ -4953,16 +4415,13 @@ def compact_vecsig_index(
     """Fold append-accumulated small files in BOTH persisted vector
     datasets (see compact_partitioned_index). Returns the total number
     of partitions compacted."""
-    n = compact_partitioned_index(spark, path + "/sigs", "spart", max_files_per_partition)
-    n += compact_partitioned_index(
-        spark, path + "/vectors", "part", max_files_per_partition
-    )
-    return n
+    n = _VECSIG.lookup.compact(spark, path, max_files_per_partition)
+    return n + _VECSIG.ids.compact(spark, path, max_files_per_partition)
 
 
-# Adaptive routing crossover for the persisted vector tier (r12): the
+# Adaptive routing crossover for the persisted vector tier: the
 # pruned path wins once the corpus outgrows the batch's signature-cell
-# footprint — tools/vecsig_stress.py (BASELINE.md r11) measured full
+# footprint — tools/vecsig_stress.py (BASELINE.md) measured full
 # scan ahead through 512k vectors for a 200-vector batch (4,800 sig
 # rows), with the documented crossover at the cell-saturation point
 # n ≈ 1000 · |batch| · num_tables ≈ 4.8M (k_sig_parts sizes at
@@ -5004,16 +4463,16 @@ def lsh_cosine_dedup_against_index_persisted(
     the same parameters (identical vectors collide in every table with
     probability 1, so exact re-encounters are always found).
 
-    ``route`` (r12): ``"auto"`` (default) picks pruned vs the
+    ``route``: ``"auto"`` (default) picks pruned vs the
     full-scan twin from the tier's advisory row count (stats/,
     maintained by persist/add/delete) against the batch's signature
     footprint — below ``_VECSIG_ROUTE_CELLS_FACTOR`` · |batch·tables|
     the fixed driver-job overhead of pruning costs more than just
-    scanning the whole (still-small) index, the measured 2× small-
-    scale regression the r11 verdict asked to close. Both paths return
+    scanning the whole (still-small) index (measured 2× slower at
+    small scale). Both paths return
     identical answers (twin pytest), so routing is pure performance.
     ``"pruned"`` / ``"full"`` force a side (stress tools, tests).
-    Unknown stats (pre-r12 tier, crashed stats rewrite) routes pruned
+    Unknown stats (a tier without stats/, crashed stats rewrite) routes pruned
     — the scale-safe side.
 
     ``presigned``: an existing ``hyperplane_signatures_multi`` output
@@ -5030,28 +4489,17 @@ def lsh_cosine_dedup_against_index_persisted(
         raise ValueError(f"route must be auto|pruned|full, got {route!r}")
     meta = read_vecsig_index_meta(spark, path)
     if presigned is not None:
-        from actuarial_reserve_modelling_spark.operators.sigparams import (
-            accept_presigned,
-        )
-
         accept_presigned(
             presigned, "hyperplane", meta, "lsh_cosine_dedup_against_index_persisted"
         )
     batch = new_vecs.select("vec_id", "embedding").localCheckpoint(eager=False)
-    if route == "auto":
-        # decide BEFORE signing: the decision needs only |batch| (a
-        # count over the checkpointed batch — no hyperplane kernel), so
-        # a full-scan route skips the signature-footprint job entirely
-        # and lands at the bare full twin's wall
-        n_index = read_index_stats(spark, path)
-        use_pruned = (
-            n_index is None
-            or n_index
-            >= _VECSIG_ROUTE_CELLS_FACTOR * batch.count() * meta["num_tables"]
-        )
-    else:
-        use_pruned = route == "pruned"
-    if not use_pruned:
+    # decided BEFORE signing: the decision needs only |batch| (a count
+    # over the checkpointed batch — no hyperplane kernel), so a full-scan
+    # route skips the signature-footprint job entirely
+    if not route_pruned(
+        spark, path, route,
+        lambda: _VECSIG_ROUTE_CELLS_FACTOR * batch.count() * meta["num_tables"],
+    ):
         sig_index, vec_index = load_vecsig_index(spark, path)
         return lsh_cosine_dedup_against_index(
             batch,
@@ -5072,23 +4520,15 @@ def lsh_cosine_dedup_against_index_persisted(
         else hyperplane_signatures_multi(
             batch, meta["num_planes"], meta["num_tables"], meta["seed"], meta["dim"]
         )
-        .withColumn("spart", _vecsig_spart(meta["k_sig_parts"]))
+        .withColumn("spart", vecsig_spart(meta["k_sig_parts"]))
         .localCheckpoint(eager=False)
     )
     # ONE footprint job: materializes the signatures and returns the
     # pruned read's directory set
-    sparts = [
-        int(r["spart"]) for r in new_sigs.select("spart").distinct().collect()
-    ]
-    idx_sigs = _read_sigs_pruned(spark, path, sparts).select(
-        F.col("vec_id").alias("index_id"), "table", "sig"
-    )
-    bucket_sizes = idx_sigs.groupBy("table", "sig").agg(F.count(F.lit(1)).alias("_n"))
-    idx_sigs = (
-        idx_sigs.join(bucket_sizes, ["table", "sig"])
-        .filter(F.col("_n") <= max_bucket_size)
-        .drop("_n")
-    )
+    sparts = _VECSIG.lookup.parts_of(new_sigs)
+    idx_sigs = _VECSIG.lookup.read_guarded(
+        spark, path, sparts, max_bucket_size
+    ).select(F.col("vec_id").alias("index_id"), "table", "sig")
     cand = new_sigs.select(
         F.col("vec_id").alias("new_id"), "table", "sig"
     ).join(idx_sigs, ["table", "sig"])
@@ -5096,25 +4536,13 @@ def lsh_cosine_dedup_against_index_persisted(
         cand = cand.filter(F.col("new_id") != F.col("index_id"))
     # consumed twice (id-bucket collect + verify join) — lazily pinned
     # so the pruned signature join runs once, materialized BY the
-    # cparts collect below (r12: one job where r11 spent two — the
-    # eager checkpoint then a separate collect)
+    # cparts collect below (one job, not an eager checkpoint and then a
+    # separate collect)
     cand = cand.select("new_id", "index_id").distinct().localCheckpoint(eager=False)
-    cparts = [
-        int(r["part"])
-        for r in cand.select(
-            F.pmod(F.xxhash64(F.col("index_id")), F.lit(meta["n_buckets"]))
-            .cast("int")
-            .alias("part")
-        )
-        .distinct()
-        .collect()
-    ]
-    vecs = (
-        spark.read.parquet(path + "/vectors")
-        .filter(F.col("part").isin(cparts))
-        if cparts
-        else spark.read.parquet(path + "/vectors").limit(0)
+    cparts = _VECSIG.ids.parts_of(
+        cand.select(hash_part(meta["n_buckets"], "index_id").alias("part"))
     )
+    vecs = _VECSIG.ids.read(spark, path, cparts)
     a = batch.select(F.col("vec_id").alias("new_id"), F.col("embedding").alias("e1"))
     b = vecs.select(F.col("vec_id").alias("index_id"), F.col("embedding").alias("e2"))
     sims = _kernel_cosine_sims(

@@ -26,41 +26,21 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
-# The driver's oracle check samples the FIRST 50 entries of the registry
-# each round. Rounds 1-3 rotated module import order; that cannot express
-# a precise window, so from round 4 the window is an explicit name list:
-# every query that has never appeared in a driver CORRECTNESS_r*.json,
-# plus queries added or rewritten this round. Names not yet registered
-# are skipped (harmless); everything else keeps registration order.
-_ROUND14_FRONT = [
-    # 1) queries whose code paths CHANGED in round 14 — they lead the
-    #    window to (re-)earn driver evidence on the new code:
-    #    - l41 family: mine_hard_negatives dropped the forced broadcast
-    #      of the pos_sim side in the candidates path (r13 verdict #2)
-    #      and the exact path gained the bounded-query-batch guard.
+# The external oracle check samples only the FIRST 50 entries of the
+# registry, so the order of this window decides which queries it covers:
+# queries that have never been covered or whose code changed lead it.
+# Every other query follows in registration order.
+_FRONT = [
     "l41_hard_negative_mining",
     "l41b_hard_negative_ann_planted",
-    #    - the exact/ADC query tails now probe the query-batch bound
-    #      before the driver collect (r13 verdict #5).
     "l3_cosine_topk",
     "l3d_ann_pq_topk",
-    #    - persisted tier queries: nprobe="auto" branch added (static
-    #      defaults unchanged) + the lease behind every tier mutation
-    #      was refactored onto the pluggable backend (r13 verdict #4/#6).
     "l34_ann_index_persisted",
     "l37_ivfpq_index_persisted",
-    #    - the recall audits ride cosine_topk (guard) and now back the
-    #      persisted recall curve; l47 earned its plan-audit allowlist
-    #      entry (r13 verdict #1).
     "l46_recall_audit_planted",
     "l47_ivfpq_recall_audit_planted",
-    #    - ingest gates: every leased add/compact/vacuum step runs on
-    #      the refactored backend.
     "t10_incremental_ingest_dedup",
     "t13_ann_index_ingest_gate",
-    # 2) window fill: the 40 r08-era rows BASELINE.md booked for r14 —
-    #    after this window no registry row's latest driver evidence
-    #    predates r09.
     "a9_stats_aggregates",
     "f1b_string_funcs2",
     "f4c_month_grid",
@@ -101,44 +81,16 @@ _ROUND14_FRONT = [
     "w6_distribution_ranks",
     "w7_nth_value",
     "w8_nulls_ordering",
-]
-
-_ROUND13_FRONT = [
-    # 1) queries ADDED or whose code paths CHANGED in round 13 — they
-    #    lead the window to (re-)earn driver evidence on the new code:
-    #    - s1: NEW — the header-CSV scan as a direct hash oracle row
-    #      (the one SURVEY row with only indirect evidence; r12 task 5).
     "s1_csv_roundtrip",
-    #    - l46: NEW — query-time recall self-audit of the persisted ANN
-    #      tier, planted-twin hash grade (r12 task 4).
-    "l46_recall_audit_planted",
-    #    - l47: NEW — the IVF-PQ tier's recall self-audit analogue.
-    "l47_ivfpq_recall_audit_planted",
-    #    - l45: the DuckDB oracle was reformulated (prefix-filtered
-    #      exact similarity join + unrolled min-label CC) so the
-    #      end-to-end row re-earns on the new same-tool evidence that
-    #      now also holds at sf0.1 (r12 task 3).
     "l45_curation_pipeline",
-    #    - the persisted-tier lifecycle rows: every persist/add/delete/
-    #      compact path now runs under the single-writer lease and the
-    #      advisory stats rewrite is an atomic rename swap (r12 task 1)
-    #      — re-earn through the leased paths.
-    "l34_ann_index_persisted",
     "l35_ann_index_add_persisted",
     "l36_ann_index_delete_persisted",
-    "l37_ivfpq_index_persisted",
     "l38_dedup_index_delete_persisted",
     "l39_ivfpq_index_delete_persisted",
     "l40_dedup_banded_persisted",
     "l43_vecsig_index_persisted",
-    #    - the ingest gates ride the leased adds/compacts/vacuums.
-    "t10_incremental_ingest_dedup",
     "t11_neardup_ingest_gate",
     "t12_semantic_ingest_gate",
-    "t13_ann_index_ingest_gate",
-    # 2) window fill: the stale-evidence cohort BASELINE.md booked for
-    #    r13 — every row whose latest driver evidence predates r08
-    #    (the r06 tail, then the r07 cohort), oldest first.
     "q14_promo_revenue",
     "q18_large_orders",
     "q19_disjunctive_predicates",
@@ -164,9 +116,6 @@ _ROUND13_FRONT = [
     "w3_running_agg",
     "w4_topk_per_group",
     "w9_sessionization",
-    # 3) remaining slots: the oldest r08-era rows, alphabetical (the
-    #    next-staleness tier; the rest of that 49-row cohort queues for
-    #    r14).
     "a10b_approx_percentile",
     "a12_salted_aggregate",
     "a13_bloom_filter",
@@ -176,39 +125,8 @@ _ROUND13_FRONT = [
     "a17_bit_aggregates",
     "a18_count_if_mode",
     "a7c_grouping_sets",
-]
-
-_ROUND12_FRONT = [
-    # 1) queries ADDED or whose code paths CHANGED in round 12 — they
-    #    lead the window to (re-)earn driver evidence on the new code:
-    #    - l45: NEW — the end-to-end curation pipeline (clean → dedup
-    #      gate → decontaminate → temperature mix → epoch plan →
-    #      shards) as ONE oracle-checked flow (r11 verdict task 4).
-    "l45_curation_pipeline",
-    #    - l40/l43: the persisted lookups grew adaptive pruned-vs-full
-    #      routing from the new stats/ dataset; l38 maintains it on
-    #      add/delete — re-earn on the routed paths.
-    "l40_dedup_banded_persisted",
-    "l43_vecsig_index_persisted",
-    "l38_dedup_index_delete_persisted",
-    #    - t10-t13: the gates ride the routed lookups, the
-    #      committed-parquet index probes, and the seed-bootstrap fix.
-    "t10_incremental_ingest_dedup",
-    "t11_neardup_ingest_gate",
-    "t12_semantic_ingest_gate",
-    "t13_ann_index_ingest_gate",
-    #    - l41/l41b: hard-negative mining now keys the positive
-    #      broadcast + rank window on (anchor, positive) pairs.
-    "l41_hard_negative_mining",
-    "l41b_hard_negative_ann_planted",
-    #    - l42/l44: temperature mixing's actual_share NULL pin; l44
-    #      consumes its weights.
     "l42_temperature_mix",
     "l44_epoch_repetition",
-    # 2) window fill: the rows whose latest driver evidence is OLDEST
-    #    (the r11 verdict's staleness complaint) — everything last
-    #    checked in r05, then r06, oldest first; the r06 tail and r07
-    #    cohort rotate in next round.
     "a11_collect_set",
     "j1_broadcast_join_agg",
     "j2_left_outer_join",
@@ -224,10 +142,8 @@ _ROUND12_FRONT = [
     "j5_asof_join",
     "l10_corpus_prep",
     "l2e_dedup_clusters",
-    "l3_cosine_topk",
     "l3b_ann_lsh_topk",
     "l3c_ann_ivf_topk",
-    "l3d_ann_pq_topk",
     "l5_text_stats",
     "l5b_token_counts",
     "l5c_quality_scores",
@@ -242,88 +158,19 @@ _ROUND12_FRONT = [
     "o9_dataset_diff",
     "q10_returned_items",
     "q12_shipmode_priority",
-    #    the verdict-named stale MC family (last driver check r06):
-    #    u1-u1c are rows-only by design (Monte Carlo), u1d is their
-    #    hash-green closed-form companion — refreshed together
     "u1_reserve_pipeline",
     "u1b_reserve_sql_mc",
     "u1c_reserve_risk_measures",
     "u1d_reserve_closed_form",
     "q3_shipping_priority",
-    "q4_order_priority",
-]
-
-_ROUND11_FRONT = [
-    # 1) queries ADDED or whose code paths CHANGED in round 11 — they
-    #    lead the window to (re-)earn driver evidence on the new code:
-    #    - l40: NEW — the banded lookup projection of the persisted
-    #      dedup tier (persist → add → delete → PRUNED against-index
-    #      check), the r10 verdict's #1 task.
-    "l40_dedup_banded_persisted",
-    #    - l41/l42: NEW — contrastive hard-negative mining with margin
-    #      denoise (exact brute-force path; the ANN-candidate scale
-    #      path shares the scoring code) and temperature-scaled domain
-    #      mixture (derived targets, the XLM-R rule complementing
-    #      l28's explicit targets).
-    "l41_hard_negative_mining",
-    "l41b_hard_negative_ann_planted",
-    "l42_temperature_mix",
-    #    - l44: NEW — the mixture weights materialized into the
-    #      per-document epoch repetition plan (stochastic rounding on
-    #      the content hash; E[repeats] = w, deterministic per doc).
-    "l44_epoch_repetition",
-    #    - l43: NEW — the persisted VECTOR near-dup tier (build → add →
-    #      delete → pruned against-index ingest), closing the last
-    #      O(index)-per-batch pattern (t12's gate previously re-read
-    #      the whole signature index per batch).
-    "l43_vecsig_index_persisted",
-    #    - q_recursive_cte: NEW — WITH RECURSIVE (Spark 4.x) hierarchy
-    #      walk, the SQL-surface closure shape that previously needed a
-    #      driver-side loop.
     "q_recursive_cte",
-    #    - t12/t11: re-based onto the partition-pruned persisted tiers
-    #      (vecsig / dedup fingerprint + fpart-partitioned exact tier)
-    #      — same admitted sets (replay-convergent same-id exclusion),
-    #      new code paths re-earn driver evidence.
-    "t12_semantic_ingest_gate",
-    "t11_neardup_ingest_gate",
-    #    - l38: the persist/add/delete paths now maintain the banded
-    #      projection, validate caller-asserted banding against the
-    #      index before writing meta, and auto-size bucket counts.
-    "l38_dedup_index_delete_persisted",
-    #    - l25/l26: re-pointed at planted-twin constructions through
-    #      the SAME code paths (incremental IVF add; IVF-PQ composite)
-    #      — the last two ANN-family rows riding no_oracle (r10 task 4).
     "l25_ann_ivf_index_add",
     "l26_ann_ivfpq_topk",
-    #    - a6b/a10c/a16b: NEW — bound-companions for the approx
-    #      aggregates (exact value + within-bound flag, the a13b
-    #      pattern; r10 task 5), shrinking rows-only to the MC/recall
-    #      rows that are legitimately stochastic.
     "a6b_approx_distinct_bound",
     "a10c_approx_percentile_bound",
     "a16b_hll_union_bound",
-    #    - o6b: NEW — the same bound-companion pattern for the seeded
-    #      Bernoulli sampler (realized fraction within 4 sigma of p,
-    #      deterministic for fixed data+seed), so every rows-only row
-    #      now has a hash-green companion.
     "o6b_tablesample_bound",
-    #    - l34/l35/l36: persist_ann_index grew loud corpus-mismatch
-    #      guards (left join + raise), add_to_ann_index resolves
-    #      group_cap from meta/, delete-all leaves a readable empty
-    #      layout — re-earn on the hardened paths.
-    "l34_ann_index_persisted",
-    "l35_ann_index_add_persisted",
-    "l36_ann_index_delete_persisted",
-    #    - t13/t10: the ingest gates now auto-compact by file-count
-    #      threshold every epoch (r10 task 3) — re-earn through the
-    #      compaction-active default.
-    "t13_ann_index_ingest_gate",
-    "t10_incremental_ingest_dedup",
-    #    - l29: L8 tag added (coverage-map fix); unchanged code.
     "l29_segment_dedup",
-    # 2) window fill: rows whose latest driver evidence is oldest
-    #    (d7-era), oldest first, so the long tail keeps refreshing.
     "a1_a2_global_agg",
     "a5_count_distinct",
     "a7_rollup",
@@ -352,64 +199,13 @@ _ROUND11_FRONT = [
     "t3_sliding_window",
     "t4_session_window",
     "t7_stream_stream_join",
-    "ts1_resample_locf",
-    "w10_cohort_retention",
-    "w1_ranking",
-    "w2_lag_lead",
-    "w3_running_agg",
-    "w4_topk_per_group",
-    "a4_groupby_q1",
-    "j1_broadcast_join_agg",
-    "j2_left_outer_join",
-    "j5_asof_join",
-]
-
-_ROUND10_FRONT = [
-    # 1) queries ADDED or whose code paths CHANGED in round 10 — they
-    #    lead the window to (re-)earn driver evidence on the new code:
-    #    - l34/l35/l36: the persisted layout is now VECTOR-BEARING and
-    #      the query path is corpus-scan-free (embeddings=None); the
-    #      add is idempotent; build params live in meta/.
-    "l34_ann_index_persisted",
-    "l35_ann_index_add_persisted",
-    "l36_ann_index_delete_persisted",
-    #    - l37: NEW — persisted IVF-PQ lifecycle (codebooks + cluster-
-    #      partitioned codes, incremental encode-and-append, pruned ADC
-    #      query), the l35 analogue for the PQ tier.
-    "l37_ivfpq_index_persisted",
-    #    - l38: NEW — persisted dedup fingerprint tier with
-    #      right-to-be-forgotten delete (build → add → delete →
-    #      l19-style ingest check over the survivors).
-    "l38_dedup_index_delete_persisted",
-    #    - l39: NEW — deletion from the persisted IVF-PQ index
-    #      (l36's analogue on the codes/ layout).
-    "l39_ivfpq_index_delete_persisted",
-    #    - l17b: NEW — hash-grade oracle for the BPE merge table via
-    #      unrolled-CTE DuckDB SQL, retiring the last non-ANN
-    #      rows-only row; the Spark side runs the r10 batched trainer.
     "l17b_bpe_merges_oracle",
-    #    - t13: NEW — continuous ingest with the persisted ANN index as
-    #      the gate state (planted twins across/within batches).
-    "t13_ann_index_ingest_gate",
-    #    - l17/l21: the trainer now batches merge rounds (exactness
-    #      guard); re-earn on the new code path.
     "l17_bpe_merges",
     "l21_bpe_encode",
-    #    - l3h/l3i: the IVF-PQ/PQ one-shot paths were refactored onto
-    #      the shared _ivfpq_query tail; re-earn on the new plan shape.
     "l3h_ann_pq_top1_planted",
     "l3i_ann_ivfpq_top1_planted",
-    #    - l3g: the hierarchical indexed query grew the vec-bearing
-    #      branch (embeddings-backed path unchanged); re-earn anyway.
     "l3g_ann_ivf_hier_top1_planted",
-    #    - l19: consumes the dedup index shape l38 persists; re-earn.
     "l19_incremental_minhash_dedup",
-    # 2) window fill: rotate older-evidence rows (descending staleness)
-    #    so the driver keeps refreshing the registry's long tail.
-    "l25_ann_ivf_index_add",
-    "l26_ann_ivfpq_topk",
-    "t12_semantic_ingest_gate",
-    "t11_neardup_ingest_gate",
     "l27b_semantic_dedup_lsh",
     "l27c_semantic_dedup_ivf",
     "l11b_rag_top1_planted",
@@ -417,232 +213,6 @@ _ROUND10_FRONT = [
     "l33_document_chunking",
     "q2_min_cost_supplier",
     "a13b_bloom_join_exactness",
-]
-
-# Round-9 window, kept for the audit trail (CORRECTNESS_r09 covers it).
-_ROUND9_FRONT = [
-    # 1) queries ADDED in round 8 (no driver row yet — VERDICT r8 task
-    #    #1) or CHANGED in round 9, leading the window so every SURVEY
-    #    row is driver-evidenced after this round:
-    #    - l3g/l27c: re-earn evidence on the r9 digest-collapse + hard
-    #      group-cap rewrite of the hierarchical quantizers.
-    #    - l11b: NEW — planted hash oracle through the RAG composite
-    #      (VERDICT r8 task #3), retiring l11's no_oracle status.
-    #    - w13/l33/a13b/l3h/l3i/q2: r8 additions queued by VERDICT.
-    "l3g_ann_ivf_hier_top1_planted",
-    "l3h_ann_pq_top1_planted",
-    "l3i_ann_ivfpq_top1_planted",
-    "a13b_bloom_join_exactness",
-    "w13_salted_topk",
-    "l33_document_chunking",
-    "q2_min_cost_supplier",
-    "l27c_semantic_dedup_ivf",
-    "l11b_rag_top1_planted",
-    #    - l34: NEW in r9 — persisted hierarchical ANN index with
-    #      partition-pruned query reads (build-once/query-many).
-    "l34_ann_index_persisted",
-    #    - l35: NEW in r9 — hash-grade incremental ingest into the
-    #      persisted index (partition-local append, no retrain).
-    "l35_ann_index_add_persisted",
-    #    - l36: NEW in r9 — deletion from the persisted index via
-    #      dynamic partition overwrite (touched supers only).
-    "l36_ann_index_delete_persisted",
-    # 2) backfill: the rows whose latest driver evidence is oldest
-    #    (r5/r6-era — VERDICT r8 task #1 backfill list), oldest first.
-    "l12_train_test_split",
-    "l13_stratified_sample",
-    "l14_sequence_packing",
-    "l15_vocab_topk",
-    "l16_decontamination",
-    "l5j_repetition",
-    "l17_bpe_merges",
-    "l21_bpe_encode",
-    "l22_shuffle_shards",
-    "l23_weighted_sample",
-    "l24_token_budget_select",
-    "t9_stateful_counters",
-    "t10_incremental_ingest_dedup",
-    "w12_scd2_dimension",
-    "a10_median_percentile",
-    "u2d_grouped_agg_udf",
-    "j4_range_join",
-    "j5b_asof_tolerance",
-    "p2_project_prune",
-    "p3_p6_compound_filter",
-    "p4_string_predicates",
-    "p5_anti_join",
-    "s3_parquet_scan_count",
-    "l18_incremental_exact_dedup",
-    "l19_incremental_minhash_dedup",
-    "l20_pii_scrub",
-    "l2_minhash_lsh_dedup",
-    "l2b_simhash_pairs",
-    "l2c_ngram_jaccard",
-    "l4_cosine_pairs",
-    "l4b_lsh_cosine_pairs",
-    "l1_exact_dedup",
-    "l16b_decontaminate_flag",
-    "u2_scalar_udf",
-    "u2b_builtin_expression",
-    "u2c_segment_reserves",
-    "u3_grouped_map",
-    "u4_table_function",
-    "l5_text_stats",
-    "l5b_token_counts",
-    "l5c_quality_scores",
-]
-
-# Round-8 window, kept for the audit trail (CORRECTNESS_r08 covers it).
-_ROUND8_FRONT = [
-    # 1) queries CHANGED in round 8 — they must re-earn driver evidence
-    #    on the new code/oracle:
-    #    - l30: `dims` is now stringified ('4x4x3') on both sides so the
-    #      driver's pandas canonicalizer never sees a list cell (the one
-    #      r7 err row).
-    #    - l27c: ivf_cosine_pairs' coarse quantizer rewritten to the
-    #      two-level (hierarchical) form — same bounded-list contract,
-    #      sub-quadratic assignment (VERDICT r7 "What's wrong" #2).
-    "l30_media_decode",
-    "l27c_semantic_dedup_ivf",
-    # 2) the 48 rows whose latest driver evidence is r4-era (VERDICT r7
-    #    "Next round" #2) — the LAST of the driver-evidence debt; after
-    #    this window every registry row's latest driver check is ≤4
-    #    rounds old. All pass tools/check_oracle on round-8 code.
-    #    ROUND-9 QUEUE: l3g_ann_ivf_hier_top1_planted (NEW in r8 — the
-    #    hierarchical ANN index's planted-twin slice),
-    #    q2_min_cost_supplier (supplycost output hardened from
-    #    round(,4) to boundary-free floor(x*1e4) after a half-way
-    #    rounding flip at sf0.1), and l3h_ann_pq_top1_planted /
-    #    l3i_ann_ivfpq_top1_planted (NEW in r8 — hash-grade slices for
-    #    the PQ and IVF-PQ paths, completing the ANN family), and
-    #    a13b_bloom_join_exactness (NEW in r8 — the bloom sketch's
-    #    no-false-negative identity as a hash oracle), w13_salted_topk
-    #    (NEW in r8 — skew-safe two-phase top-k whose oracle is the
-    #    plain single-window answer), and l33_document_chunking (NEW
-    #    in r8 — RAG-style overlapping chunking, zero-shuffle) must lead
-    #    _ROUND9_FRONT — all hash-green locally at sf0.01 AND sf0.1 —
-    #    then backfill with the rows whose evidence is oldest (the
-    #    r5-era family).
-    "a7c_grouping_sets",
-    "a9_stats_aggregates",
-    "a10b_approx_percentile",
-    "a12_salted_aggregate",
-    "a13_bloom_filter",
-    "a14_argmax_aggregates",
-    "a15_regression_aggregates",
-    "a16_hll_sketch_union",
-    "a17_bit_aggregates",
-    "a18_count_if_mode",
-    "f1b_string_funcs2",
-    "f4c_month_grid",
-    "f5b_array_ops",
-    "f5c_explode_outer",
-    "f7b_json_typed",
-    "f7c_to_json",
-    "j7_salted_join",
-    "l11_rag_index_search",
-    "l2d_embedding_dedup",
-    "l5h_tfidf",
-    "l5i_bm25",
-    "l6c_frame_sample",
-    "l9_fuzzy_levenshtein",
-    "o5b_multiset_ops",
-    "o7_unpivot",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_type_profit",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q16_supplier_part_variety",
-    "q17_small_quantity_revenue",
-    "q20_excess_shipments",
-    "q21_waiting_supplier",
-    "s2_file_provenance",
-    "s5b_orc_roundtrip",
-    "s5c_jsonl_roundtrip",
-    "s6_partitioned_roundtrip",
-    "s7_resume_roundtrip",
-    "s9_json_roundtrip",
-    "s10_schema_evolution",
-    "s11_orc_roundtrip",
-    "t5_watermark_equivalence",
-    "t6_stream_dedup_equivalence",
-    "w5_range_frame",
-    "w6_distribution_ranks",
-    "w7_nth_value",
-    "w8_nulls_ordering",
-]
-
-# Round-7 window, kept for the audit trail (CORRECTNESS_r07 covers it).
-_ROUND7_FRONT = [
-    # 1) queries ADDED or semantically CHANGED in round 7 — they must
-    #    earn driver evidence for the new code/oracle: l27 (explicit
-    #    exact=True opt-in), l27b (NEW: SemDeDup over the blocked LSH
-    #    pair stage), l28 (zero-share weight pinned to 0 on both
-    #    sides), l29 (AQE-decided drop-set anti-join + token-less docs
-    #    now returned; oracle totals rebased on documents), l30 (NEW:
-    #    real BMP/WAV codec decode, exact-sum oracle).
-    "l27_semantic_dedup",
-    "l27b_semantic_dedup_lsh",
-    "l27c_semantic_dedup_ivf",
-    "t12_semantic_ingest_gate",
-    "s14_bucketed_colocated_join",
-    "l3e_ann_lsh_top1_planted",
-    "l3f_ann_ivf_top1_planted",
-    "l28_domain_mix",
-    "l29_segment_dedup",
-    "l30_media_decode",
-    "l31_dsir_weights",
-    "l32_repeated_spans",
-    # 2) the 37 queries whose latest driver evidence dates to round 3
-    #    (VERDICT r6 "Next round" #1): every row re-earns hash-grade
-    #    evidence on shipped code. All pass locally under
-    #    tools/check_oracle; audit debt, not suspected breakage.
-    "a1_a2_global_agg",
-    "a4_groupby_q1",
-    "a5_count_distinct",
-    "a6_approx_count_distinct",
-    "a7_rollup",
-    "a7b_cube",
-    "a8_distinct",
-    "f1_f2_string_funcs",
-    "f3_math_funcs",
-    "f4_date_funcs",
-    "f4b_date_arith",
-    "f5_array_funcs",
-    "f6_struct_map",
-    "f7_json_extract",
-    "f8_case_coalesce",
-    "j2b_full_outer_join",
-    "j4b_pure_range_join",
-    "j6_cross_join",
-    "o1_o3_topk",
-    "o2_ntile_bucketing",
-    "o4_union_all",
-    "o5_except_intersect",
-    "q_pivot",
-    "q_sql_correlated_subquery",
-    "s4_listing_source",
-    "t1_stream_batch_equivalence",
-    "t2_tumbling_window",
-    "t3_sliding_window",
-    "t4_session_window",
-    "t7_stream_stream_join",
-    "ts1_resample_locf",
-    "w10_cohort_retention",
-    "w11_funnel",
-    "w2_lag_lead",
-    "w3_running_agg",
-    "w4_topk_per_group",
-    "w9_sessionization",
-    # 3) the oldest r4-era rows filling the remaining window slots.
-    #    ROUND-8 QUEUE (the 48 rows whose latest driver evidence is
-    #    r4-era after this window; all pass tools/check_oracle on
-    #    round-7 code — rotate them into _ROUND8_FRONT):
-    #    a7c a9 a10b a12 a13 a14 a15 a16 a17 a18, f1b f4c f5b f5c f7b f7c,
-    #    j7, l11 l2d l5h l5i l6c l9, o5b o7, q7 q8 q9 q13 q15 q16 q17
-    #    q20 q21, s2 s5b s5c s6 s7 s9 s10 s11, t5 t6, w5 w6 w7 w8.
-    "a10_median_percentile",
 ]
 
 
@@ -678,11 +248,7 @@ def load_all() -> dict[str, Query]:
         window_queries2,
     )
 
-    front = [n for n in _ROUND14_FRONT if n in REGISTRY]
-    front += [n for n in _ROUND13_FRONT if n in REGISTRY and n not in front]
-    front += [n for n in _ROUND12_FRONT if n in REGISTRY and n not in front]
-    front += [n for n in _ROUND11_FRONT if n in REGISTRY and n not in front]
-    front += [n for n in _ROUND10_FRONT if n in REGISTRY and n not in front]
+    front = [n for n in _FRONT if n in REGISTRY]
     seen = set(front)
     ordered = front + [n for n in REGISTRY if n not in seen]
     return {n: REGISTRY[n] for n in ordered}

@@ -90,28 +90,23 @@ def tier_health(
             }
     out["datasets"] = datasets
 
-    meta = None
-    if spark is not None:
-        try:
-            row = spark.read.parquet(path + "/meta").first()
-            meta = None if row is None else row.asDict()
-        except Exception:
-            meta = None
-    out["meta"] = meta
+    out["meta"] = out["stats_n_rows"] = out["recall_curve"] = None
     if spark is not None:
         from actuarial_reserve_modelling_spark.operators.similarity import (
-            read_index_stats,
             read_recall_stats,
         )
+        from actuarial_reserve_modelling_spark.sources.tiers import read_index_stats
 
+        try:
+            row = spark.read.parquet(path + "/meta").first()
+            out["meta"] = None if row is None else row.asDict()
+        except Exception:
+            pass
         out["stats_n_rows"] = read_index_stats(spark, path)
-        # ANN tiers only; None elsewhere (advisory, r14): the measured
+        # ANN tiers only; None elsewhere (advisory): the measured
         # recall/probe curve nprobe="auto" routes on, plus the corpus
         # size it was measured at (staleness signal vs stats_n_rows)
         out["recall_curve"] = read_recall_stats(spark, path)
-    else:
-        out["stats_n_rows"] = None
-        out["recall_curve"] = None
 
     writer = None
     if local is not None:

@@ -75,7 +75,7 @@ is only crash-safe under, these storage properties:
   mid-commit can still leave partial files; rerunning the same
   maintenance op is the documented recovery (all paths are
   idempotent by content hash / full-partition rewrite).
-* the advisory ``stats/`` swap (similarity.py ``_write_index_stats``)
+* the advisory ``stats/`` swap (tiers.py ``_write_index_stats``)
   uses write-temp + ``os.rename`` on local roots and falls back to a
   direct overwrite elsewhere — stats are advisory (readers fall back
   to scanning members), so a torn stats write degrades performance,

@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 
 from actuarial_reserve_modelling_spark.catalog import load_table
 from actuarial_reserve_modelling_spark.sources.sinks import vacuum_index
+from actuarial_reserve_modelling_spark.sources.tiers import Dataset, hash_part
 
 
 # Staged source dirs, keyed by (sf_dir, n_files): T1-T4 all stream the
@@ -138,6 +139,10 @@ def events_stream_source(
     return stream, src_dir
 
 
+def _path_safe(key: str) -> str:
+    return "".join(c if c.isalnum() else "_" for c in key)
+
+
 def staged_ordered_source(
     spark: SparkSession, frames: list[DataFrame], cache_key: str
 ) -> DataFrame:
@@ -151,7 +156,7 @@ def staged_ordered_source(
     """
     import glob
 
-    safe = "".join(c if c.isalnum() else "_" for c in cache_key)
+    safe = _path_safe(cache_key)
     src_dir = _STAGED_SOURCES.get((cache_key, len(frames)))
     if src_dir is None:
         src_dir = tempfile.mkdtemp(prefix=f"arm_stream_{safe}_")
@@ -381,9 +386,12 @@ class _IngestGate:
     * **Work dir.** ``work_dir`` (created if missing, reused if present)
       or a temp dir removed at exit. Its persisted tiers are the state
       of record: a later call on the same ``work_dir`` checks its
-      batches against everything admitted before. The stream checkpoint
-      ``ckpt/`` binds one call's staged source, so a call with new
-      batches needs it removed; its epochs then restart at ``e0``.
+      batches against everything admitted before. A call's stream
+      checkpoint and epoch sink are keyed by its path-safe
+      ``cache_key`` (``ckpt/<key>``, ``<sink>/<key>/e{bid}``), so a
+      later call with another key starts its own epochs at ``e0``
+      without touching an earlier call's output, and the frame ``run``
+      returns holds this call's rows only.
     * **Lease.** Each micro-batch holds the work-dir writer lease over
       its WHOLE check -> sink -> append step, so a second gate process
       on the same tiers refuses loudly instead of checking against an
@@ -391,8 +399,8 @@ class _IngestGate:
       inside acquire reentrantly under it). ``locked`` runs any other
       tier mutation (t10's seed bootstrap) under the same lease.
     * **Epoch-keyed overwrite sink.** Epoch ``bid`` clears and then
-      overwrites ``<sink>/e{bid}``, so a retried epoch replaces its own
-      output. ``append`` gets the committed rows re-read from the sink
+      overwrites ``<sink>/<key>/e{bid}``, so a retried epoch replaces its
+      own output. ``append`` gets the committed rows re-read from the sink
       (a cheap columnar read), so tier appends derive from what was
       committed and the check plan runs once.
     * **Idempotent appends, same-id replay convergence.** Every tier
@@ -467,12 +475,14 @@ class _IngestGate:
         auto_vacuum: bool = False,
     ) -> DataFrame:
         spark = self.spark
+        key = _path_safe(cache_key)
+        sink = os.path.join(self.sink, key)
 
         def step(batch_df: DataFrame, bid: int) -> None:
             if self._marks is not None:
                 self._marks.clear()
             self._t0 = time.time()
-            out_epoch = os.path.join(self.sink, f"e{bid}")
+            out_epoch = os.path.join(sink, f"e{bid}")
             shutil.rmtree(out_epoch, ignore_errors=True)
             if auto_compact and bid > 0:
                 due = [
@@ -517,12 +527,12 @@ class _IngestGate:
             stream.writeStream.foreachBatch(
                 lambda batch_df, bid: self.locked(step, batch_df, bid)
             ),
-            self.path("ckpt"),
+            os.path.join(self.path("ckpt"), key),
             state_partitions,
         )
         return (
             spark.read.option("recursiveFileLookup", "true")
-            .parquet(self.sink)
+            .parquet(sink)
             .select(*out_cols)
         )
 
@@ -536,24 +546,18 @@ class _FingerprintTier:
     ~24 bytes per kept doc and the check shuffles digests, never
     documents."""
 
+    _DS = Dataset("", "fpart")  # the tier root is the dataset
+
     def __init__(self, spark: SparkSession, path: str, fp_parts: int) -> None:
         self.spark = spark
         self.path = path
-        self.fpart = F.pmod(F.xxhash64(F.col("fingerprint")), F.lit(fp_parts)).cast(
-            "int"
-        )
+        self.fpart = hash_part(fp_parts, "fingerprint")
 
     def present(self) -> bool:
         return _committed_parquet(self.path)
 
     def compact(self, cap: int) -> None:
-        from actuarial_reserve_modelling_spark.operators.similarity import (
-            compact_partitioned_index,
-        )
-
-        compact_partitioned_index(
-            self.spark, self.path, "fpart", max_files_per_partition=cap
-        )
+        self._DS.compact(self.spark, self.path, cap)
 
     def fingerprints(self, docs: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
         from actuarial_reserve_modelling_spark.operators.textstats import (
@@ -583,18 +587,14 @@ class _FingerprintTier:
             .select("doc_id", *keep, "fingerprint", "fpart")
             .localCheckpoint(eager=True)
         )
-        fparts = [int(r["fpart"]) for r in first.select("fpart").distinct().collect()]
-        return first, fparts
-
-    def _indexed(self, fparts: list[int]) -> DataFrame:
-        return self.spark.read.parquet(self.path).filter(F.col("fpart").isin(fparts))
+        return first, self._DS.parts_of(first)
 
     def survivors(self, first: DataFrame, fparts: list[int]) -> DataFrame:
         """``first`` minus the rows whose fingerprint is indexed under a
         DIFFERENT doc_id (same-id matches are replays, not duplicates)."""
         if not self.present():
             return first
-        seen = self._indexed(fparts).select(
+        seen = self._DS.read(self.spark, self.path, fparts).select(
             "fingerprint", F.col("doc_id").alias("_idx_id")
         )
         hit = (
@@ -610,13 +610,8 @@ class _FingerprintTier:
         is not indexed yet; the anti-join reads only ``fparts``, which
         must cover the rows' partitions."""
         if self.present():
-            existing = self._indexed(fparts).select(
-                F.col("doc_id").cast("long").alias("doc_id")
-            )
-            rows = rows.join(existing, "doc_id", "left_anti")
-        rows.select("doc_id", "fingerprint", "fpart").repartition(
-            F.col("fpart")
-        ).write.mode("append").partitionBy("fpart").parquet(self.path)
+            rows = self._DS.unindexed(self.spark, self.path, rows, "doc_id", fparts)
+        self._DS.write(rows.select("doc_id", "fingerprint", "fpart"), self.path)
 
 
 def _cluster_reps(frame: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
@@ -678,11 +673,8 @@ def incremental_ingest_dedup(
 
         def bootstrap() -> None:
             seed_fp = fpt.fingerprints(seed).localCheckpoint(eager=False)
-            sparts = []
-            if fpt.present():  # the list bounds the anti-join's read
-                rows = seed_fp.select("fpart").distinct().collect()
-                sparts = [int(r["fpart"]) for r in rows]
-            fpt.append(seed_fp, sparts)
+            # the list bounds the anti-join's read
+            fpt.append(seed_fp, fpt._DS.parts_of(seed_fp) if fpt.present() else [])
 
         gate.locked(bootstrap)
 
@@ -946,7 +938,6 @@ def incremental_semantic_ingest(
     Returns admitted rows ``(vec_id, batch)``.
     """
     from actuarial_reserve_modelling_spark.operators.similarity import (
-        _vecsig_spart,
         add_to_vecsig_index,
         compact_vecsig_index,
         hyperplane_signatures_multi,
@@ -954,6 +945,7 @@ def incremental_semantic_ingest(
         lsh_cosine_pairs_with_index,
         persist_vecsig_index,
         read_vecsig_index_meta,
+        vecsig_spart,
     )
 
     gate = _IngestGate(spark, work_dir, "arm_sem_ingest_")
@@ -1016,7 +1008,7 @@ def incremental_semantic_ingest(
             # projection of the (table, sig) cell, and the semi-join
             # restricts to the surviving vectors
             sigs_e = batch_sigs.withColumn(
-                "spart", _vecsig_spart(meta_idx["k_sig_parts"])
+                "spart", vecsig_spart(meta_idx["k_sig_parts"])
             ).join(vecs.select("vec_id"), "vec_id", "leftsemi")
         else:
             # foreign tier in the work dir: sign with ITS params
@@ -1028,7 +1020,7 @@ def incremental_semantic_ingest(
                     meta_idx["seed"],
                     meta_idx["dim"],
                 )
-                .withColumn("spart", _vecsig_spart(meta_idx["k_sig_parts"]))
+                .withColumn("spart", vecsig_spart(meta_idx["k_sig_parts"]))
                 .localCheckpoint(eager=True)
             )
         hits = (

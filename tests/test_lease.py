@@ -155,7 +155,7 @@ def test_stats_swap_is_atomic_and_exact(spark, tmp_path):
     """The rewrite never leaves a torn stats/ visible: after each swap
     the live dataset reads back the exact new count and no staging
     (_tmp_stats_*) residue survives."""
-    from actuarial_reserve_modelling_spark.operators.similarity import (
+    from actuarial_reserve_modelling_spark.sources.tiers import (
         _write_index_stats,
         read_index_stats,
     )

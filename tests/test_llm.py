@@ -2011,12 +2011,12 @@ def test_persisted_ann_index_pre_r10_layout_fallback(spark, tmp_path):
     from pyspark.sql import types as T
 
     from actuarial_reserve_modelling_spark.operators.similarity import (
-        _evict_index_cache,
         ann_ivf_hier_topk_persisted,
         ivf_hier_build,
         persist_ann_index,
         read_ann_index_meta,
     )
+    from actuarial_reserve_modelling_spark.sources.tiers import _evict_index_cache
 
     rng = np.random.default_rng(53)
     pts = rng.standard_normal((300, 16))
@@ -2511,6 +2511,14 @@ def test_vecsig_tier_lifecycle_and_pruned_parity(spark, tmp_path):
 def test_vecsig_tier_delete_all_and_missing_meta(spark, tmp_path):
     import pytest as _pytest
 
+    from actuarial_reserve_modelling_spark.operators.dedup import (
+        add_to_dedup_index,
+        build_dedup_index,
+        delete_from_dedup_index,
+        load_dedup_index,
+        minhash_dedup_against_index_persisted,
+        persist_dedup_index,
+    )
     from actuarial_reserve_modelling_spark.operators.similarity import (
         add_to_vecsig_index,
         delete_from_vecsig_index,
@@ -2540,6 +2548,25 @@ def test_vecsig_tier_delete_all_and_missing_meta(spark, tmp_path):
     add_to_vecsig_index(spark, path, emb)
     out = lsh_cosine_dedup_against_index_persisted(spark, path, batch)
     assert out.count() == emb.count()
+    # the dedup tier's delete-all shape: banded/ and fingerprints/ both
+    # emptied, the pruned lookup answers empty and a later add repopulates
+    docs = load_table(spark, SF_SMOKE, "documents").filter(F.col("doc_id") < 20)
+    dpath = str(tmp_path / "dedup_small")
+    persist_dedup_index(build_dedup_index(docs), dpath)
+    delete_from_dedup_index(spark, dpath, docs.select("doc_id"))
+    assert spark.read.parquet(dpath + "/fingerprints").count() == 0
+    assert spark.read.parquet(dpath + "/banded").count() == 0
+    twins = docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
+
+    def lookup():
+        return minhash_dedup_against_index_persisted(
+            spark, dpath, twins, route="pruned"
+        )
+
+    assert lookup().count() == 0
+    add_to_dedup_index(spark, dpath, docs)
+    indexed = {r["doc_id"] for r in load_dedup_index(spark, dpath).collect()}
+    assert indexed and {r["new_id"] - 100000 for r in lookup().collect()} == indexed
 
 
 def test_vecsig_persist_rejects_duplicate_ids(spark, tmp_path):
@@ -2618,7 +2645,7 @@ def test_dedup_lookup_adaptive_routing_parity_and_stats(spark, tmp_path):
     tier's advisory stats/ — answers must be identical on BOTH sides of
     the threshold, and persist/add/delete must maintain the count."""
     from actuarial_reserve_modelling_spark.operators import dedup as D
-    from actuarial_reserve_modelling_spark.operators.similarity import (
+    from actuarial_reserve_modelling_spark.sources.tiers import (
         _INDEX_STATS_CACHE,
         read_index_stats,
     )
@@ -2927,12 +2954,12 @@ def test_presigned_vecsig_batch_shared_across_lookup_and_append(spark, tmp_path)
     routes), append parity from a presigned SUPERSET frame, and the
     loud failure on foreign-parameter frames."""
     from actuarial_reserve_modelling_spark.operators.similarity import (
-        _vecsig_spart,
         add_to_vecsig_index,
         hyperplane_signatures_multi,
         lsh_cosine_dedup_against_index_persisted,
         persist_vecsig_index,
         read_vecsig_index_meta,
+        vecsig_spart as _vecsig_spart,
     )
 
     emb = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
@@ -3021,12 +3048,12 @@ def test_presigned_params_hash_rejects_same_shape_different_seed(spark, tmp_path
         persist_dedup_index,
     )
     from actuarial_reserve_modelling_spark.operators.similarity import (
-        _vecsig_spart,
         add_to_vecsig_index,
         hyperplane_signatures_multi,
         lsh_cosine_dedup_against_index_persisted,
         persist_vecsig_index,
         read_vecsig_index_meta,
+        vecsig_spart as _vecsig_spart,
     )
 
     docs = load_table(spark, SF_SMOKE, "documents")

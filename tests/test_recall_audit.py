@@ -308,10 +308,10 @@ def test_auto_probe_warns_when_curve_stale_vs_corpus(spark, tier):
     warning on auto (using the curve meanwhile — advisory)."""
     from actuarial_reserve_modelling_spark.operators.similarity import (
         _auto_probe,
-        _write_index_stats,
         persist_recall_audit,
         read_recall_stats,
     )
+    from actuarial_reserve_modelling_spark.sources.tiers import _write_index_stats
 
     path, _corpus = tier
     curve = persist_recall_audit(spark, path, probe_settings=(1,), n_sample=16, k=3)

@@ -1156,14 +1156,11 @@ def test_ann_ingest_gate_refreshes_recall_curve(spark, tmp_path):
     # the curve was measured after batch 2's append: its corpus stamp
     # covers at least the first two batches' admitted rows
     assert curve[0]["n_corpus"] >= batches[0].count() + batches[1].count()
-    # a second call on the same work_dir resumes from the persisted
-    # index (the checkpoint binds the first call's staged source, so it
-    # goes): fresh vectors are admitted, exact twins of the first call's
-    # rows are rejected, and so are twins of the fresh ones one batch
-    # later, which only the resumed call's batch-0 append can catch
-    import shutil
-
-    shutil.rmtree(work + "/ckpt")
+    # a second call on the same work_dir (its own cache_key, so its own
+    # checkpoint and sink epochs) resumes from the persisted index: fresh
+    # vectors are admitted, exact twins of the first call's rows are
+    # rejected, and so are twins of the fresh ones one batch later, which
+    # only the resumed call's batch-0 append can catch
     src = emb.filter(F.col("vec_id") % 10 == 0)
     fresh = src.select(
         (F.col("vec_id") + 500_000).alias("vec_id"),
@@ -1184,3 +1181,11 @@ def test_ann_ingest_gate_refreshes_recall_curve(spark, tmp_path):
         if r["vec_id"] >= 400_000
     }
     assert resumed == {(r["vec_id"], 0) for r in fresh.collect()}
+    # the first call's admitted rows are still in the work dir's sink
+    sunk = {
+        (r["vec_id"], r["batch"])
+        for r in spark.read.option("recursiveFileLookup", "true")
+        .parquet(work + "/admitted")
+        .collect()
+    }
+    assert expect <= sunk

@@ -79,14 +79,10 @@ def _worker(gate: str, phase: str, work: str, out_json: str) -> None:
     elif phase == "first":
         batches = [spark.createDataFrame(_batch_rows(0), schema)]
     else:  # "resume": the remaining batches in a FRESH session
+        # a new cache_key, so the resumed run streams under its own
+        # checkpoint — the gate's state of record is the persisted index
+        # + committed sink, which is the point
         batches = [spark.createDataFrame(_batch_rows(b), schema) for b in (1, 2)]
-        # the dead process's checkpoint binds the OLD staged source;
-        # the resumed run streams a new one (the in-process resume
-        # pytest's convention) — the gate's state of record is the
-        # persisted index + committed sink, which is the point
-        import shutil
-
-        shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
     if gate == "t10":
         got = incremental_ingest_dedup(
             spark, batches, cache_key=f"restart_{gate}_{phase}", seed=seed,
@@ -137,12 +133,12 @@ def main() -> None:
                 sys.exit(1)
         ref = json.load(open(ref_out))
         # the restart run's admitted set = phase 1's committed output +
-        # the resumed process's output (the accepted/ sink is per-run
-        # scratch keyed by in-run epoch, so the resumed run's e0 is its
-        # OWN first batch; the gate's state of record — the persisted
-        # index — is what carries phase 1's admissions forward, and
-        # doc_ids are globally unique across batches so a plain union
-        # is exact)
+        # the resumed process's output (each call returns its own rows:
+        # the sink is keyed by call, then by in-call epoch, so the
+        # resumed run's e0 is its OWN first batch; the gate's state of
+        # record — the persisted index — is what carries phase 1's
+        # admissions forward, and doc_ids are globally unique across
+        # batches so a plain union is exact)
         restart = sorted(
             {tuple(x) for x in json.load(open(p1_out))}
             | {tuple(x) for x in json.load(open(p2_out))}

@@ -82,8 +82,8 @@ def main() -> None:
 
     from actuarial_reserve_modelling_spark.operators.similarity import (
         persist_vecsig_index,
-        read_index_stats,
     )
+    from actuarial_reserve_modelling_spark.sources.tiers import read_index_stats
 
     root = tempfile.mkdtemp(prefix="arm_lease_contention_")
     path = os.path.join(root, "tier")

@@ -53,7 +53,7 @@ def main() -> None:
     from pyspark.sql import types as T
 
     from actuarial_reserve_modelling_spark.operators.similarity import (
-        _vecsig_spart,
+        vecsig_spart,
         hyperplane_signatures_multi,
         load_vecsig_index,
         lsh_cosine_dedup_against_index,
@@ -145,7 +145,7 @@ def main() -> None:
             for r in hyperplane_signatures_multi(
                 batch, meta["num_planes"], meta["num_tables"], meta["seed"], DIM
             )
-            .withColumn("spart", _vecsig_spart(meta["k_sig_parts"]))
+            .withColumn("spart", vecsig_spart(meta["k_sig_parts"]))
             .select("spart")
             .distinct()
             .collect()
