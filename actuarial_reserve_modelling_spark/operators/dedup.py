@@ -23,7 +23,10 @@ Scale design (the 100 TB story):
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
 from functools import partial
+from itertools import chain
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -48,6 +51,9 @@ from actuarial_reserve_modelling_spark.sources.tiers import (
 # Tokens: distinct, non-empty, whitespace-split. Kept identical to the
 # DuckDB oracle's string_split + filter + DISTINCT.
 TOKENS = "array_distinct(filter(split(text, ' '), x -> x != ''))"
+# The sorted xxhash64 token array every MinHash path keys, signs and
+# verifies on (the ``htok`` column of the dedup tier).
+HTOK = f"array_sort(transform({TOKENS}, t -> xxhash64(t)))"
 
 def _opt_broadcast(df: DataFrame, hint: bool) -> DataFrame:
     """Broadcast hint only when the caller asserts the side is bounded.
@@ -102,6 +108,92 @@ def _signatures_from_tokens(
     return _signatures_from_hashed(hashed, num_hashes=num_hashes, seed=seed)
 
 
+def _minhash_coeffs(num_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """The universal-hash draws (a odd, b) of a MinHash signing."""
+    rng = np.random.default_rng(seed)
+    a = rng.integers(1, 1 << 63, size=num_hashes, dtype=np.uint64) | np.uint64(1)
+    b = rng.integers(0, 1 << 63, size=num_hashes, dtype=np.uint64)
+    return a, b
+
+
+def minhash_rows(
+    values: np.ndarray, lens: np.ndarray, a: np.ndarray, b: np.ndarray
+) -> np.ndarray:
+    """MinHash signatures of ``len(lens)`` token-hash rows given as ONE
+    flat int64 ``values`` buffer (row i holds the next ``lens[i]``
+    values), as an ``(n, len(a))`` int64 matrix; a token-less row signs
+    to zeros. The numpy body of the ``_signatures_from_hashed`` kernel —
+    the t11 ingest gate signs its driver-resident batch with this same
+    function, so both sides are bit-identical by construction."""
+    num_hashes = len(a)
+    ends = np.cumsum(lens)
+    n = len(lens)
+    sig_rows = np.zeros((n, num_hashes), dtype=np.int64)
+    # bound the per-dispatch token slice: the scratch row is 8
+    # bytes/token, so 2^18 tokens keeps it at 2 MB (L2-resident
+    # while the per-hash reduceat re-reads it)
+    chunk_token_budget = 1 << 18
+    # chunked batch vectorization: one flat-slice of token hashes
+    # per run of docs, broadcast all hash functions over it,
+    # segment-minimize with minimum.reduceat — one numpy dispatch
+    # per chunk instead of one per document
+    start = 0
+    while start < n:
+        end, tot = start, 0
+        while end < n and (end == start or tot + lens[end] <= chunk_token_budget):
+            tot += lens[end]
+            end += 1
+        nonempty = np.nonzero(lens[start:end])[0] + start
+        if len(nonempty):
+            lo = ends[start - 1] if start else 0
+            # empty rows contribute nothing to the values buffer,
+            # so the chunk's tokens are one contiguous slice
+            base = values[lo : ends[end - 1]].view(np.uint64)
+            bounds = (ends[nonempty] - lens[nonempty] - lo).astype(np.int64)
+            # one contiguous multiply+add+reduceat per hash row
+            # into a reused scratch buffer. The obvious
+            # broadcast form (a[:,None]*base[None,:]+b[:,None])
+            # hits numpy's stride-0 generic inner loop for u64
+            # multiply — measured 123 ns/element vs ~3 ns here
+            # (~70× on the whole chunk, r14 microbench). u64
+            # wraparound arithmetic is per-element, so the
+            # signatures are bit-identical either way (pinned
+            # by test_minhash_rowloop_matches_broadcast).
+            mins = np.empty((num_hashes, len(bounds)), dtype=np.uint64)
+            tmp = np.empty(len(base), dtype=np.uint64)
+            for i in range(num_hashes):
+                np.multiply(base, a[i], out=tmp)
+                tmp += b[i]
+                np.minimum.reduceat(tmp, bounds, out=mins[i])
+            sig_rows[nonempty, :] = mins.T.view(np.int64)
+        start = end
+    return sig_rows
+
+
+def _signed_schema(num_hashes: int, seed: int, carry_htok: bool) -> T.StructType:
+    """(doc_id[, htok], sig) with the params-hash stamped into the sig
+    field's metadata: the presigned accept sites verify it against the
+    tier's persisted parameters (driver-side, zero jobs), so a
+    same-shape/different-seed frame fails loudly instead of corrupting
+    the tier."""
+    from actuarial_reserve_modelling_spark.operators.sigparams import (
+        SIG_PARAMS_KEY,
+        minhash_fingerprint,
+    )
+
+    fields = [T.StructField("doc_id", T.LongType())]
+    if carry_htok:
+        fields.append(T.StructField("htok", T.ArrayType(T.LongType())))
+    fields.append(
+        T.StructField(
+            "sig",
+            T.ArrayType(T.LongType()),
+            metadata={SIG_PARAMS_KEY: minhash_fingerprint(num_hashes, seed)},
+        )
+    )
+    return T.StructType(fields)
+
+
 def _signatures_from_hashed(
     hashed: DataFrame, num_hashes: int = 192, seed: int = 42,
     carry_htok: bool = False,
@@ -118,39 +210,15 @@ def _signatures_from_hashed(
     formulation re-running the whole tokenize/hash/sort subtree once
     per join side, so the index build paid tokenization twice plus a
     join exchange for a column the kernel already held."""
-    from actuarial_reserve_modelling_spark.operators.sigparams import (
-        SIG_PARAMS_KEY,
-        minhash_fingerprint,
-    )
-
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, 1 << 63, size=num_hashes, dtype=np.uint64) | np.uint64(1)
-    b = rng.integers(0, 1 << 63, size=num_hashes, dtype=np.uint64)
-
-    fields = [T.StructField("doc_id", T.LongType())]
-    if carry_htok:
-        fields.append(T.StructField("htok", T.ArrayType(T.LongType())))
-    # params-hash stamped into the sig field's metadata: the presigned
-    # accept sites verify it against the tier's persisted parameters
-    # (driver-side, zero jobs) so a same-shape/different-seed frame
-    # fails loudly instead of corrupting the tier (r15 guard hardening)
-    fields.append(
-        T.StructField(
-            "sig",
-            T.ArrayType(T.LongType()),
-            metadata={SIG_PARAMS_KEY: minhash_fingerprint(num_hashes, seed)},
-        )
-    )
-    schema = T.StructType(fields)
+    a, b = _minhash_coeffs(num_hashes, seed)
+    schema = _signed_schema(num_hashes, seed, carry_htok)
 
     def kernel(batches):
         # mapInArrow (r8): the token lists arrive as an Arrow ListArray
-        # whose flat values buffer IS the concatenated form this kernel
-        # always wanted — the pandas version re-built it per batch from
-        # n per-row Python lists (~1 s per 200k rows of pure conversion
-        # before any hashing; see operators/arrowkit.py). Arithmetic is
-        # unchanged bit for bit, so signatures — and every hash-compared
-        # pair set downstream — are identical.
+        # whose flat values buffer IS the concatenated form
+        # ``minhash_rows`` consumes — the pandas version re-built it per
+        # batch from n per-row Python lists (~1 s per 200k rows of pure
+        # conversion before any hashing; see operators/arrowkit.py).
         import pyarrow as pa
 
         from actuarial_reserve_modelling_spark.operators.arrowkit import (
@@ -159,53 +227,12 @@ def _signatures_from_hashed(
             rows_to_list_array,
         )
 
-        # bound the per-dispatch token slice: the scratch row is 8
-        # bytes/token, so 2^18 tokens keeps it at 2 MB (L2-resident
-        # while the per-hash reduceat re-reads it)
-        chunk_token_budget = 1 << 18
-
         for batch in batches:
             if batch.num_rows == 0:  # same guard as the similarity kernels
                 continue
             ids = int_col(batch.column("doc_id"))
             values, lens, _ = ragged_values(batch.column("htok"))
-            ends = np.cumsum(lens)
-            n = len(ids)
-            sig_rows = np.zeros((n, num_hashes), dtype=np.int64)
-            # chunked batch vectorization: one flat-slice of token hashes
-            # per run of docs, broadcast all hash functions over it,
-            # segment-minimize with minimum.reduceat — one numpy dispatch
-            # per chunk instead of one per document
-            start = 0
-            while start < n:
-                end, tot = start, 0
-                while end < n and (end == start or tot + lens[end] <= chunk_token_budget):
-                    tot += lens[end]
-                    end += 1
-                nonempty = np.nonzero(lens[start:end])[0] + start
-                if len(nonempty):
-                    lo = ends[start - 1] if start else 0
-                    # empty rows contribute nothing to the values buffer,
-                    # so the chunk's tokens are one contiguous slice
-                    base = values[lo : ends[end - 1]].view(np.uint64)
-                    bounds = (ends[nonempty] - lens[nonempty] - lo).astype(np.int64)
-                    # one contiguous multiply+add+reduceat per hash row
-                    # into a reused scratch buffer. The obvious
-                    # broadcast form (a[:,None]*base[None,:]+b[:,None])
-                    # hits numpy's stride-0 generic inner loop for u64
-                    # multiply — measured 123 ns/element vs ~3 ns here
-                    # (~70× on the whole chunk, r14 microbench). u64
-                    # wraparound arithmetic is per-element, so the
-                    # signatures are bit-identical either way (pinned
-                    # by test_minhash_rowloop_matches_broadcast).
-                    mins = np.empty((num_hashes, len(bounds)), dtype=np.uint64)
-                    tmp = np.empty(len(base), dtype=np.uint64)
-                    for i in range(num_hashes):
-                        np.multiply(base, a[i], out=tmp)
-                        tmp += b[i]
-                        np.minimum.reduceat(tmp, bounds, out=mins[i])
-                    sig_rows[nonempty, :] = mins.T.view(np.int64)
-                start = end
+            sig_rows = minhash_rows(values, lens, a, b)
             cols = [pa.array(ids, type=pa.int64())]
             names = ["doc_id"]
             if carry_htok:
@@ -406,40 +433,6 @@ def _jaccard_score_filter(
     return out.drop("_inter", "_raw_jac")
 
 
-def minhash_near_dup_pairs_with_index(
-    docs: DataFrame,
-    threshold: float = 0.95,
-    bands: int = 24,
-    rows_per_band: int = 8,
-    seed: int = 42,
-    text_col: str = "text",
-    broadcast_verify: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """``minhash_near_dup_pairs`` that ALSO returns the signed
-    exact-collapse rep frame (doc_id, htok, sig — the
-    ``build_dedup_index`` shape) it computed internally, eagerly
-    checkpointed so the pair pipeline and the caller share ONE kernel
-    run. Every rep that survives near-dup collapse is an exact-collapse
-    rep, so the frame covers any downstream survivor subset — the
-    ingest gate semi-joins it instead of re-signing its batch for the
-    cross-batch check, the tier append, and the bootstrap persist
-    (r14: one MinHash pass per batch where the gate paid up to three).
-    Signatures are bit-identical to ``build_dedup_index`` over the same
-    docs: same tokenizer, same kernel, same parameters, and every
-    member of an exact-collapse group carries the identical htok
-    array."""
-    return _minhash_near_dup_pairs(
-        docs,
-        threshold=threshold,
-        bands=bands,
-        rows_per_band=rows_per_band,
-        seed=seed,
-        text_col=text_col,
-        broadcast_verify=broadcast_verify,
-        with_index=True,
-    )
-
-
 def minhash_near_dup_pairs(
     docs: DataFrame,
     threshold: float = 0.95,
@@ -480,33 +473,6 @@ def minhash_near_dup_pairs(
     Jaccard with anything — including each other — is 0/0 = NULL in the
     oracle, never ≥ threshold.
     """
-    return _minhash_near_dup_pairs(
-        docs,
-        threshold=threshold,
-        bands=bands,
-        rows_per_band=rows_per_band,
-        seed=seed,
-        text_col=text_col,
-        broadcast_verify=broadcast_verify,
-        with_index=False,
-    )
-
-
-def _minhash_near_dup_pairs(
-    docs: DataFrame,
-    threshold: float,
-    bands: int,
-    rows_per_band: int,
-    seed: int,
-    text_col: str,
-    broadcast_verify: bool,
-    with_index: bool,
-):
-    """Body of both public forms. ``with_index=False`` keeps the
-    signed frame an unnamed subtree feeding the banding stage (plan
-    identical to the historical single-output operator);
-    ``with_index=True`` eagerly checkpoints it so the pair pipeline
-    reads the one materialization the caller also receives."""
     toks = docs.select(
         "doc_id", F.expr(TOKENS.replace("text", text_col)).alias("tokens")
     ).filter(F.size("tokens") > 0)
@@ -548,12 +514,6 @@ def _minhash_near_dup_pairs(
         seed=seed,
         carry_htok=True,
     )
-    if with_index:
-        # materialized once, shared between the banding stage below and
-        # the caller (the ingest gate's cross-batch/append/bootstrap
-        # consumers); the plain path keeps the kernel fused into the
-        # banding stage — a checkpoint there would only add storage
-        signed = signed.localCheckpoint(eager=True)
     sigs_sz = signed.select("doc_id", "sig", F.size("htok").alias("sz"))
     cands = lsh_candidate_pairs(
         sigs_sz,
@@ -604,8 +564,154 @@ def _minhash_near_dup_pairs(
         )
         .withColumn("jac", F.lit(1.0))
     )
-    pairs = cross.unionByName(within)
-    return (pairs, signed) if with_index else pairs
+    return cross.unionByName(within)
+
+
+# --- driver-resident near-dup (bounded micro-batches) ----------------------
+
+_MICRO = Decimal("0.000001")
+
+
+def _round6(x: float) -> float:
+    """Spark's ``round(x, 6)`` on a double: HALF_UP on the shortest
+    decimal form of ``x`` (Scala's ``BigDecimal(x)``)."""
+    return float(Decimal(repr(x)).quantize(_MICRO, rounding=ROUND_HALF_UP))
+
+
+def sign_local(
+    rows: list[tuple[int, list[int]]], num_hashes: int, seed: int = 42
+) -> list[tuple[int, list[int], list[int]]]:
+    """``build_dedup_index`` rows (doc_id, htok, sig) of driver-resident
+    ``(doc_id, htok)`` rows, signed by ``minhash_rows`` — the kernel's
+    own arithmetic, so the signatures are bit-identical to the Spark
+    path's."""
+    a, b = _minhash_coeffs(num_hashes, seed)
+    lens = np.fromiter((len(h) for _, h in rows), dtype=np.int64, count=len(rows))
+    values = np.fromiter(
+        chain.from_iterable(h for _, h in rows), dtype=np.int64, count=int(lens.sum())
+    )
+    sigs = minhash_rows(values, lens, a, b)
+    return [(int(d), list(h), s) for (d, h), s in zip(rows, sigs.tolist())]
+
+
+def dedup_index_frame(
+    spark: SparkSession,
+    signed: list[tuple[int, list[int], list[int]]],
+    num_hashes: int,
+    seed: int = 42,
+) -> DataFrame:
+    """Driver-signed rows (``sign_local``) as a ``build_dedup_index``
+    frame (doc_id, htok, sig) carrying the same params-hash stamp, so
+    the ``presigned=`` sites and ``persist_dedup_index`` accept it like
+    the kernel's output."""
+    from actuarial_reserve_modelling_spark.operators.arrowkit import local_frame
+
+    return local_frame(spark, signed, _signed_schema(num_hashes, seed, True))
+
+
+class LocalNearDup(NamedTuple):
+    """``minhash_near_dup_pairs`` of a driver-resident batch, before the
+    pair expansion: ``members`` maps each exact-collapse rep (the
+    minimum id of a distinct token set) to its sorted member ids,
+    ``verified`` holds the rep pairs ``(r1 < r2, round(jac, 6))`` that
+    pass the exact verify, and ``signed`` the reps'
+    ``build_dedup_index`` rows (doc_id, htok, sig)."""
+
+    members: dict[int, list[int]]
+    verified: list[tuple[int, int, float]]
+    signed: list[tuple[int, list[int], list[int]]]
+
+    def pairs(self) -> list[tuple[int, int, float]]:
+        """The ``minhash_near_dup_pairs`` rows ``(d1 < d2, jac)``: every
+        verified rep pair expanded to its groups' members, plus each
+        group's own pairs at 1.0."""
+        out = [
+            (min(x, y), max(x, y), jac)
+            for r1, r2, jac in self.verified
+            for x in self.members[r1]
+            for y in self.members[r2]
+        ]
+        for ids in self.members.values():
+            out.extend((x, y, 1.0) for i, x in enumerate(ids) for y in ids[i + 1 :])
+        return out
+
+    def reps(self) -> dict[int, int]:
+        """Each member's component representative — the minimum id of
+        its connected component in ``pairs()`` — by union-find over the
+        groups and the verified rep pairs, without expanding pairs."""
+        parent = {r: r for r in self.members}
+
+        def find(x: int) -> int:
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for r1, r2, _ in self.verified:
+            x, y = find(r1), find(r2)
+            if x != y:
+                parent[max(x, y)] = min(x, y)
+        return {d: find(r) for r, ids in self.members.items() for d in ids}
+
+
+def minhash_near_dup_local(
+    rows: list[tuple[int, list[int]]],
+    threshold: float = 0.95,
+    bands: int = 24,
+    rows_per_band: int = 8,
+    seed: int = 42,
+    max_bucket_size: int = 10_000,
+) -> LocalNearDup:
+    """``minhash_near_dup_pairs`` on the driver, for a batch small
+    enough to hold there (the t11 ingest gate's micro-batch). ``rows``
+    are ``(doc_id, htok)`` with ``htok`` the sorted hashed token array
+    (the ``HTOK`` expression); token-less rows get no pairs. The stages
+    are the Spark operator's: exact collapse on the token set (rep =
+    minimum id), ``minhash_rows`` signatures, ``rows_per_band`` band
+    slices with the ``max_bucket_size`` skew guard, the size-ratio
+    prune and the exact verify ``round(jac, 6) ≥ τ`` (sizes count the
+    hashed tokens, the intersection their distinct values, as
+    ``array_intersect`` does). One difference: a bucket is keyed by the
+    band slice itself, not by its 32-bit ``hash``, so no two slices
+    share a bucket by collision."""
+    groups: dict[tuple[int, ...], list[int]] = {}
+    for doc_id, htok in rows:
+        if len(htok):
+            groups.setdefault(tuple(htok), []).append(int(doc_id))
+    toks = {}
+    members = {}
+    for key, ids in groups.items():
+        ids.sort()
+        members[ids[0]] = ids
+        toks[ids[0]] = key
+    reps = sorted(members)
+    signed = sign_local([(r, toks[r]) for r in reps], bands * rows_per_band, seed)
+    sig = np.array([s for _, _, s in signed], dtype=np.int64).reshape(
+        len(reps), bands * rows_per_band
+    )
+    sets = set()
+    for i in range(bands):
+        buckets: dict[bytes, list[int]] = {}
+        block = np.ascontiguousarray(sig[:, i * rows_per_band : (i + 1) * rows_per_band])
+        for j, key in enumerate(block):
+            buckets.setdefault(key.tobytes(), []).append(j)
+        sets.update(tuple(m) for m in buckets.values() if 2 <= len(m) <= max_bucket_size)
+    sz = [len(toks[r]) for r in reps]
+    ratio = threshold - 1e-6
+    cands = {
+        (p, q)
+        for m in sets
+        for x, p in enumerate(m)
+        for q in m[x + 1 :]
+        if min(sz[p], sz[q]) >= ratio * max(sz[p], sz[q])
+    }
+    verified = []
+    for p, q in sorted(cands):
+        inter = len(set(toks[reps[p]]) & set(toks[reps[q]]))
+        jac = _round6(inter / (sz[p] + sz[q] - inter))
+        if jac >= threshold:
+            verified.append((reps[p], reps[q], jac))
+    return LocalNearDup(members, verified, signed)
 
 
 def _symmetrize(pairs: DataFrame) -> DataFrame:

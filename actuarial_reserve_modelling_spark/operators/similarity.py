@@ -436,13 +436,11 @@ def lsh_cosine_pairs_with_index(
     """``lsh_cosine_pairs`` that ALSO returns the multi-table
     signature frame (vec_id, table, sig) it computed internally,
     eagerly checkpointed so the pair pipeline and the caller share ONE
-    kernel run — the vector analogue of
-    ``minhash_near_dup_pairs_with_index``. The semantic ingest gate
-    semi-joins it (with ``spart`` attached — a pure projection of the
-    (table, sig) cell) instead of re-signing its batch for the
-    cross-batch check and the tier append. Signatures are bit-identical
-    to ``hyperplane_signatures_multi`` under the same parameters — it
-    IS that kernel."""
+    kernel run. The semantic ingest gate semi-joins it (with ``spart``
+    attached — a pure projection of the (table, sig) cell) instead of
+    re-signing its batch for the cross-batch check and the tier append.
+    Signatures are bit-identical to ``hyperplane_signatures_multi``
+    under the same parameters — it IS that kernel."""
     return _lsh_cosine_pairs(
         embeddings,
         threshold=threshold,

@@ -150,9 +150,13 @@ class Dataset:
     def _packed(self, rows: DataFrame) -> DataFrame:
         # few large files per directory, not one file per task per
         # partition; the lookup side keeps its in-file sort so row-group
-        # stats still skip
+        # stats still skip. The sort leads with the partition column: a
+        # partitioned write sorts each task by it, and a task ordered by
+        # the cell alone loses that order to the writer's sort
         rows = rows.repartition(F.col(self.part_col))
-        return rows.sortWithinPartitions(*self.cell) if self.cell else rows
+        if not self.cell:
+            return rows
+        return rows.sortWithinPartitions(self.part_col, *self.cell)
 
     def write(self, rows: DataFrame, path: str, mode: str = "append") -> None:
         self._packed(rows).write.mode(mode).partitionBy(self.part_col).parquet(
@@ -241,8 +245,12 @@ class Dataset:
     def compact(
         self, spark: SparkSession, path: str, max_files_per_partition: int
     ) -> int:
-        return compact_partitioned_index(
-            spark, self.root(path), self.part_col, max_files_per_partition
+        """``compact_partitioned_index`` of this dataset; a rewritten
+        partition is packed like a write, so a lookup side keeps its
+        in-file cell sort."""
+        return _compact_hot(
+            spark, self.root(path), [self.part_col], max_files_per_partition,
+            self._packed,
         )
 
 
@@ -360,7 +368,6 @@ def delete_rows(
         _write_index_stats(spark, path, n_before - n_doomed)
 
 
-@leased("dataset")
 def compact_partitioned_index(
     spark: SparkSession,
     dataset: str,
@@ -379,9 +386,27 @@ def compact_partitioned_index(
     either kept its old files or has the new single file). Returns the
     number of partitions compacted.
 
-    Every tier's ``compact_*`` routes here; ``part_col`` accepts a
+    Every tier's ``compact_*`` runs this compaction through
+    ``Dataset.compact``, which packs a rewritten partition like a write,
+    so a lookup side keeps its in-file cell sort; ``part_col`` accepts a
     single column or the multi-column hive key of two-level layouts."""
     part_cols = [part_col] if isinstance(part_col, str) else list(part_col)
+    return _compact_hot(
+        spark, dataset, part_cols, max_files_per_partition,
+        lambda rows: rows.repartition(*[F.col(c) for c in part_cols]),
+    )
+
+
+@leased("dataset")
+def _compact_hot(
+    spark: SparkSession,
+    dataset: str,
+    part_cols: list[str],
+    max_files_per_partition: int,
+    pack: Callable[[DataFrame], DataFrame],
+) -> int:
+    """Body of ``compact_partitioned_index``; ``pack`` lays out the hot
+    partitions' rows for the rewrite."""
     hot = _hot_partitions_local(dataset, part_cols, max_files_per_partition)
     rows = None
     if hot is None:
@@ -409,9 +434,7 @@ def compact_partitioned_index(
                 term = term & (F.col(c) == v)
             cond = term if cond is None else (cond | term)
     packed = rows.filter(cond).localCheckpoint()
-    overwrite_partitions(
-        packed.repartition(*[F.col(c) for c in part_cols]), dataset, part_cols
-    )
+    overwrite_partitions(pack(packed), dataset, part_cols)
     spark.catalog.refreshByPath(dataset)
     return len(hot)
 

@@ -24,7 +24,7 @@ import uuid
 from functools import partial
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -32,6 +32,22 @@ from actuarial_reserve_modelling_spark.catalog import load_table
 from actuarial_reserve_modelling_spark.sources.sinks import vacuum_index
 from actuarial_reserve_modelling_spark.sources.tiers import Dataset, hash_part
 
+
+# The most rows one micro-batch of ``incremental_neardup_ingest`` may
+# hold: the gate collects each batch to the driver, so the bound keeps
+# that collect (text included) and the driver-side near-dup tier small.
+_NEARDUP_MAX_ROWS = 10_000
+# its driver-resident frames: first-wins rows and admitted docs
+_FP_ROWS = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("fingerprint", T.StringType()),
+        T.StructField("fpart", T.IntegerType()),
+    ]
+)
+_DOC_ROWS = T.StructType(
+    [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+)
 
 # Staged source dirs, keyed by (sf_dir, n_files): T1-T4 all stream the
 # same staged layout, so the repartition+write happens once per process,
@@ -422,7 +438,16 @@ class _IngestGate:
     ``ARM_GATE_TIMING=1`` prints one ``ARM_GATE_TIMING <gate> batch=N
     label=seconds ...`` line per epoch: ``compact``, the gate's own
     phase marks, ``sink`` and ``appends``, plus the wall of each
-    overlapped action."""
+    overlapped action. The same labels name the Spark jobs: every job
+    of a phase carries the label as a prefix of the stream's own job
+    description (``within_batch: ... batch = N``), so the status UI
+    and REST API attribute each job to its phase and epoch.
+
+    An exception raised inside a step stops the stream and reaches the
+    caller of ``run`` as itself, not wrapped in the stream's
+    ``StreamingQueryException``. A refused writer lease is raised
+    before the step starts and keeps that wrapper, whose text names the
+    holder."""
 
     def __init__(
         self,
@@ -441,6 +466,8 @@ class _IngestGate:
         timing = os.environ.get("ARM_GATE_TIMING") == "1"
         self._marks: list[tuple[str, float]] | None = [] if timing else None
         self._t0 = time.time()
+        self._phases: tuple[str, ...] = ()
+        self._base: str | None = None
 
     def path(self, name: str) -> str:
         return os.path.join(self.work, name)
@@ -451,11 +478,21 @@ class _IngestGate:
         with writer_lease(self.work):
             return fn(*args)
 
+    def _describe(self, phase: str | None) -> None:
+        """Prefix the stream's job description with ``phase`` (None
+        restores it): the prefix keeps the stream's ``batch = N`` tail."""
+        desc = self._base if phase is None else f"{phase}: {self._base or ''}"
+        self.spark.sparkContext.setLocalProperty("spark.job.description", desc)
+
     def mark(self, label: str) -> None:
-        """Close the current timing phase under ``label``."""
+        """Close the current timing phase under ``label``; the jobs that
+        follow are described as the next phase's."""
         if self._marks is not None:
             self._marks.append((label, round(time.time() - self._t0, 2)))
         self._t0 = time.time()
+        nxt = self._phases.index(label) + 1
+        if nxt < len(self._phases):
+            self._describe(self._phases[nxt])
 
     def overlap(self, labeled_fns: list[tuple[str, Callable[[], None]]]) -> None:
         _run_overlapped(labeled_fns, self._marks)
@@ -473,10 +510,14 @@ class _IngestGate:
         tiers: list[_Tier],
         auto_compact: int | None,
         auto_vacuum: bool = False,
+        phases: tuple[str, ...] = (),
     ) -> DataFrame:
+        """Drain ``batches`` through the step loop; ``phases`` are the
+        labels ``check`` marks, in order."""
         spark = self.spark
         key = _path_safe(cache_key)
         sink = os.path.join(self.sink, key)
+        self._phases = ("compact", *phases, "sink", "appends")
 
         def step(batch_df: DataFrame, bid: int) -> None:
             if self._marks is not None:
@@ -519,17 +560,39 @@ class _IngestGate:
                 print(f"ARM_GATE_TIMING {name} batch={bid} " + " ".join(
                     f"{k}={v}" for k, v in self._marks), flush=True)
 
+        failed: list[BaseException] = []
+
+        def kept_step(batch_df: DataFrame, bid: int) -> None:
+            try:
+                step(batch_df, bid)
+            except BaseException as e:
+                failed.append(e)
+                raise
+
+        def on_batch(batch_df: DataFrame, bid: int) -> None:
+            self._base = spark.sparkContext.getLocalProperty("spark.job.description")
+            self._describe("compact")
+            try:
+                self.locked(kept_step, batch_df, bid)
+            finally:
+                self._describe(None)
+
         stream = staged_ordered_source(
             spark, [b.select(*cols) for b in batches], cache_key
         )
-        _drain(
-            spark,
-            stream.writeStream.foreachBatch(
-                lambda batch_df, bid: self.locked(step, batch_df, bid)
-            ),
-            os.path.join(self.path("ckpt"), key),
-            state_partitions,
-        )
+        try:
+            _drain(
+                spark,
+                stream.writeStream.foreachBatch(on_batch),
+                os.path.join(self.path("ckpt"), key),
+                state_partitions,
+            )
+        except Exception:
+            if failed:
+                # the step's own error names the root cause; the stream's
+                # wrapper only repeats it inside a JVM trace
+                raise failed[-1] from None
+            raise
         return (
             spark.read.option("recursiveFileLookup", "true")
             .parquet(sink)
@@ -589,21 +652,25 @@ class _FingerprintTier:
         )
         return first, self._DS.parts_of(first)
 
-    def survivors(self, first: DataFrame, fparts: list[int]) -> DataFrame:
-        """``first`` minus the rows whose fingerprint is indexed under a
-        DIFFERENT doc_id (same-id matches are replays, not duplicates)."""
-        if not self.present():
-            return first
+    def hits(self, first: DataFrame, fparts: list[int]) -> DataFrame:
+        """The distinct doc_ids of ``first`` whose fingerprint is indexed
+        under a DIFFERENT doc_id (same-id matches are replays, not
+        duplicates); the index read is pruned to ``fparts``."""
         seen = self._DS.read(self.spark, self.path, fparts).select(
             "fingerprint", F.col("doc_id").alias("_idx_id")
         )
-        hit = (
+        return (
             first.join(seen, "fingerprint")
             .filter(F.col("doc_id") != F.col("_idx_id"))
             .select("doc_id")
             .distinct()
         )
-        return first.join(hit, "doc_id", "left_anti")
+
+    def survivors(self, first: DataFrame, fparts: list[int]) -> DataFrame:
+        """``first`` minus its ``hits``."""
+        if not self.present():
+            return first
+        return first.join(self.hits(first, fparts), "doc_id", "left_anti")
 
     def append(self, rows: DataFrame, fparts: list[int]) -> None:
         """Append the ``(doc_id, fingerprint, fpart)`` rows whose doc_id
@@ -617,8 +684,8 @@ class _FingerprintTier:
 def _cluster_reps(frame: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
     """``frame`` minus every non-representative of the connected
     components of the ``(d1, d2)`` ``pairs`` (``dedup_clusters``: each
-    cluster keeps its minimum id) — the within-batch tier of the t11 and
-    t12 gates. ``pairs`` is checkpointed eagerly: the emptiness probe and
+    cluster keeps its minimum id) — the within-batch tier of the t12
+    gate. ``pairs`` is checkpointed eagerly: the emptiness probe and
     the CC rounds would otherwise each re-run the whole LSH pair
     pipeline."""
     from actuarial_reserve_modelling_spark.operators.dedup import dedup_clusters
@@ -714,46 +781,70 @@ def incremental_neardup_ingest(
 ) -> DataFrame:
     """The FULL continuous-ingest gate — the production loop a training
     corpus runs — over two partition-pruned persisted tiers (the loop,
-    sink, lease and compaction are ``_IngestGate``'s). Per arriving
+    sink, lease and compaction are ``_IngestGate``'s). Each micro-batch
+    is driver-resident: ONE bounded collect brings its rows to the
+    driver as ``(doc_id, text, fingerprint, fpart, htok)`` (fingerprint,
+    fingerprint-hash partition and sorted hashed tokens all computed
+    JVM-side), every fact about the batch alone is computed there, and
+    Spark runs only what touches the persisted tiers. Per arriving
     batch:
 
-    1. **exact tier** — the exact-fingerprint tier (``fp_index``):
-       within-batch first-wins, then the check pruned to the batch's
-       own fingerprint-hash partitions;
-    2. **within-batch near-dup tier** — MinHash-LSH pairs over the
-       batch's exact survivors, connected components
-       (``dedup_clusters``), keep each cluster's minimum doc_id;
-    3. **cross-batch near-dup tier** — survivors checked AGAINST the
-       persisted dedup tier (``minhash_dedup_against_index_persisted``
-       — banded projection read pruned to the batch's bucket set, the
-       l40 path; same-id pairs excluded, so replays converge: the
-       different-id near-dups of a replayed batch were already
-       collapsed by the within-batch tier, deterministically);
-    4. admitted docs append to BOTH tiers partition-locally, overlapped.
+    1. **exact tier** — within-batch first-wins (the lowest doc_id per
+       fingerprint) on the driver, then the check against the
+       exact-fingerprint tier (``fp_index``) read pruned to the batch's
+       own fingerprint-hash partitions (one job collecting the hit ids;
+       same-id matches are replays);
+    2. **within-batch near-dup tier** — ``minhash_near_dup_local`` over
+       the exact survivors: exact token-set collapse, MinHash signing
+       with the Spark kernel's own arithmetic (``minhash_rows``), the
+       same banding and skew guard, exact verify, and min-id connected
+       components by union-find; token-less docs survive. Each
+       component keeps its minimum doc_id;
+    3. **cross-batch near-dup tier** — the survivors' signed rows form
+       one local ``(doc_id, htok, sig)`` frame, stamped with its
+       params-hash, checked AGAINST the persisted dedup tier
+       (``minhash_dedup_against_index_persisted`` — banded projection
+       read pruned to the batch's bucket set; same-id pairs excluded,
+       so replays converge). A tier persisted with other signing
+       parameters is checked with rows re-signed locally under ITS
+       parameters;
+    4. admitted docs append to BOTH tiers partition-locally, overlapped:
+       the dedup tier from the signed frame (``add_to_dedup_index(
+       presigned=...)``), the fingerprint tier from the first-wins rows,
+       each restricted to the ids re-read from the committed sink.
        Rejected docs contribute NOTHING — the tiers stay linear in the
        KEPT corpus, not the ingested stream.
 
-    Batch 0 bootstraps the dedup tier (``persist_dedup_index`` on its
-    admitted set — meta/ is written last, so its presence is the commit
-    marker; a retry re-persists over partial state). Both tiers compact
-    under ``_IngestGate``'s policy (``compact_dedup_index`` and the
-    fingerprint tier, overlapped).
+    Batch 0 bootstraps the dedup tier (``persist_dedup_index`` on the
+    signed frame restricted to its admitted ids — meta/ is written last,
+    so its presence is the commit marker; a retry re-persists over
+    partial state). Both tiers compact under ``_IngestGate``'s policy
+    (``compact_dedup_index`` and the fingerprint tier, overlapped).
 
-    Iterative CC inside + sequential batch dependence ⇒ not
+    Sizing contract: a micro-batch must fit in driver memory. A batch of
+    more than ``_NEARDUP_MAX_ROWS`` rows raises a ValueError naming the
+    epoch, its row count and the bound, before any tier is touched;
+    split the stream into smaller batches. Per-batch tier I/O stays
+    bounded by the batch's partition footprint, as before.
+
+    Union-find inside + sequential batch dependence ⇒ not
     SQL-expressible in closed form: the registry oracle replays the
     batches in SQL, and a pytest verifies the gate against an
     independent pure-Python reference implementing the same contract.
 
     Returns admitted rows ``(doc_id, batch)``.
     """
+    from actuarial_reserve_modelling_spark.operators.arrowkit import local_frame
     from actuarial_reserve_modelling_spark.operators.dedup import (
+        HTOK,
         add_to_dedup_index,
-        build_dedup_index,
         compact_dedup_index,
+        dedup_index_frame,
         minhash_dedup_against_index_persisted,
-        minhash_near_dup_pairs_with_index,
+        minhash_near_dup_local,
         persist_dedup_index,
         read_dedup_index_meta,
+        sign_local,
     )
 
     gate = _IngestGate(spark, work_dir, "arm_neardup_ingest_")
@@ -764,81 +855,86 @@ def incremental_neardup_ingest(
         return os.path.exists(os.path.join(idx_dir, "meta"))
 
     def check(batch_df: DataFrame, bid: int):
-        # 1) exact tier
-        first, fparts = fpt.first_wins(batch_df, keep=("text",))
-        docs_e = fpt.survivors(first, fparts).select("doc_id", "text")
-        if fpt.present():
-            # three downstream stages reuse docs_e; without an index it
-            # is a select off the already-checkpointed ``first``
-            docs_e = docs_e.localCheckpoint(eager=True)
-        gate.mark("exact_tier")
-        # 2) within-batch near-dup clustering → cluster representatives.
-        # The _with_index form also hands back the signed exact-collapse
-        # rep frame (one materialization), which the cross-batch check,
-        # the tier append and the bootstrap persist below reuse instead
-        # of re-signing — every survivor of the near-dup collapse is an
-        # exact-collapse rep, so semi-joins of this frame cover them.
-        pairs_raw, signed_reps = minhash_near_dup_pairs_with_index(
-            docs_e, threshold=threshold, bands=bands, rows_per_band=rows_per_band
-        )
-        docs_e = _cluster_reps(docs_e, pairs_raw.select("d1", "d2"), "doc_id")
-        gate.mark("within_batch")
-        # 3) cross-batch near-dup vs the persisted dedup tier (pruned).
-        # The batch is signed ONCE here with the tier's persisted
-        # parameters and the frame is shared with the index append —
-        # committed ⊆ docs_e and signatures are deterministic, so the
-        # appended rows are identical to a re-sign of the committed
-        # batch.
-        if _have_index():
-            meta_idx = read_dedup_index_meta(spark, idx_dir)
-            if (
-                meta_idx["bands"],
-                meta_idx["rows_per_band"],
-                meta_idx["seed"],
-            ) == (bands, rows_per_band, 42):
-                # gate-managed tier (bootstrapped below with exactly
-                # these parameters; 42 is the shared default seed of
-                # both signing calls): restrict the within-batch rep
-                # frame to the survivors — zero extra kernel runs
-                signed_e = signed_reps.join(
-                    docs_e.select("doc_id"), "doc_id", "leftsemi"
-                )
-            else:
-                # foreign tier in the work dir: sign with ITS params
-                signed_e = build_dedup_index(
-                    docs_e,
-                    bands=meta_idx["bands"],
-                    rows_per_band=meta_idx["rows_per_band"],
-                    seed=meta_idx["seed"],
-                ).localCheckpoint(eager=True)
-            hits = (
-                minhash_dedup_against_index_persisted(
-                    spark,
-                    idx_dir,
-                    docs_e,
-                    threshold=threshold,
-                    presigned=signed_e,
-                )
-                .select(F.col("new_id").alias("doc_id"))
-                .distinct()
+        rows = (
+            fpt.fingerprints(batch_df, keep=("text",))
+            .select(
+                "doc_id", "text", "fingerprint", "fpart", F.expr(HTOK).alias("htok")
             )
-            admitted = docs_e.join(hits, "doc_id", "left_anti")
-        else:
-            signed_e = None
-            admitted = docs_e
-        admitted = admitted.localCheckpoint(eager=True)
+            .limit(_NEARDUP_MAX_ROWS + 1)
+            .collect()
+        )
+        if len(rows) > _NEARDUP_MAX_ROWS:
+            raise ValueError(
+                f"incremental_neardup_ingest: epoch {bid} holds "
+                f"{batch_df.count()} rows, over the {_NEARDUP_MAX_ROWS}-row "
+                "bound of a driver-resident micro-batch; split the stream "
+                "into smaller batches"
+            )
+        # 1) exact tier
+        first: dict[str, Row] = {}
+        for r in sorted(rows, key=lambda r: r["doc_id"]):
+            first.setdefault(r["fingerprint"], r)
+        docs = list(first.values())  # lowest doc_id per fingerprint, ascending
+        fparts = sorted({r["fpart"] for r in docs})
+        first_df = local_frame(
+            spark,
+            [(r["doc_id"], r["fingerprint"], r["fpart"]) for r in docs],
+            _FP_ROWS,
+        )
+        if fpt.present():
+            hit = {r["doc_id"] for r in fpt.hits(first_df, fparts).collect()}
+            docs = [r for r in docs if r["doc_id"] not in hit]
+        gate.mark("exact_tier")
+        # 2) within-batch near-dup tier → component representatives
+        near = minhash_near_dup_local(
+            [(r["doc_id"], r["htok"]) for r in docs],
+            threshold=threshold,
+            bands=bands,
+            rows_per_band=rows_per_band,
+        )
+        rep = near.reps()
+        docs = [r for r in docs if rep.get(r["doc_id"], r["doc_id"]) == r["doc_id"]]
+        gate.mark("within_batch")
+        # 3) cross-batch near-dup tier. Every survivor with tokens is an
+        # exact-collapse rep, so the reps' signed rows cover the batch;
+        # the one local frame serves the check, the append and the
+        # bootstrap persist
+        kept = {r["doc_id"] for r in docs}
+        signed = [s for s in near.signed if s[0] in kept]
+        boot = not _have_index()
+        sign_params = (bands * rows_per_band, 42)
+        if not boot:
+            meta = read_dedup_index_meta(spark, idx_dir)
+            tier_params = (meta["bands"] * meta["rows_per_band"], meta["seed"])
+            if tier_params != sign_params:
+                # foreign tier in the work dir: sign with ITS params
+                sign_params = tier_params
+                signed = sign_local([(d, h) for d, h, _ in signed], *sign_params)
+        signed_e = dedup_index_frame(spark, signed, *sign_params)
+        admitted = local_frame(
+            spark, [(r["doc_id"], r["text"]) for r in docs], _DOC_ROWS
+        )
+        if not boot:
+            hits = [
+                r["new_id"]
+                for r in minhash_dedup_against_index_persisted(
+                    spark, idx_dir, admitted, threshold=threshold, presigned=signed_e
+                )
+                .select("new_id")
+                .distinct()
+                .collect()
+            ]
+            if hits:
+                admitted = admitted.filter(~F.col("doc_id").isin(hits))
         gate.mark("cross_batch")
 
         def append(committed: DataFrame) -> None:
+            ids = committed.select("doc_id")
+
             def _index_append() -> None:
-                if signed_e is None:
-                    # bootstrap: the rep frame was signed with exactly
-                    # these parameters — restrict to committed ids
-                    # instead of re-signing
+                if boot:
                     persist_dedup_index(
-                        signed_reps.join(
-                            committed.select("doc_id"), "doc_id", "leftsemi"
-                        ),
+                        signed_e.join(ids, "doc_id", "leftsemi"),
                         idx_dir,
                         bands=bands,
                         rows_per_band=rows_per_band,
@@ -847,24 +943,15 @@ def incremental_neardup_ingest(
                     add_to_dedup_index(spark, idx_dir, committed, presigned=signed_e)
 
             def _fp_append() -> None:
-                # committed ⊆ first, so a semi-join of the exact tier's
-                # checkpointed rows replaces a re-normalize+md5 pass over
-                # the committed text (same fingerprint function, same rows)
-                fpt.append(
-                    first.select("doc_id", "fingerprint", "fpart").join(
-                        committed.select("doc_id"), "doc_id", "leftsemi"
-                    ),
-                    fparts,
-                )
+                fpt.append(first_df.join(ids, "doc_id", "leftsemi"), fparts)
 
             # the two appends run from two driver threads: both derive
-            # only from the committed sink (plus frames eagerly
-            # checkpointed above, so nothing upstream re-executes) and
-            # write to DIFFERENT directories, so the jobs are independent
-            # and the scheduler back-fills one append's straggler tail
-            # with the other's tasks. Crash states are the set a retry
-            # already heals (the stream replays a failed step before any
-            # later batch runs, and both appends are anti-join
+            # only from the committed sink and driver-resident frames,
+            # and write to DIFFERENT directories, so the jobs are
+            # independent and the scheduler back-fills one append's
+            # straggler tail with the other's tasks. Crash states are the
+            # set a retry already heals (the stream replays a failed step
+            # before any later batch runs, and both appends are anti-join
             # idempotent), so only the wall changes, never the tiers.
             gate.overlap([("index_append", _index_append), ("fp_append", _fp_append)])
 
@@ -889,6 +976,7 @@ def incremental_neardup_ingest(
         ],
         auto_compact=auto_compact,
         auto_vacuum=auto_vacuum,
+        phases=("exact_tier", "within_batch", "cross_batch"),
     )
 
 

@@ -2193,8 +2193,9 @@ def test_persisted_dedup_banded_lookup_pruned(spark, tmp_path):
     IDENTICALLY to the full-scan operator over the reloaded tier,
     (c) read only the batch's own (band, bpart) partition directories
     (PartitionFilters; files touched ≪ files total for a small batch),
-    (d) keep answering after compaction, and (e) survive a delete-all
-    with a readable empty layout."""
+    (d) keep answering after compaction, (e) survive a delete-all
+    with a readable empty layout, and (f) keep banded/'s in-file
+    (band, bucket) sort through writes and compaction."""
     import glob
 
     from actuarial_reserve_modelling_spark.operators.dedup import (
@@ -2224,6 +2225,24 @@ def test_persisted_dedup_banded_lookup_pruned(spark, tmp_path):
     assert meta["k_band_parts"] == 16 and meta["layout_version"] == 2
     add_to_dedup_index(spark, path, corpus.filter(F.col("doc_id") % 4 == 1))
     add_to_dedup_index(spark, path, corpus.filter(F.col("doc_id") % 4 == 1))
+    # (f) the persist and add files, and their compaction, keep the
+    # lookup side's in-file (band, bucket) sort that row-group skipping
+    # relies on
+    import pyarrow.parquet as pq
+
+    def assert_cell_sorted(files):
+        assert files
+        for f in files:
+            t = pq.read_table(f, columns=["band", "bucket"])
+            cells = list(zip(t["band"].to_pylist(), t["bucket"].to_pylist()))
+            assert cells == sorted(cells), f
+
+    banded_before = set(glob.glob(path + "/banded/bpart=*/*.parquet"))
+    assert_cell_sorted(banded_before)
+    compact_dedup_index(spark, path, max_files_per_partition=1)
+    assert_cell_sorted(
+        set(glob.glob(path + "/banded/bpart=*/*.parquet")) - banded_before
+    )
     delete_from_dedup_index(
         spark, path, corpus.filter(F.col("doc_id") % 5 == 1).select("doc_id")
     )
@@ -3113,31 +3132,53 @@ def test_presigned_params_hash_rejects_same_shape_different_seed(spark, tmp_path
         )
 
 
-def test_minhash_near_dup_pairs_with_index_parity(spark):
-    """r14 three-way signature share: the _with_index form must return
-    (a) the exact same pairs as the single-output operator and (b) a
-    signed rep frame bitwise-equal to build_dedup_index restricted to
-    the rep ids (same kernel, same parameters — the property that lets
-    the ingest gate reuse it for its cross-batch check and appends)."""
+def test_minhash_near_dup_local_parity(spark):
+    """The driver-resident near-dup helper of the t11 gate must return
+    (a) the exact pairs of the Spark operator, (b) signed rep rows
+    bitwise-equal to build_dedup_index restricted to the rep ids and
+    (c) min-id components equal to a union-find over those pairs."""
     from actuarial_reserve_modelling_spark.operators.dedup import (
+        HTOK,
         build_dedup_index,
+        minhash_near_dup_local,
         minhash_near_dup_pairs,
-        minhash_near_dup_pairs_with_index,
     )
 
     docs = load_table(spark, SF_SMOKE, "documents")
     base = sorted(map(tuple, minhash_near_dup_pairs(docs, threshold=0.9).collect()))
-    pairs, signed = minhash_near_dup_pairs_with_index(docs, threshold=0.9)
-    assert sorted(map(tuple, pairs.collect())) == base
+    rows = [
+        (r["doc_id"], list(r["htok"]))
+        for r in docs.select("doc_id", F.expr(HTOK).alias("htok")).collect()
+    ]
+    near = minhash_near_dup_local(rows, threshold=0.9)
+    assert base and sorted(near.pairs()) == base
 
-    full = build_dedup_index(docs)
-    ref = full.join(signed.select("doc_id"), "doc_id", "leftsemi")
-    key = lambda r: (r["doc_id"], tuple(r["htok"]), tuple(r["sig"]))
-    assert sorted(map(key, signed.collect())) == sorted(map(key, ref.collect()))
+    reps = {d for d, _, _ in near.signed}
+    key = lambda r: (r[0], tuple(r[1]), tuple(r[2]))
+    ref = [
+        key((r["doc_id"], r["htok"], r["sig"]))
+        for r in build_dedup_index(docs).collect()
+        if r["doc_id"] in reps
+    ]
+    assert sorted(map(key, near.signed)) == sorted(ref)
+
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for d1, d2, _ in base:
+        x, y = find(d1), find(d2)
+        parent[max(x, y)] = min(x, y)
+    got = near.reps()
+    assert {d: find(d) for d in parent} == {d: got[d] for d in parent}
 
 
 def test_lsh_cosine_pairs_with_index_parity(spark):
-    """r14, vector analogue of the minhash _with_index parity test:
+    """``lsh_cosine_pairs_with_index`` against its two references:
     identical pairs, and a signature frame bitwise-equal to
     hyperplane_signatures_multi under the same parameters."""
     from actuarial_reserve_modelling_spark.operators.similarity import (

@@ -506,6 +506,22 @@ def test_incremental_neardup_ingest_matches_reference(spark):
     assert got == expect
 
 
+def test_neardup_ingest_batch_over_driver_bound_raises(spark, monkeypatch):
+    """The t11 gate holds each micro-batch on the driver: a batch over
+    the row bound fails with the gate's own error, naming the bound,
+    instead of being collected."""
+    from actuarial_reserve_modelling_spark.streaming import pipeline
+
+    monkeypatch.setattr(pipeline, "_NEARDUP_MAX_ROWS", 2)
+    batch = spark.createDataFrame(
+        [(1, "a b c"), (2, "d e f"), (3, "g h i")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="epoch 0 holds 3 rows, over the 2-row bound"):
+        pipeline.incremental_neardup_ingest(
+            spark, [batch], cache_key="test_neardup_driver_bound"
+        )
+
+
 @pytest.mark.slow
 def test_ingest_dedup_with_compaction_preserves_output(spark, tmp_path):
     """Compacting the fingerprint index mid-stream must not change the
