@@ -24,7 +24,7 @@ Scale design (the 100 TB story):
 from __future__ import annotations
 
 from decimal import ROUND_HALF_UP, Decimal
-from functools import partial
+from functools import lru_cache, partial
 from itertools import chain
 from typing import NamedTuple
 
@@ -54,6 +54,20 @@ TOKENS = "array_distinct(filter(split(text, ' '), x -> x != ''))"
 # The sorted xxhash64 token array every MinHash path keys, signs and
 # verifies on (the ``htok`` column of the dedup tier).
 HTOK = f"array_sort(transform({TOKENS}, t -> xxhash64(t)))"
+# The default MinHash seed of every signing path (the t11 ingest gate
+# signs and persists with it), and the LSH skew guard: a band bucket
+# with more members than this is dropped as degenerate.
+MINHASH_SEED = 42
+MAX_BUCKET_SIZE = 10_000
+
+
+def _hashed_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, htok) of the documents that have tokens: the ``HTOK``
+    array every MinHash path signs and verifies on."""
+    return docs.select(
+        "doc_id", F.expr(HTOK.replace("text", text_col)).alias("htok")
+    ).filter(F.size("htok") > 0)
+
 
 def _opt_broadcast(df: DataFrame, hint: bool) -> DataFrame:
     """Broadcast hint only when the caller asserts the side is bounded.
@@ -75,7 +89,10 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def minhash_signatures(
-    docs: DataFrame, num_hashes: int = 192, seed: int = 42, text_col: str = "text"
+    docs: DataFrame,
+    num_hashes: int = 192,
+    seed: int = MINHASH_SEED,
+    text_col: str = "text",
 ) -> DataFrame:
     """MinHash signature per document over its distinct token set.
 
@@ -89,7 +106,7 @@ def minhash_signatures(
 
 
 def _signatures_from_tokens(
-    toks: DataFrame, num_hashes: int = 192, seed: int = 42
+    toks: DataFrame, num_hashes: int = 192, seed: int = MINHASH_SEED
 ) -> DataFrame:
     """MinHash kernel over a pre-tokenized (doc_id, tokens) frame —
     shared by the raw-text path and the exact-collapse path, which has
@@ -195,7 +212,7 @@ def _signed_schema(num_hashes: int, seed: int, carry_htok: bool) -> T.StructType
 
 
 def _signatures_from_hashed(
-    hashed: DataFrame, num_hashes: int = 192, seed: int = 42,
+    hashed: DataFrame, num_hashes: int = 192, seed: int = MINHASH_SEED,
     carry_htok: bool = False,
 ) -> DataFrame:
     """MinHash kernel over a pre-hashed (doc_id, htok: array<bigint>)
@@ -262,7 +279,7 @@ def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 24,
     rows_per_band: int = 8,
-    max_bucket_size: int = 10_000,
+    max_bucket_size: int = MAX_BUCKET_SIZE,
     size_ratio: float | None = None,
 ) -> DataFrame:
     """Band the signatures and emit candidate (d1, d2) pairs sharing at
@@ -438,7 +455,7 @@ def minhash_near_dup_pairs(
     threshold: float = 0.95,
     bands: int = 24,
     rows_per_band: int = 8,
-    seed: int = 42,
+    seed: int = MINHASH_SEED,
     text_col: str = "text",
     broadcast_verify: bool = False,
 ) -> DataFrame:
@@ -473,19 +490,13 @@ def minhash_near_dup_pairs(
     Jaccard with anything — including each other — is 0/0 = NULL in the
     oracle, never ≥ threshold.
     """
-    toks = docs.select(
-        "doc_id", F.expr(TOKENS.replace("text", text_col)).alias("tokens")
-    ).filter(F.size("tokens") > 0)
     # hash every token exactly once (JVM-side, inside codegen): the
     # collapse key, the MinHash kernel, and the Jaccard verify all
     # consume the 8-byte hashed tokens, so token STRINGS never survive
     # this stage — the checkpointed group table and the verify build
     # sides carry bigint arrays only (the per-token 64-bit hash is the
     # same collision trade the verify stage makes)
-    htoks = toks.select(
-        "doc_id",
-        F.array_sort(F.expr("transform(tokens, t -> xxhash64(t))")).alias("htok"),
-    )
+    htoks = _hashed_tokens(docs, text_col)
     # canonical token-set key: two independent xxhash64 digests of the
     # sorted hashed-token array (order-independent, 128-bit combined —
     # no giant concat string to build)
@@ -572,6 +583,7 @@ def minhash_near_dup_pairs(
 _MICRO = Decimal("0.000001")
 
 
+@lru_cache(maxsize=4096)
 def _round6(x: float) -> float:
     """Spark's ``round(x, 6)`` on a double: HALF_UP on the shortest
     decimal form of ``x`` (Scala's ``BigDecimal(x)``)."""
@@ -579,7 +591,7 @@ def _round6(x: float) -> float:
 
 
 def sign_local(
-    rows: list[tuple[int, list[int]]], num_hashes: int, seed: int = 42
+    rows: list[tuple[int, list[int]]], num_hashes: int, seed: int = MINHASH_SEED
 ) -> list[tuple[int, list[int], list[int]]]:
     """``build_dedup_index`` rows (doc_id, htok, sig) of driver-resident
     ``(doc_id, htok)`` rows, signed by ``minhash_rows`` — the kernel's
@@ -598,7 +610,7 @@ def dedup_index_frame(
     spark: SparkSession,
     signed: list[tuple[int, list[int], list[int]]],
     num_hashes: int,
-    seed: int = 42,
+    seed: int = MINHASH_SEED,
 ) -> DataFrame:
     """Driver-signed rows (``sign_local``) as a ``build_dedup_index``
     frame (doc_id, htok, sig) carrying the same params-hash stamp, so
@@ -621,24 +633,11 @@ class LocalNearDup(NamedTuple):
     verified: list[tuple[int, int, float]]
     signed: list[tuple[int, list[int], list[int]]]
 
-    def pairs(self) -> list[tuple[int, int, float]]:
-        """The ``minhash_near_dup_pairs`` rows ``(d1 < d2, jac)``: every
-        verified rep pair expanded to its groups' members, plus each
-        group's own pairs at 1.0."""
-        out = [
-            (min(x, y), max(x, y), jac)
-            for r1, r2, jac in self.verified
-            for x in self.members[r1]
-            for y in self.members[r2]
-        ]
-        for ids in self.members.values():
-            out.extend((x, y, 1.0) for i, x in enumerate(ids) for y in ids[i + 1 :])
-        return out
-
     def reps(self) -> dict[int, int]:
         """Each member's component representative — the minimum id of
-        its connected component in ``pairs()`` — by union-find over the
-        groups and the verified rep pairs, without expanding pairs."""
+        its connected component in the expanded pair graph — by
+        union-find over the groups and the verified rep pairs, without
+        expanding pairs."""
         parent = {r: r for r in self.members}
 
         def find(x: int) -> int:
@@ -659,21 +658,22 @@ def minhash_near_dup_local(
     threshold: float = 0.95,
     bands: int = 24,
     rows_per_band: int = 8,
-    seed: int = 42,
-    max_bucket_size: int = 10_000,
 ) -> LocalNearDup:
     """``minhash_near_dup_pairs`` on the driver, for a batch small
     enough to hold there (the t11 ingest gate's micro-batch). ``rows``
     are ``(doc_id, htok)`` with ``htok`` the sorted hashed token array
     (the ``HTOK`` expression); token-less rows get no pairs. The stages
     are the Spark operator's: exact collapse on the token set (rep =
-    minimum id), ``minhash_rows`` signatures, ``rows_per_band`` band
-    slices with the ``max_bucket_size`` skew guard, the size-ratio
-    prune and the exact verify ``round(jac, 6) ≥ τ`` (sizes count the
-    hashed tokens, the intersection their distinct values, as
-    ``array_intersect`` does). One difference: a bucket is keyed by the
-    band slice itself, not by its 32-bit ``hash``, so no two slices
-    share a bucket by collision."""
+    minimum id), ``minhash_rows`` signatures under ``MINHASH_SEED``,
+    ``rows_per_band`` band slices with the ``MAX_BUCKET_SIZE`` skew
+    guard, the size-ratio prune and the exact verify
+    ``round(jac, 6) ≥ τ`` (sizes count the hashed tokens, the
+    intersection their distinct values, as ``array_intersect`` does).
+    One difference: a bucket is keyed by the band slice itself, not by
+    its 32-bit ``hash``, so no two slices share a bucket by collision.
+
+    Cost is quadratic in the reps that share a bucket: every candidate
+    pair is held as one int64 and verified once."""
     groups: dict[tuple[int, ...], list[int]] = {}
     for doc_id, htok in rows:
         if len(htok):
@@ -685,7 +685,9 @@ def minhash_near_dup_local(
         members[ids[0]] = ids
         toks[ids[0]] = key
     reps = sorted(members)
-    signed = sign_local([(r, toks[r]) for r in reps], bands * rows_per_band, seed)
+    signed = sign_local(
+        [(r, toks[r]) for r in reps], bands * rows_per_band, MINHASH_SEED
+    )
     sig = np.array([s for _, _, s in signed], dtype=np.int64).reshape(
         len(reps), bands * rows_per_band
     )
@@ -695,22 +697,28 @@ def minhash_near_dup_local(
         block = np.ascontiguousarray(sig[:, i * rows_per_band : (i + 1) * rows_per_band])
         for j, key in enumerate(block):
             buckets.setdefault(key.tobytes(), []).append(j)
-        sets.update(tuple(m) for m in buckets.values() if 2 <= len(m) <= max_bucket_size)
-    sz = [len(toks[r]) for r in reps]
+        sets.update(tuple(m) for m in buckets.values() if 2 <= len(m) <= MAX_BUCKET_SIZE)
+    # candidate rep pairs p < q, encoded p * n + q: one int64 per pair
+    n = len(reps)
+    enc = [np.empty(0, dtype=np.int64)]
+    for m in sets:
+        ids = np.array(m, dtype=np.int64)
+        i, j = np.triu_indices(len(ids), 1)
+        enc.append(ids[i] * n + ids[j])
+    p, q = np.divmod(np.unique(np.concatenate(enc)), n)
+    sz = np.array([len(toks[r]) for r in reps], dtype=np.int64)
     ratio = threshold - 1e-6
-    cands = {
-        (p, q)
-        for m in sets
-        for x, p in enumerate(m)
-        for q in m[x + 1 :]
-        if min(sz[p], sz[q]) >= ratio * max(sz[p], sz[q])
-    }
+    keep = np.minimum(sz[p], sz[q]) >= ratio * np.maximum(sz[p], sz[q])
+    tok_sets = [set(toks[r]) for r in reps]
+    sz = sz.tolist()
     verified = []
-    for p, q in sorted(cands):
-        inter = len(set(toks[reps[p]]) & set(toks[reps[q]]))
-        jac = _round6(inter / (sz[p] + sz[q] - inter))
-        if jac >= threshold:
-            verified.append((reps[p], reps[q], jac))
+    for a, b in zip(p[keep].tolist(), q[keep].tolist()):
+        inter = len(tok_sets[a] & tok_sets[b])
+        jac = inter / (sz[a] + sz[b] - inter)
+        # round(jac, 6) >= τ needs jac >= τ - 5e-7: the exact (Decimal)
+        # rounding runs only on pairs that can pass
+        if jac >= ratio and (jac := _round6(jac)) >= threshold:
+            verified.append((reps[a], reps[b], jac))
     return LocalNearDup(members, verified, signed)
 
 
@@ -1222,7 +1230,7 @@ def build_dedup_index(
     docs: DataFrame,
     bands: int = 24,
     rows_per_band: int = 8,
-    seed: int = 42,
+    seed: int = MINHASH_SEED,
     text_col: str = "text",
 ) -> DataFrame:
     """Build the persistable near-dup index for INCREMENTAL ingest:
@@ -1236,16 +1244,7 @@ def build_dedup_index(
     or self-joining the existing corpus — per-batch cost is
     O(batch + matched buckets), not O(corpus). Token-less documents are
     excluded (their Jaccard with anything is NULL, never ≥ τ)."""
-    htoks = (
-        docs.select(
-            "doc_id", F.expr(TOKENS.replace("text", text_col)).alias("tokens")
-        )
-        .filter(F.size("tokens") > 0)
-        .select(
-            "doc_id",
-            F.array_sort(F.expr("transform(tokens, t -> xxhash64(t))")).alias("htok"),
-        )
-    )
+    htoks = _hashed_tokens(docs, text_col)
     # one narrow pass: the kernel carries htok through alongside the
     # signatures it computes — the former ``htoks.join(sigs, "doc_id")``
     # executed the tokenize/hash/sort subtree once per join side and
@@ -1270,7 +1269,7 @@ def persist_dedup_index(
     path: str,
     bands: int = 24,
     rows_per_band: int = 8,
-    seed: int = 42,
+    seed: int = MINHASH_SEED,
     n_buckets: int | None = None,
     k_band_parts: int | None = None,
 ) -> None:
@@ -1547,7 +1546,7 @@ def compact_dedup_index(
     """Fold append-accumulated small files in BOTH persisted dedup
     datasets — the fingerprint tier's id-hash buckets and (on v2
     layouts) the banded projection's bpart directories (see
-    ``sources.tiers.compact_partitioned_index``). Returns the total
+    ``sources.tiers.Dataset.compact``). Returns the total
     number of partitions compacted across the two."""
     n = 0
     if read_dedup_index_meta(spark, path)["k_band_parts"] is not None:
@@ -1573,9 +1572,9 @@ def minhash_dedup_against_index(
     threshold: float = 0.95,
     bands: int = 24,
     rows_per_band: int = 8,
-    seed: int = 42,
+    seed: int = MINHASH_SEED,
     text_col: str = "text",
-    max_bucket_size: int = 10_000,
+    max_bucket_size: int = MAX_BUCKET_SIZE,
     exclude_same_id: bool = True,
     presigned: DataFrame | None = None,
 ) -> DataFrame:
@@ -1691,7 +1690,7 @@ def minhash_dedup_against_index_persisted(
     new_docs: DataFrame,
     threshold: float = 0.95,
     text_col: str = "text",
-    max_bucket_size: int = 10_000,
+    max_bucket_size: int = MAX_BUCKET_SIZE,
     exclude_same_id: bool = True,
     route: str = "auto",
     presigned: DataFrame | None = None,

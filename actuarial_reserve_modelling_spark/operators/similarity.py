@@ -47,9 +47,6 @@ from actuarial_reserve_modelling_spark.sources.tiers import (
     route_pruned,
     write_meta,
 )
-from actuarial_reserve_modelling_spark.sources.tiers import (  # noqa: F401 — public name
-    compact_partitioned_index,
-)
 
 
 def _as_double(col: str):
@@ -2542,7 +2539,7 @@ def compact_ann_index(
     spark: SparkSession, path: str, max_files_per_partition: int = 4
 ) -> int:
     """Fold append-accumulated small files in a persisted hierarchical
-    ANN index's members/ partitions (see compact_partitioned_index)."""
+    ANN index's members/ partitions (see ``sources.tiers.Dataset.compact``)."""
     return _MEMBERS.compact(spark, path, max_files_per_partition)
 
 
@@ -2551,7 +2548,7 @@ def compact_ivfpq_index(
     spark: SparkSession, path: str, max_files_per_partition: int = 4
 ) -> int:
     """Fold append-accumulated small files in a persisted IVF-PQ
-    index's codes/ partitions (see compact_partitioned_index)."""
+    index's codes/ partitions (see ``sources.tiers.Dataset.compact``)."""
     return _CODES.compact(spark, path, max_files_per_partition)
 
 
@@ -4411,8 +4408,8 @@ def compact_vecsig_index(
     spark: SparkSession, path: str, max_files_per_partition: int = 4
 ) -> int:
     """Fold append-accumulated small files in BOTH persisted vector
-    datasets (see compact_partitioned_index). Returns the total number
-    of partitions compacted."""
+    datasets (see ``sources.tiers.Dataset.compact``). Returns the total
+    number of partitions compacted."""
     n = _VECSIG.lookup.compact(spark, path, max_files_per_partition)
     return n + _VECSIG.ids.compact(spark, path, max_files_per_partition)
 

@@ -411,7 +411,13 @@ def t11_neardup_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     _T11_ORACLE above) — exact Jaccard standing in for the validated
     LSH banding, recursive-closure CCs per batch, first-wins/min-rep
     tie-breaks identical to the implementation. The pytest additionally
-    verifies the gate against an independent pure-Python reference."""
+    verifies the gate against an independent pure-Python reference.
+
+    Scale: the gate holds each micro-batch on the driver and raises a
+    ValueError past ``_NEARDUP_MAX_ROWS`` (2,000) rows. Split 3 ways,
+    ``documents`` gives 1,667 rows per batch at sf0.1 (5,000 rows); at
+    that table's 50,000 rows per unit of scale factor, this query runs
+    up to sf0.12 and raises above it."""
     from actuarial_reserve_modelling_spark.streaming.pipeline import (
         incremental_neardup_ingest,
     )

@@ -63,7 +63,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from actuarial_reserve_modelling_spark.sources.lease import leased
+from actuarial_reserve_modelling_spark.sources.lease import writer_lease
 from actuarial_reserve_modelling_spark.sources.sinks import overwrite_partitions
 
 
@@ -245,13 +245,43 @@ class Dataset:
     def compact(
         self, spark: SparkSession, path: str, max_files_per_partition: int
     ) -> int:
-        """``compact_partitioned_index`` of this dataset; a rewritten
+        """OPTIMIZE for the persisted tiers: every append adds at least
+        one file per touched partition, so a long-running ingest accretes
+        files forever — the #1 operational failure of append-heavy
+        layouts at 100 TB. This rewrites ONLY the partitions whose file
+        count exceeds ``max_files_per_partition`` via the same
+        dynamic-partition-overwrite primitive the deletes use, so cold
+        partitions keep their files byte-identical and the rewrite cost
+        scales with the hot fraction, not the index. A rewritten
         partition is packed like a write, so a lookup side keeps its
-        in-file cell sort."""
-        return _compact_hot(
-            spark, self.root(path), [self.part_col], max_files_per_partition,
-            self._packed,
-        )
+        in-file cell sort. Contents are preserved exactly; a crash
+        mid-overwrite re-heals on re-run (the partition either kept its
+        old files or has the new single file). Runs under the writer
+        lease of the dataset root; returns the number of partitions
+        compacted."""
+        dataset = self.root(path)
+        pc = self.part_col
+        with writer_lease(dataset):
+            hot = _hot_partitions_local(dataset, pc, max_files_per_partition)
+            if hot is None:
+                # non-local root: fall back to the Spark metadata aggregate
+                hot = [
+                    int(r[pc])
+                    for r in spark.read.parquet(dataset)
+                    .select(pc, F.col("_metadata.file_path").alias("f"))
+                    .groupBy(pc)
+                    .agg(F.count_distinct("f").alias("nf"))
+                    .filter(F.col("nf") > max_files_per_partition)
+                    .collect()
+                ]
+            if not hot:
+                return 0
+            rows = (
+                spark.read.parquet(dataset).filter(F.col(pc).isin(hot)).localCheckpoint()
+            )
+            overwrite_partitions(self._packed(rows), dataset, [pc])
+            spark.catalog.refreshByPath(dataset)
+            return len(hot)
 
 
 @dataclass(frozen=True)
@@ -368,86 +398,13 @@ def delete_rows(
         _write_index_stats(spark, path, n_before - n_doomed)
 
 
-def compact_partitioned_index(
-    spark: SparkSession,
-    dataset: str,
-    part_col: str | list[str],
-    max_files_per_partition: int = 4,
-) -> int:
-    """OPTIMIZE for the persisted index tiers: every ``add_to_*`` call
-    appends at least one file per touched partition, so a long-running
-    ingest accretes files forever — the #1 operational failure of
-    append-heavy layouts at 100 TB. This rewrites ONLY the partitions
-    whose file count exceeds ``max_files_per_partition`` via the same
-    dynamic-partition-overwrite primitive the deletes use, so cold
-    partitions keep their files byte-identical and the rewrite cost
-    scales with the hot fraction, not the index. Contents are preserved
-    exactly; a crash mid-overwrite re-heals on re-run (the partition
-    either kept its old files or has the new single file). Returns the
-    number of partitions compacted.
-
-    Every tier's ``compact_*`` runs this compaction through
-    ``Dataset.compact``, which packs a rewritten partition like a write,
-    so a lookup side keeps its in-file cell sort; ``part_col`` accepts a
-    single column or the multi-column hive key of two-level layouts."""
-    part_cols = [part_col] if isinstance(part_col, str) else list(part_col)
-    return _compact_hot(
-        spark, dataset, part_cols, max_files_per_partition,
-        lambda rows: rows.repartition(*[F.col(c) for c in part_cols]),
-    )
-
-
-@leased("dataset")
-def _compact_hot(
-    spark: SparkSession,
-    dataset: str,
-    part_cols: list[str],
-    max_files_per_partition: int,
-    pack: Callable[[DataFrame], DataFrame],
-) -> int:
-    """Body of ``compact_partitioned_index``; ``pack`` lays out the hot
-    partitions' rows for the rewrite."""
-    hot = _hot_partitions_local(dataset, part_cols, max_files_per_partition)
-    rows = None
-    if hot is None:
-        # non-local root: fall back to the Spark metadata aggregate
-        rows = spark.read.parquet(dataset)
-        hot = [
-            tuple(int(r[c]) for c in part_cols)
-            for r in rows.select(*part_cols, F.col("_metadata.file_path").alias("f"))
-            .groupBy(*part_cols)
-            .agg(F.count_distinct("f").alias("nf"))
-            .filter(F.col("nf") > max_files_per_partition)
-            .collect()
-        ]
-    if not hot:
-        return 0
-    if rows is None:
-        rows = spark.read.parquet(dataset)
-    if len(part_cols) == 1:
-        cond = F.col(part_cols[0]).isin([t[0] for t in hot])
-    else:
-        cond = None
-        for t in hot:
-            term = F.lit(True)
-            for c, v in zip(part_cols, t):
-                term = term & (F.col(c) == v)
-            cond = term if cond is None else (cond | term)
-    packed = rows.filter(cond).localCheckpoint()
-    overwrite_partitions(pack(packed), dataset, part_cols)
-    spark.catalog.refreshByPath(dataset)
-    return len(hot)
-
-
-def _hot_partitions_local(
-    dataset: str, part_cols: list[str], cap: int
-) -> list[tuple] | None:
+def _hot_partitions_local(dataset: str, part_col: str, cap: int) -> list[int] | None:
     """Hot-partition detection by plain driver-side ``os.scandir`` —
-    returns the partition-value tuples whose data-file count exceeds
-    ``cap``, or None for non-local roots (caller falls back to the
-    Spark metadata aggregate). The gates run the threshold compact
-    EVERY batch, and a Spark aggregate pays a full file-listing job per
-    call — O(index directories) per batch, the growth term the
+    returns the partition values whose data-file count exceeds ``cap``,
+    or None for non-local roots (caller falls back to the Spark
+    metadata aggregate). The gates run the threshold compact EVERY
+    batch, and a Spark aggregate pays a full file-listing job per call
+    — O(index directories) per batch, the growth term the
     per-batch-bounded contract forbids. A scandir walk costs the same
     order of syscalls WITHOUT the JVM job, plan, and listing-cache churn
     (~1 s/batch measured in the t11 gate), and when nothing is hot — the
@@ -458,35 +415,25 @@ def _hot_partitions_local(
     root = p.path if p.scheme == "file" else dataset
     if not os.path.isdir(root):
         return None
-
-    hot: list[tuple] = []
-
-    def _walk(d: str, depth: int, vals: tuple) -> None:
+    prefix = part_col + "="
+    hot: list[int] = []
+    for e in os.scandir(root):
+        if not (e.is_dir() and e.name.startswith(prefix)):
+            continue
         try:
-            entries = list(os.scandir(d))
-        except OSError:
-            return
-        if depth == len(part_cols):
-            n = sum(
-                1
-                for e in entries
-                if e.is_file()
-                and e.name.endswith(".parquet")
-                and not e.name.startswith(("_", "."))
-            )
-            if n > cap:
-                hot.append(vals)
-            return
-        prefix = part_cols[depth] + "="
-        for e in entries:
-            if e.is_dir() and e.name.startswith(prefix):
-                try:
-                    v = int(e.name[len(prefix):])
-                except ValueError:
-                    continue
-                _walk(e.path, depth + 1, vals + (v,))
-
-    _walk(root, 0, ())
+            v = int(e.name[len(prefix):])
+            files = list(os.scandir(e.path))
+        except (ValueError, OSError):
+            continue
+        n = sum(
+            1
+            for f in files
+            if f.is_file()
+            and f.name.endswith(".parquet")
+            and not f.name.startswith(("_", "."))
+        )
+        if n > cap:
+            hot.append(v)
     return hot
 
 

@@ -34,9 +34,16 @@ from actuarial_reserve_modelling_spark.sources.tiers import Dataset, hash_part
 
 
 # The most rows one micro-batch of ``incremental_neardup_ingest`` may
-# hold: the gate collects each batch to the driver, so the bound keeps
-# that collect (text included) and the driver-side near-dup tier small.
-_NEARDUP_MAX_ROWS = 10_000
+# hold: the gate collects each batch to the driver and runs its
+# within-batch near-dup tier there, whose cost is quadratic in the reps
+# that share LSH buckets. Measured on one core (4-core x86 box) by
+# tools/neardup_local_cost.py at 16x16 bands: the worst 2,000-row batch,
+# every pair sharing buckets and verifying, took 4.0 s and +480 MB of
+# driver RSS (none verifying: 2.1 s, +300 MB); 2,500 rows took 7.9 s and
+# +750 MB, 3,000 rows 11.8 s and +1.1 GB. A registry-corpus batch of
+# 1,667 rows (sf0.1 split in 3) took 0.17 s and +29 MB. The bound keeps
+# the worst case near 4 s and 0.5 GB.
+_NEARDUP_MAX_ROWS = 2_000
 # its driver-resident frames: first-wins rows and admitted docs
 _FP_ROWS = T.StructType(
     [
@@ -631,23 +638,20 @@ class _FingerprintTier:
             "fpart", self.fpart
         )
 
-    def first_wins(
-        self, docs: DataFrame, keep: tuple[str, ...] = ()
-    ) -> tuple[DataFrame, list[int]]:
+    def first_wins(self, docs: DataFrame) -> tuple[DataFrame, list[int]]:
         """Within-batch first-wins (lowest doc_id per fingerprint) as an
-        eagerly checkpointed ``(doc_id, *keep, fingerprint, fpart)``
-        frame, and the batch's fpart list from ONE collect: the admitted
-        set is a subset of it, so the list also bounds the append-side
-        pruned read. ``keep`` rides the fingerprint projection, so the
-        survivors carry their payload without a re-attaching join."""
+        eagerly checkpointed ``(doc_id, fingerprint, fpart)`` frame, and
+        the batch's fpart list from ONE collect: the admitted set is a
+        subset of it, so the list also bounds the append-side pruned
+        read."""
         from pyspark.sql import Window
 
         w = Window.partitionBy("fingerprint").orderBy("doc_id")
         first = (
-            self.fingerprints(docs, keep)
+            self.fingerprints(docs)
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .select("doc_id", *keep, "fingerprint", "fpart")
+            .select("doc_id", "fingerprint", "fpart")
             .localCheckpoint(eager=True)
         )
         return first, self._DS.parts_of(first)
@@ -821,11 +825,14 @@ def incremental_neardup_ingest(
     partial state). Both tiers compact under ``_IngestGate``'s policy
     (``compact_dedup_index`` and the fingerprint tier, overlapped).
 
-    Sizing contract: a micro-batch must fit in driver memory. A batch of
-    more than ``_NEARDUP_MAX_ROWS`` rows raises a ValueError naming the
-    epoch, its row count and the bound, before any tier is touched;
-    split the stream into smaller batches. Per-batch tier I/O stays
-    bounded by the batch's partition footprint, as before.
+    Sizing contract: a micro-batch must fit on the driver. A batch of
+    more than ``_NEARDUP_MAX_ROWS`` (2,000) rows raises a ValueError
+    naming the epoch, its row count and the bound; it is raised before
+    the epoch's checks read or append to any tier (the epoch's
+    compaction, which runs first, may already have rewritten tier
+    files, which leaves contents unchanged). Split the stream into
+    smaller batches. Per-batch tier I/O stays bounded by the batch's
+    partition footprint.
 
     Union-find inside + sequential batch dependence ⇒ not
     SQL-expressible in closed form: the registry oracle replays the
@@ -837,6 +844,7 @@ def incremental_neardup_ingest(
     from actuarial_reserve_modelling_spark.operators.arrowkit import local_frame
     from actuarial_reserve_modelling_spark.operators.dedup import (
         HTOK,
+        MINHASH_SEED,
         add_to_dedup_index,
         compact_dedup_index,
         dedup_index_frame,
@@ -902,7 +910,7 @@ def incremental_neardup_ingest(
         kept = {r["doc_id"] for r in docs}
         signed = [s for s in near.signed if s[0] in kept]
         boot = not _have_index()
-        sign_params = (bands * rows_per_band, 42)
+        sign_params = (bands * rows_per_band, MINHASH_SEED)
         if not boot:
             meta = read_dedup_index_meta(spark, idx_dir)
             tier_params = (meta["bands"] * meta["rows_per_band"], meta["seed"])

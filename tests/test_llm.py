@@ -3151,7 +3151,17 @@ def test_minhash_near_dup_local_parity(spark):
         for r in docs.select("doc_id", F.expr(HTOK).alias("htok")).collect()
     ]
     near = minhash_near_dup_local(rows, threshold=0.9)
-    assert base and sorted(near.pairs()) == base
+    # the Spark operator's pair expansion: each verified rep pair to its
+    # groups' members, plus every group's own pairs at 1.0
+    pairs = [
+        (min(x, y), max(x, y), jac)
+        for r1, r2, jac in near.verified
+        for x in near.members[r1]
+        for y in near.members[r2]
+    ]
+    for ids in near.members.values():
+        pairs.extend((x, y, 1.0) for i, x in enumerate(ids) for y in ids[i + 1 :])
+    assert base and sorted(pairs) == base
 
     reps = {d for d, _, _ in near.signed}
     key = lambda r: (r[0], tuple(r[1]), tuple(r[2]))
