@@ -23,12 +23,16 @@ Scale design (the 100 TB story):
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from decimal import ROUND_HALF_UP, Decimal
 from functools import lru_cache, partial
 from itertools import chain
 from typing import NamedTuple
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pac
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -40,11 +44,14 @@ from actuarial_reserve_modelling_spark.sources.tiers import (
     Layout,
     _write_index_stats,
     add_rows,
+    add_rows_local,
     auto_parts,
     delete_rows,
     hash_part,
+    hash_part_local,
     read_meta,
     route_pruned,
+    spark_hash_longs,
     write_meta,
 )
 
@@ -707,19 +714,49 @@ def minhash_near_dup_local(
         enc.append(ids[i] * n + ids[j])
     p, q = np.divmod(np.unique(np.concatenate(enc)), n)
     sz = np.array([len(toks[r]) for r in reps], dtype=np.int64)
-    ratio = threshold - 1e-6
-    keep = np.minimum(sz[p], sz[q]) >= ratio * np.maximum(sz[p], sz[q])
+    keep = _size_compatible(sz[p], sz[q], threshold)
     tok_sets = [set(toks[r]) for r in reps]
-    sz = sz.tolist()
-    verified = []
-    for a, b in zip(p[keep].tolist(), q[keep].tolist()):
-        inter = len(tok_sets[a] & tok_sets[b])
-        jac = inter / (sz[a] + sz[b] - inter)
+    verified = [
+        (reps[a], reps[b], jac)
+        for a, b, jac in _verify_local(
+            p[keep], q[keep], tok_sets, sz, tok_sets, sz, threshold
+        )
+    ]
+    return LocalNearDup(members, verified, signed)
+
+
+def _size_compatible(sz1: np.ndarray, sz2: np.ndarray, threshold: float) -> np.ndarray:
+    """The size prune: Jaccard is at most min/max of the set sizes, so a
+    pair under τ there can never verify (1e-6 slack for the
+    round-before-filter verify)."""
+    return np.minimum(sz1, sz2) >= (threshold - 1e-6) * np.maximum(sz1, sz2)
+
+
+def _verify_local(
+    p: np.ndarray,
+    q: np.ndarray,
+    sets_p: list[set[int]],
+    sizes_p: np.ndarray,
+    sets_q: list[set[int]],
+    sizes_q: np.ndarray,
+    threshold: float,
+) -> list[tuple[int, int, float]]:
+    """The exact verify on the driver, shared by the within-batch and the
+    cross-batch checks: the index pairs ``(p[i], q[i])`` into two lists
+    of hashed-token sets whose ``round(jac, 6) ≥ τ`` (Spark's HALF_UP
+    ``round``), as ``(p, q, jac)``. Sizes count the hashed tokens and the
+    intersection their distinct values, as ``array_intersect`` does."""
+    ratio = threshold - 1e-6
+    sizes_p, sizes_q = sizes_p.tolist(), sizes_q.tolist()
+    out = []
+    for a, b in zip(p.tolist(), q.tolist()):
+        inter = len(sets_p[a] & sets_q[b])
+        union = sizes_p[a] + sizes_q[b] - inter
         # round(jac, 6) >= τ needs jac >= τ - 5e-7: the exact (Decimal)
         # rounding runs only on pairs that can pass
-        if jac >= ratio and (jac := _round6(jac)) >= threshold:
-            verified.append((reps[a], reps[b], jac))
-    return LocalNearDup(members, verified, signed)
+        if union and (jac := inter / union) >= ratio and (jac := _round6(jac)) >= threshold:
+            out.append((a, b, jac))
+    return out
 
 
 def _symmetrize(pairs: DataFrame) -> DataFrame:
@@ -1431,13 +1468,13 @@ def read_dedup_index_meta(spark: SparkSession, path: str) -> dict:
     )
 
 
-def _lookup_projection(meta: dict):
-    """The tier's id-side → banded projection, or None on a layout
-    without banded/."""
+def _lookup_projection(meta: dict, projection: Callable | None = None):
+    """The tier's id-side → banded projection (``projection``, by default
+    the Spark one), or None on a layout without banded/."""
     if meta["k_band_parts"] is None:
         return None
     return partial(
-        _banded_projection,
+        projection or _banded_projection,
         bands=meta["bands"],
         rows_per_band=meta["rows_per_band"],
         k_band_parts=meta["k_band_parts"],
@@ -1764,14 +1801,17 @@ def minhash_dedup_against_index_persisted(
             presigned=presigned,
         )
     bands, rpb = meta["bands"], meta["rows_per_band"]
-    new_docs = new_docs.localCheckpoint(eager=False)
+    if presigned is None:
+        new_docs = new_docs.localCheckpoint(eager=False)
     # decided BEFORE signing: the decision needs only |batch| (a count
-    # over the checkpointed batch — no MinHash kernel), so a full-scan
-    # route skips the banded-footprint job entirely and lands at the bare
-    # full twin's wall
+    # over the checkpointed batch, or over ``presigned`` — no MinHash
+    # kernel), so a full-scan route skips the banded-footprint job
+    # entirely and lands at the bare full twin's wall
     if not route_pruned(
         spark, path, route,
-        lambda: _DEDUP_ROUTE_CELLS_FACTOR * new_docs.count() * bands,
+        lambda: _DEDUP_ROUTE_CELLS_FACTOR * _row_count(
+            new_docs if presigned is None else presigned
+        ) * bands,
     ):
         return minhash_dedup_against_index(
             new_docs,
@@ -1845,6 +1885,182 @@ def minhash_dedup_against_index_persisted(
     return _jaccard_score_filter(joined, threshold, round_before_filter=True).select(
         "new_id", "index_id", "jac"
     )
+
+
+def _row_count(frame: DataFrame) -> int:
+    """``frame.count()``; a driver-resident frame (a ``LocalRelation``,
+    ``isLocal()``) is counted from its rows, which takes no job."""
+    if frame.isLocal():
+        return len(frame.select(frame.columns[0]).collect())
+    return frame.count()
+
+
+# --- driver-local tier I/O (the t11 ingest gate's steady batch) ------------
+
+
+def _check_signed_local(
+    signed: list[tuple[int, list[int], list[int]]], meta: dict, caller: str
+) -> None:
+    """The presigned contract for driver-signed rows: the first row's sig
+    must have the tier's length and re-sign bitwise under the tier's
+    seed, so rows signed with other parameters fail loudly instead of
+    corrupting the tier (the check ``persist_dedup_index`` makes)."""
+    if not signed:
+        return
+    doc_id, htok, sig = signed[0]
+    num = meta["bands"] * meta["rows_per_band"]
+    if len(sig) != num or sign_local([(doc_id, htok)], num, meta["seed"])[0][2] != list(sig):
+        raise ValueError(
+            f"{caller}: rows were signed with other parameters than the tier's "
+            f"(bands={meta['bands']}, rows_per_band={meta['rows_per_band']}, "
+            f"seed={meta['seed']})"
+        )
+
+
+def _banded_local(sig: np.ndarray, bands: int, rows_per_band: int) -> np.ndarray:
+    """``_banded_buckets``' buckets on the driver: Spark's ``hash`` of
+    each band slice of the ``(n, bands·rows_per_band)`` signature matrix,
+    as an ``(n, bands)`` int32 matrix."""
+    n = len(sig)
+    return spark_hash_longs(sig.reshape(n * bands, rows_per_band)).reshape(n, bands)
+
+
+def _banded_projection_local(
+    rows: pa.Table, bands: int, rows_per_band: int, k_band_parts: int
+) -> pa.Table:
+    """``_banded_projection`` of driver-resident id-side rows."""
+    n = rows.num_rows
+    sig = rows.column("sig").combine_chunks().flatten().to_numpy()
+    buckets = _banded_local(sig.reshape(n, bands * rows_per_band), bands, rows_per_band)
+    sz = pac.list_value_length(rows.column("htok")).to_numpy().astype(np.int32)
+    flat = buckets.ravel()
+    return pa.table(
+        {
+            "doc_id": np.repeat(rows.column("doc_id").to_numpy(), bands),
+            "sz": np.repeat(sz, bands),
+            "band": np.tile(np.arange(bands, dtype=np.int32), n),
+            "bucket": flat,
+            "bpart": (flat.astype(np.int64) % k_band_parts).astype(np.int32),
+        }
+    )
+
+
+def dedup_against_index_local(
+    spark: SparkSession,
+    path: str,
+    signed: list[tuple[int, list[int], list[int]]],
+    threshold: float = 0.95,
+    max_bucket_size: int = MAX_BUCKET_SIZE,
+    exclude_same_id: bool = True,
+) -> list[tuple[int, int, float]]:
+    """``minhash_dedup_against_index_persisted``'s pruned route on the
+    driver, for a local tier and a batch signed there under the tier's
+    parameters (``signed``: ``sign_local`` rows). No Spark job runs:
+
+    1. the batch bands itself (``spark_hash_longs``, the port of the
+       bucket hash) into its (band, bucket) cells;
+    2. ``banded/`` is read with pyarrow, pruned to the cells' bpart
+       directories and filtered to their buckets; the exact skew guard
+       counts each cell over those rows (every member of a cell lives in
+       one partition, so the counts are the true sizes);
+    3. same-id pairs are excluded, the size prune runs, and the verify
+       reads ``fingerprints/`` pruned to the candidates' id-hash
+       partitions (``hash_part_local``).
+
+    Returns the verified ``(new_id, index_id, jac)`` pairs, the Spark
+    operator's answer."""
+    meta = read_dedup_index_meta(spark, path)
+    _check_signed_local(signed, meta, "dedup_against_index_local")
+    if meta["k_band_parts"] is None:
+        raise ValueError(
+            f"dedup_against_index_local: the tier at {path} has no banded/ "
+            "projection (layout_version 1); use minhash_dedup_against_index_persisted"
+        )
+    if not signed:
+        return []
+    import pandas as pd
+
+    bands, rpb = meta["bands"], meta["rows_per_band"]
+    n = len(signed)
+    new_ids = np.array([d for d, _, _ in signed], dtype=np.int64)
+    new_sz = np.array([len(h) for _, h, _ in signed], dtype=np.int64)
+    sig = np.array([s for _, _, s in signed], dtype=np.int64)
+    new = pd.DataFrame(
+        {
+            "new": np.repeat(np.arange(n), bands),
+            "band": np.tile(np.arange(bands, dtype=np.int32), n),
+            "bucket": _banded_local(sig, bands, rpb).ravel(),
+        }
+    )
+    cells = new[["band", "bucket"]].drop_duplicates()
+    buckets = cells["bucket"].unique()
+    idx = (
+        _DEDUP.lookup.read_local(
+            path,
+            np.unique(buckets.astype(np.int64) % meta["k_band_parts"]).tolist(),
+            filter=pads.field("bucket").isin(buckets),
+            columns=["doc_id", "sz", "band", "bucket"],
+        )
+        .to_pandas()
+        .merge(cells, on=["band", "bucket"])
+    )
+    idx = idx[idx.groupby(["band", "bucket"])["doc_id"].transform("size") <= max_bucket_size]
+    cand = new.merge(idx, on=["band", "bucket"])
+    a, b = cand["new"].to_numpy(), cand["doc_id"].to_numpy()
+    keep = _size_compatible(new_sz[a], cand["sz"].to_numpy(), threshold)
+    if exclude_same_id:
+        keep &= new_ids[a] != b
+    pairs = np.unique(np.stack([a[keep], b[keep]], axis=1), axis=0)
+    if not len(pairs):
+        return []
+    index_ids = np.unique(pairs[:, 1])
+    fp = _DEDUP.ids.read_local(
+        path,
+        np.unique(hash_part_local(meta["n_buckets"], index_ids)).tolist(),
+        filter=pads.field("doc_id").isin(index_ids),
+        columns=["doc_id", "htok"],
+    )
+    pos = {d: i for i, d in enumerate(fp.column("doc_id").to_pylist())}
+    # a banded row without its fingerprints/ row (a crashed add's orphan)
+    # drops out, as in the Spark verify join
+    pairs = pairs[[d in pos for d in pairs[:, 1].tolist()]]
+    htoks = fp.column("htok").to_pylist()
+    verified = _verify_local(
+        pairs[:, 0],
+        np.array([pos[d] for d in pairs[:, 1].tolist()], dtype=np.int64),
+        [set(h) for _, h, _ in signed],
+        new_sz,
+        [set(h) for h in htoks],
+        np.array([len(h) for h in htoks], dtype=np.int64),
+        threshold,
+    )
+    ids = fp.column("doc_id").to_pylist()
+    return [(int(new_ids[p]), ids[q], jac) for p, q, jac in verified]
+
+
+@leased("path")
+def add_to_dedup_index_local(
+    spark: SparkSession,
+    path: str,
+    signed: list[tuple[int, list[int], list[int]]],
+) -> None:
+    """``add_to_dedup_index(presigned=…)`` on the driver, for a local tier
+    and rows signed under its parameters (``sign_local`` rows): the same
+    id-anti-joined appends, ``banded/`` first, then ``fingerprints/``,
+    then the stats bump (``sources.tiers.add_rows_local``), with no Spark
+    job."""
+    meta = read_dedup_index_meta(spark, path)
+    _check_signed_local(signed, meta, "add_to_dedup_index_local")
+    longs = pa.list_(pa.int64())
+    rows = pa.table(
+        {
+            "doc_id": pa.array([d for d, _, _ in signed], pa.int64()),
+            "htok": pa.array([list(h) for _, h, _ in signed], longs),
+            "sig": pa.array([list(s) for _, _, s in signed], longs),
+        }
+    )
+    project = _lookup_projection(meta, _banded_projection_local)
+    add_rows_local(spark, path, _DEDUP, rows, meta["n_buckets"], project)
 
 
 def segment_dedup(

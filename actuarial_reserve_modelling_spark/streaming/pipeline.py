@@ -24,6 +24,9 @@ import uuid
 from functools import partial
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,16 +47,12 @@ from actuarial_reserve_modelling_spark.sources.tiers import Dataset, hash_part
 # 1,667 rows (sf0.1 split in 3) took 0.17 s and +29 MB. The bound keeps
 # the worst case near 4 s and 0.5 GB.
 _NEARDUP_MAX_ROWS = 2_000
-# its driver-resident frames: first-wins rows and admitted docs
-_FP_ROWS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("fingerprint", T.StringType()),
-        T.StructField("fpart", T.IntegerType()),
-    ]
-)
+# its admitted docs (the sink frame) and its fingerprint-tier rows
 _DOC_ROWS = T.StructType(
     [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+)
+_FP_ARROW = pa.schema(
+    [("doc_id", pa.int64()), ("fingerprint", pa.string()), ("fpart", pa.int32())]
 )
 
 # Staged source dirs, keyed by (sf_dir, n_files): T1-T4 all stream the
@@ -422,10 +421,11 @@ class _IngestGate:
       inside acquire reentrantly under it). ``locked`` runs any other
       tier mutation (t10's seed bootstrap) under the same lease.
     * **Epoch-keyed overwrite sink.** Epoch ``bid`` clears and then
-      overwrites ``<sink>/<key>/e{bid}``, so a retried epoch replaces its
-      own output. ``append`` gets the committed rows re-read from the sink
-      (a cheap columnar read), so tier appends derive from what was
-      committed and the check plan runs once.
+      overwrites ``<sink>/<key>/e{bid}`` (a Spark write), so a retried
+      epoch replaces its own output. ``append`` gets that directory and
+      re-reads the committed rows from it (``committed``, a cheap
+      columnar read, or a pyarrow read on the driver), so tier appends
+      derive from what was committed and the check plan runs once.
     * **Idempotent appends, same-id replay convergence.** Every tier
       append anti-joins the committed rows against the ids already
       indexed (a read pruned to the batch's own partitions), so a
@@ -437,10 +437,17 @@ class _IngestGate:
     * **Compaction policy.** With ``auto_compact`` set, every epoch
       after the first runs the threshold compaction (``auto_compact``
       files per partition; only hotter partitions are rewritten, so it
-      is one metadata aggregate when nothing is hot) of each PRESENT
-      tier, overlapped when there are two, then ``vacuum_index`` on
-      the work dir when ``auto_vacuum`` is set. Compaction preserves
-      contents exactly, so the admitted set does not depend on it.
+      is a directory walk when nothing is hot) of each PRESENT tier,
+      overlapped when there are two, then ``vacuum_index`` on the work
+      dir when ``auto_vacuum`` is set. Compaction preserves contents
+      exactly, so the admitted set does not depend on it.
+
+    Which phases run on Spark is the gate's own choice: the loop itself
+    adds only the sink write, and a compaction on a local work dir
+    rewrites small partitions on the driver (``Dataset.compact``). The
+    t11 gate runs its steady batch's tier phases on the driver too, so
+    Spark runs only its collect and the sink; t10, t12 and t13 run
+    their checks and appends as Spark jobs.
 
     ``ARM_GATE_TIMING=1`` prints one ``ARM_GATE_TIMING <gate> batch=N
     label=seconds ...`` line per epoch: ``compact``, the gate's own
@@ -501,8 +508,10 @@ class _IngestGate:
         if nxt < len(self._phases):
             self._describe(self._phases[nxt])
 
-    def overlap(self, labeled_fns: list[tuple[str, Callable[[], None]]]) -> None:
-        _run_overlapped(labeled_fns, self._marks)
+    def committed(self, epoch: str) -> DataFrame:
+        """The rows committed to the epoch sink directory ``epoch``, as a
+        Spark frame (a cheap columnar read)."""
+        return self.spark.read.parquet(epoch).select(*self._sink_cols)
 
     def run(
         self,
@@ -525,6 +534,7 @@ class _IngestGate:
         key = _path_safe(cache_key)
         sink = os.path.join(self.sink, key)
         self._phases = ("compact", *phases, "sink", "appends")
+        self._sink_cols = sink_cols
 
         def step(batch_df: DataFrame, bid: int) -> None:
             if self._marks is not None:
@@ -544,7 +554,7 @@ class _IngestGate:
                 # queueing; vacuum waits for all of them (it reads every
                 # tier's live-file set)
                 if len(due) > 1:
-                    self.overlap(due)
+                    _run_overlapped(due, self._marks)
                 elif due:
                     due[0][1]()
                 if auto_vacuum:
@@ -554,14 +564,9 @@ class _IngestGate:
             admitted.select(*sink_cols).withColumn(
                 "batch", F.lit(bid).cast("int")
             ).write.mode("overwrite").parquet(out_epoch)
-            committed = (
-                None
-                if append is None
-                else spark.read.parquet(out_epoch).select(*sink_cols)
-            )
             self.mark("sink")
             if append is not None:
-                append(committed)
+                append(out_epoch)
             self.mark("appends")
             if self._marks is not None:
                 print(f"ARM_GATE_TIMING {name} batch={bid} " + " ".join(
@@ -684,6 +689,33 @@ class _FingerprintTier:
             rows = self._DS.unindexed(self.spark, self.path, rows, "doc_id", fparts)
         self._DS.write(rows.select("doc_id", "fingerprint", "fpart"), self.path)
 
+    def hits_local(self, docs: list[tuple[int, str, int]]) -> set[int]:
+        """``hits`` of driver-resident ``(doc_id, fingerprint, fpart)``
+        rows, through a pyarrow read of their own fpart directories
+        filtered to their fingerprints: no Spark job."""
+        if not docs or not self.present():
+            return set()
+        seen = self._DS.read_local(
+            self.path,
+            sorted({p for _, _, p in docs}),
+            filter=pads.field("fingerprint").isin([f for _, f, _ in docs]),
+            columns=["doc_id", "fingerprint"],
+        )
+        owners: dict[str, set[int]] = {}
+        for d, f in zip(seen["doc_id"].to_pylist(), seen["fingerprint"].to_pylist()):
+            owners.setdefault(f, set()).add(d)
+        return {d for d, f, _ in docs if owners.get(f, set()) - {d}}
+
+    def append_local(self, docs: list[tuple[int, str, int]]) -> None:
+        """``append`` of driver-resident ``(doc_id, fingerprint, fpart)``
+        rows through ``Dataset.unindexed_local`` and ``write_local``."""
+        rows = pa.Table.from_pylist(
+            [{"doc_id": d, "fingerprint": f, "fpart": p} for d, f, p in docs],
+            schema=_FP_ARROW,
+        )
+        rows = self._DS.unindexed_local(self.path, rows, "doc_id")
+        self._DS.write_local(self.spark, rows, self.path)
+
 
 def _cluster_reps(frame: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
     """``frame`` minus every non-representative of the connected
@@ -751,8 +783,8 @@ def incremental_ingest_dedup(
 
     def check(batch_df: DataFrame, bid: int):
         first, fparts = fpt.first_wins(batch_df)
-        return fpt.survivors(first, fparts), lambda committed: fpt.append(
-            committed, fparts
+        return fpt.survivors(first, fparts), lambda epoch: fpt.append(
+            gate.committed(epoch), fparts
         )
 
     return gate.run(
@@ -790,40 +822,45 @@ def incremental_neardup_ingest(
     driver as ``(doc_id, text, fingerprint, fpart, htok)`` (fingerprint,
     fingerprint-hash partition and sorted hashed tokens all computed
     JVM-side), every fact about the batch alone is computed there, and
-    Spark runs only what touches the persisted tiers. Per arriving
-    batch:
+    from batch 1 on the tier I/O runs there too, through pyarrow
+    (``sources.tiers`` ``Dataset.read_local`` / ``write_local``). Per
+    arriving batch:
 
     1. **exact tier** — within-batch first-wins (the lowest doc_id per
-       fingerprint) on the driver, then the check against the
-       exact-fingerprint tier (``fp_index``) read pruned to the batch's
-       own fingerprint-hash partitions (one job collecting the hit ids;
-       same-id matches are replays);
+       fingerprint), then the check against the exact-fingerprint tier
+       (``fp_index``) read pruned to the batch's own fingerprint-hash
+       partitions and filtered to its fingerprints (same-id matches are
+       replays);
     2. **within-batch near-dup tier** — ``minhash_near_dup_local`` over
        the exact survivors: exact token-set collapse, MinHash signing
        with the Spark kernel's own arithmetic (``minhash_rows``), the
        same banding and skew guard, exact verify, and min-id connected
        components by union-find; token-less docs survive. Each
        component keeps its minimum doc_id;
-    3. **cross-batch near-dup tier** — the survivors' signed rows form
-       one local ``(doc_id, htok, sig)`` frame, stamped with its
-       params-hash, checked AGAINST the persisted dedup tier
-       (``minhash_dedup_against_index_persisted`` — banded projection
-       read pruned to the batch's bucket set; same-id pairs excluded,
-       so replays converge). A tier persisted with other signing
-       parameters is checked with rows re-signed locally under ITS
-       parameters;
-    4. admitted docs append to BOTH tiers partition-locally, overlapped:
-       the dedup tier from the signed frame (``add_to_dedup_index(
-       presigned=...)``), the fingerprint tier from the first-wins rows,
-       each restricted to the ids re-read from the committed sink.
+    3. **cross-batch near-dup tier** — the survivors' signed rows are
+       checked AGAINST the persisted dedup tier
+       (``dedup_against_index_local``: the banded projection read pruned
+       to the batch's bpart directories and filtered to its cells, the
+       exact per-cell skew guard, same-id pairs excluded so replays
+       converge, the size prune, and a verify read of ``fingerprints/``
+       pruned to the candidates' id-hash partitions). A tier persisted
+       with other signing parameters is checked with rows re-signed
+       locally under ITS parameters;
+    4. the admitted docs go to the epoch sink (a Spark write), then
+       append to BOTH tiers, restricted to the ids read back from the
+       committed sink with pyarrow: the dedup tier
+       (``add_to_dedup_index_local``: id-anti-joined, ``banded/`` first,
+       then ``fingerprints/``, then stats), then the fingerprint tier.
        Rejected docs contribute NOTHING — the tiers stay linear in the
        KEPT corpus, not the ingested stream.
 
-    Batch 0 bootstraps the dedup tier (``persist_dedup_index`` on the
-    signed frame restricted to its admitted ids — meta/ is written last,
-    so its presence is the commit marker; a retry re-persists over
-    partial state). Both tiers compact under ``_IngestGate``'s policy
-    (``compact_dedup_index`` and the fingerprint tier, overlapped).
+    Spark runs the batch's collect, the epoch sink write and batch 0's
+    bootstrap: ``persist_dedup_index`` on the signed rows restricted to
+    its admitted ids (meta/ is written last, so its presence is the
+    commit marker; a retry re-persists over partial state). Both tiers
+    compact under ``_IngestGate``'s policy (``compact_dedup_index`` and
+    the fingerprint tier), on the driver for partitions up to
+    ``_LOCAL_COMPACT_MAX_BYTES``.
 
     Sizing contract: a micro-batch must fit on the driver. A batch of
     more than ``_NEARDUP_MAX_ROWS`` (2,000) rows raises a ValueError
@@ -845,10 +882,10 @@ def incremental_neardup_ingest(
     from actuarial_reserve_modelling_spark.operators.dedup import (
         HTOK,
         MINHASH_SEED,
-        add_to_dedup_index,
+        add_to_dedup_index_local,
         compact_dedup_index,
+        dedup_against_index_local,
         dedup_index_frame,
-        minhash_dedup_against_index_persisted,
         minhash_near_dup_local,
         persist_dedup_index,
         read_dedup_index_meta,
@@ -883,15 +920,9 @@ def incremental_neardup_ingest(
         for r in sorted(rows, key=lambda r: r["doc_id"]):
             first.setdefault(r["fingerprint"], r)
         docs = list(first.values())  # lowest doc_id per fingerprint, ascending
-        fparts = sorted({r["fpart"] for r in docs})
-        first_df = local_frame(
-            spark,
-            [(r["doc_id"], r["fingerprint"], r["fpart"]) for r in docs],
-            _FP_ROWS,
-        )
-        if fpt.present():
-            hit = {r["doc_id"] for r in fpt.hits(first_df, fparts).collect()}
-            docs = [r for r in docs if r["doc_id"] not in hit]
+        fp_rows = [(r["doc_id"], r["fingerprint"], r["fpart"]) for r in docs]
+        hit = fpt.hits_local(fp_rows)
+        docs = [r for r in docs if r["doc_id"] not in hit]
         gate.mark("exact_tier")
         # 2) within-batch near-dup tier → component representatives
         near = minhash_near_dup_local(
@@ -905,8 +936,7 @@ def incremental_neardup_ingest(
         gate.mark("within_batch")
         # 3) cross-batch near-dup tier. Every survivor with tokens is an
         # exact-collapse rep, so the reps' signed rows cover the batch;
-        # the one local frame serves the check, the append and the
-        # bootstrap persist
+        # the same rows serve the check, the append and the bootstrap
         kept = {r["doc_id"] for r in docs}
         signed = [s for s in near.signed if s[0] in kept]
         boot = not _have_index()
@@ -918,50 +948,32 @@ def incremental_neardup_ingest(
                 # foreign tier in the work dir: sign with ITS params
                 sign_params = tier_params
                 signed = sign_local([(d, h) for d, h, _ in signed], *sign_params)
-        signed_e = dedup_index_frame(spark, signed, *sign_params)
+            hits = {
+                d
+                for d, _, _ in dedup_against_index_local(
+                    spark, idx_dir, signed, threshold=threshold
+                )
+            }
+            docs = [r for r in docs if r["doc_id"] not in hits]
         admitted = local_frame(
             spark, [(r["doc_id"], r["text"]) for r in docs], _DOC_ROWS
         )
-        if not boot:
-            hits = [
-                r["new_id"]
-                for r in minhash_dedup_against_index_persisted(
-                    spark, idx_dir, admitted, threshold=threshold, presigned=signed_e
-                )
-                .select("new_id")
-                .distinct()
-                .collect()
-            ]
-            if hits:
-                admitted = admitted.filter(~F.col("doc_id").isin(hits))
         gate.mark("cross_batch")
 
-        def append(committed: DataFrame) -> None:
-            ids = committed.select("doc_id")
-
-            def _index_append() -> None:
-                if boot:
-                    persist_dedup_index(
-                        signed_e.join(ids, "doc_id", "leftsemi"),
-                        idx_dir,
-                        bands=bands,
-                        rows_per_band=rows_per_band,
-                    )
-                else:
-                    add_to_dedup_index(spark, idx_dir, committed, presigned=signed_e)
-
-            def _fp_append() -> None:
-                fpt.append(first_df.join(ids, "doc_id", "leftsemi"), fparts)
-
-            # the two appends run from two driver threads: both derive
-            # only from the committed sink and driver-resident frames,
-            # and write to DIFFERENT directories, so the jobs are
-            # independent and the scheduler back-fills one append's
-            # straggler tail with the other's tasks. Crash states are the
-            # set a retry already heals (the stream replays a failed step
-            # before any later batch runs, and both appends are anti-join
-            # idempotent), so only the wall changes, never the tiers.
-            gate.overlap([("index_append", _index_append), ("fp_append", _fp_append)])
+        def append(epoch: str) -> None:
+            sunk = pq.read_table(epoch)
+            ids = set(sunk.column("doc_id").to_pylist()) if sunk.num_rows else set()
+            committed = [s for s in signed if s[0] in ids]
+            if boot:
+                persist_dedup_index(
+                    dedup_index_frame(spark, committed, *sign_params),
+                    idx_dir,
+                    bands=bands,
+                    rows_per_band=rows_per_band,
+                )
+            else:
+                add_to_dedup_index_local(spark, idx_dir, committed)
+            fpt.append_local([r for r in fp_rows if r[0] in ids])
 
         return admitted, append
 
@@ -1126,8 +1138,8 @@ def incremental_semantic_ingest(
             .select(F.col("new_id").alias("vec_id"))
             .distinct()
         )
-        return vecs.join(hits, "vec_id", "left_anti"), lambda committed: (
-            add_to_vecsig_index(spark, idx_dir, committed, presigned=sigs_e)
+        return vecs.join(hits, "vec_id", "left_anti"), lambda epoch: (
+            add_to_vecsig_index(spark, idx_dir, gate.committed(epoch), presigned=sigs_e)
         )
 
     return gate.run(
@@ -1267,11 +1279,11 @@ def incremental_ann_ingest(
             .distinct()
         )
 
-        def append(committed: DataFrame) -> None:
+        def append(epoch: str) -> None:
             # the checkpointed probe frame covers reps ⊇ committed
             # (committed rows are bitwise copies of admitted reps
             # through the parquet sink)
-            add_to_ann_index(spark, idx_dir, committed, preassigned=probes)
+            add_to_ann_index(spark, idx_dir, gate.committed(epoch), preassigned=probes)
             if refresh_recall_curve and bid > 0 and bid % refresh_recall_curve == 0:
                 # post-append: audit the corpus the NEXT batch will
                 # query (its lease nests inside the held work-dir lease)

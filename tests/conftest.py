@@ -2,6 +2,12 @@
 
 from __future__ import annotations
 
+import contextlib
+import json
+import time
+import urllib.request
+import uuid
+
 import numpy as np
 import pytest
 
@@ -15,6 +21,45 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 def spark():
     spark = get_spark(app_name="arm-spark-tests", shuffle_partitions=8)
     yield spark
+
+
+_MARKER = "job-count-marker-"
+
+
+def status_jobs(spark) -> list[dict]:
+    """Every job the status REST API lists, once its store has caught up:
+    a marker job is fired and waited for, and the listener bus delivers
+    events in order, so every job submitted before it is listed."""
+    sc = spark.sparkContext
+    marker = _MARKER + uuid.uuid4().hex
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", marker)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+    url = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/jobs"
+    for _ in range(300):
+        with urllib.request.urlopen(url, timeout=30) as r:
+            jobs = json.load(r)
+        if any(j.get("description") == marker and j["status"] == "SUCCEEDED" for j in jobs):
+            return jobs
+        time.sleep(0.1)
+    raise AssertionError("the status API never listed the marker job")
+
+
+@contextlib.contextmanager
+def fired_jobs(spark):
+    """Collects the status-API records of the Spark jobs fired inside the
+    block, by any thread (a stream's jobs included)."""
+    last = max(j["jobId"] for j in status_jobs(spark))
+    jobs: list[dict] = []
+    yield jobs
+    jobs.extend(
+        j
+        for j in status_jobs(spark)
+        if j["jobId"] > last and not (j.get("description") or "").startswith(_MARKER)
+    )
 
 
 def write_policy_csvs(tmpdir, n_files: int = 10, rows_per_file: int = 20, seed: int = 42):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from actuarial_reserve_modelling_spark.catalog import load_table
 from actuarial_reserve_modelling_spark.operators.dedup import (
@@ -2736,6 +2737,205 @@ def test_dedup_lookup_adaptive_routing_parity_and_stats(spark, tmp_path):
             spark, path, batch, threshold=0.8, route="pruned"
         )
     ).count() == 0
+
+
+def test_persisted_dedup_presigned_route_leaves_new_docs_alone(spark, tmp_path):
+    """With ``presigned`` the persisted lookup sizes its route from the
+    presigned frame: a driver-resident (LocalRelation) batch is counted
+    without a job, so on the full-scan route the call fires only the
+    index read's schema inference, and ``new_docs`` is never evaluated
+    on either route (a poisoned frame would raise). Answers match the un-presigned call."""
+    from actuarial_reserve_modelling_spark.operators import dedup as D
+
+    from .conftest import fired_jobs
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    batch = docs.filter(F.col("doc_id") % 3 == 0).select(
+        (F.col("doc_id") + 900000).alias("doc_id"), "text"
+    )
+    path = str(tmp_path / "didx")
+    D.persist_dedup_index(
+        D.build_dedup_index(docs.filter(F.col("doc_id") % 3 != 0), bands=8, rows_per_band=4),
+        path,
+        bands=8,
+        rows_per_band=4,
+    )
+    want = sorted(
+        map(tuple, D.minhash_dedup_against_index_persisted(spark, path, batch, threshold=0.8).collect())
+    )
+    assert want
+    rows = batch.select("doc_id", F.expr(D.HTOK).alias("htok")).collect()
+    presigned = D.dedup_index_frame(
+        spark, D.sign_local([(r["doc_id"], list(r["htok"])) for r in rows if r["htok"]], 32), 32
+    )
+
+    @F.udf("string")
+    def poisoned(text):
+        raise RuntimeError("new_docs was evaluated")
+
+    new_docs = batch.select("doc_id", poisoned("text").alias("text"))
+    old = D._DEDUP_ROUTE_CELLS_FACTOR
+    try:
+        for factor in (10**9, 0):  # auto -> full, auto -> pruned
+            D._DEDUP_ROUTE_CELLS_FACTOR = factor
+            with fired_jobs(spark) as jobs:
+                got = D.minhash_dedup_against_index_persisted(
+                    spark, path, new_docs, threshold=0.8, presigned=presigned
+                )
+            if factor:
+                # the full scan's one job infers the index's parquet schema
+                assert [j["name"].split(" at ")[0] for j in jobs] == ["parquet"]
+            assert sorted(map(tuple, got.collect())) == want
+    finally:
+        D._DEDUP_ROUTE_CELLS_FACTOR = old
+
+
+def test_spark_hash_ports_match_spark(spark):
+    """The numpy ports behind the driver-local tier I/O reproduce Spark
+    bit for bit: ``hash(slice(sig, …))`` (``_banded_buckets``' bucket)
+    over every band cell of real signatures, ``hash`` of arrays holding
+    the int64 edge values, and ``hash_part(n, "doc_id")`` /
+    ``xxhash64`` of real ids and the edge values."""
+    import numpy as np
+
+    from actuarial_reserve_modelling_spark.operators.arrowkit import local_frame
+    from actuarial_reserve_modelling_spark.operators.dedup import (
+        _banded_buckets,
+        _banded_local,
+        build_dedup_index,
+    )
+    from actuarial_reserve_modelling_spark.sources.tiers import (
+        hash_part,
+        hash_part_local,
+        spark_hash_longs,
+        xxhash64_longs,
+    )
+
+    bands, rpb = 16, 16
+    index = build_dedup_index(
+        load_table(spark, SF_SMOKE, "documents"), bands=bands, rows_per_band=rpb
+    ).localCheckpoint()
+    rows = index.select("doc_id", "sig").collect()
+    want = {
+        (r["doc_id"], r["band"]): r["bucket"]
+        for r in _banded_buckets(index, "doc_id", bands, rpb).collect()
+    }
+    assert len(want) >= 5000
+    local = _banded_local(np.array([r["sig"] for r in rows], dtype=np.int64), bands, rpb)
+    assert {
+        (r["doc_id"], b): int(local[i, b]) for i, r in enumerate(rows) for b in range(bands)
+    } == want
+
+    edges = [0, -1, -(2**63), 2**63 - 1]
+    arrays = [[e] for e in edges] + [edges, edges[::-1], [*edges, *rows[0]["sig"][:4]]]
+    hashed = local_frame(
+        spark,
+        list(enumerate(arrays)),
+        T.StructType([T.StructField("i", T.IntegerType()), T.StructField("a", T.ArrayType(T.LongType()))]),
+    ).select(F.hash("a").alias("h"))
+    assert [r["h"] for r in hashed.collect()] == [
+        int(spark_hash_longs(np.array([a], dtype=np.int64))[0]) for a in arrays
+    ]
+
+    ids = [r["doc_id"] for r in rows] + edges
+    frame = local_frame(spark, [(d,) for d in ids], T.StructType([T.StructField("doc_id", T.LongType())]))
+    assert [r[0] for r in frame.select(F.xxhash64("doc_id")).collect()] == xxhash64_longs(
+        np.array(ids, dtype=np.int64)
+    ).tolist()
+    for n in (16, 64, 1000):
+        assert [r[0] for r in frame.select(hash_part(n, "doc_id")).collect()] == hash_part_local(
+            n, np.array(ids, dtype=np.int64)
+        ).tolist()
+
+
+def test_driver_local_tier_io_matches_spark(spark, tmp_path):
+    """``Dataset.write_local`` / ``compact``'s local body / the stats
+    rewrite give what Spark's write gives — per-partition rows, the
+    lookup side's in-file cell sort, the schema Spark infers (field
+    metadata included), the file count — and fire no Spark job;
+    ``read_local`` returns the pruned, filtered rows."""
+    import glob
+    import os
+
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    from actuarial_reserve_modelling_spark.operators.dedup import (
+        _banded_projection,
+        _banded_projection_local,
+        build_dedup_index,
+    )
+    from actuarial_reserve_modelling_spark.sources.tiers import (
+        Dataset,
+        _write_index_stats,
+        read_index_stats,
+    )
+
+    from .conftest import fired_jobs
+
+    ids_ds = Dataset("fingerprints", "part")
+    look = Dataset("banded", "bpart", cell=("band", "bucket"))
+    index = build_dedup_index(
+        load_table(spark, SF_SMOKE, "documents"), bands=4, rows_per_band=4
+    ).localCheckpoint()
+    halves = [index.filter(F.col("doc_id") % 2 == i) for i in (0, 1)]
+
+    def id_rows(frame):
+        return frame.select("doc_id", "htok", "sig", (F.col("doc_id") % 5).cast("int").alias("part"))
+
+    def look_rows(frame):
+        return _banded_projection(frame, 4, 4, 6)
+
+    spark_dir, local_dir = str(tmp_path / "spark"), str(tmp_path / "local")
+    for d in (spark_dir, local_dir):  # the first write of each dataset is Spark's
+        ids_ds.write(id_rows(halves[0]), d)
+        look.write(look_rows(halves[0]), d)
+    ids_ds.write(id_rows(halves[1]), spark_dir)
+    look.write(look_rows(halves[1]), spark_dir)
+    table = id_rows(halves[1]).toArrow()
+    with fired_jobs(spark) as jobs:
+        ids_ds.write_local(spark, table, local_dir)
+        look.write_local(spark, _banded_projection_local(table.drop_columns(["part"]), 4, 4, 6), local_dir)
+        _write_index_stats(spark, local_dir, 42)
+        assert read_index_stats(spark, local_dir) == 42
+    assert jobs == []
+
+    def state(d):
+        out = {}
+        for ds in (ids_ds, look):
+            root = ds.root(d)
+            frame = spark.read.parquet(root)
+            out[ds.name] = (
+                frame.schema.json(),
+                sorted(map(str, frame.collect())),
+                sum(len(fs) for _, _, fs in os.walk(root)),
+            )
+        for f in glob.glob(f"{d}/banded/bpart=*/*.parquet"):
+            cells = pq.read_table(f, columns=["band", "bucket"]).to_pylist()
+            assert cells == sorted(cells, key=lambda c: (c["band"], c["bucket"])), f
+        return out
+
+    assert state(local_dir) == state(spark_dir)
+    ids_ds.compact(spark, spark_dir, 1)
+    look.compact(spark, spark_dir, 1)
+    with fired_jobs(spark) as jobs:
+        ids_ds.compact(spark, local_dir, 1)
+        look.compact(spark, local_dir, 1)
+    assert jobs == []
+    assert state(local_dir) == state(spark_dir)
+
+    part = halves[1].select("doc_id").limit(3).collect()
+    want = sorted(
+        r["doc_id"]
+        for r in ids_ds.read(spark, spark_dir, [1, 3])
+        .filter(F.col("doc_id").isin([p["doc_id"] for p in part]))
+        .collect()
+    )
+    got = ids_ds.read_local(
+        local_dir, [1, 3], filter=pads.field("doc_id").isin([p["doc_id"] for p in part])
+    )
+    assert sorted(got.column("doc_id").to_pylist()) == want
+    assert set(got.column("part").to_pylist()) <= {1, 3}
 
 
 @pytest.mark.slow

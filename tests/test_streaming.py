@@ -522,6 +522,105 @@ def test_neardup_ingest_batch_over_driver_bound_raises(spark, monkeypatch):
         )
 
 
+def _neardup_batches(spark):
+    from actuarial_reserve_modelling_spark.catalog import load_table
+
+    from .conftest import SF_SMOKE
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    return [docs.filter(F.col("doc_id") % 3 == i).select("doc_id", "text") for i in range(3)]
+
+
+def _tier_rows(spark, work: str) -> dict:
+    """Per-partition row multisets of the t11 gate's three datasets."""
+    out = {}
+    for name, part in (
+        ("fp_index", "fpart"),
+        ("dedup_index/fingerprints", "part"),
+        ("dedup_index/banded", "bpart"),
+    ):
+        rows = spark.read.parquet(os.path.join(work, name)).collect()
+        by_part: dict = {}
+        for r in rows:
+            by_part.setdefault(r[part], []).append(str(r))
+        out[name] = {p: sorted(v) for p, v in by_part.items()}
+    return out
+
+
+def test_neardup_ingest_steady_batch_job_budget(spark, tmp_path):
+    """Every t11 batch after the bootstrap runs its tier phases on the
+    driver: Spark runs only its collect, the epoch sink and (after the
+    bootstrap rewrote meta/) one meta read, at most 5 jobs per batch,
+    counted by the stream's ``batch = N`` job description."""
+    from actuarial_reserve_modelling_spark.streaming.pipeline import (
+        incremental_neardup_ingest,
+    )
+
+    from .conftest import fired_jobs
+
+    with fired_jobs(spark) as jobs:
+        incremental_neardup_ingest(
+            spark,
+            _neardup_batches(spark),
+            cache_key="test_neardup_job_budget",
+            auto_compact=1,
+            work_dir=str(tmp_path / "gate"),
+        )
+    per_batch = {
+        b: [j["description"] for j in jobs if j.get("description", "").endswith(f"batch = {b}")]
+        for b in (1, 2)
+    }
+    assert all(0 < len(d) <= 5 for d in per_batch.values()), per_batch
+
+
+def test_neardup_ingest_rename_crash_heals(spark, tmp_path, monkeypatch):
+    """A crash between the dedup tier's two local appends (``os.rename``
+    fails once the lookup side has landed, before the id side has)
+    leaves a tier Spark still reads, with the ``_tmp_`` staging
+    directory listed by ``vacuum_index``; the retried step heals every
+    dataset to the same per-partition rows as an uninterrupted run."""
+    from actuarial_reserve_modelling_spark.sources.sinks import vacuum_index
+    from actuarial_reserve_modelling_spark.sources.tiers import read_index_stats
+    from actuarial_reserve_modelling_spark.streaming.pipeline import (
+        incremental_neardup_ingest,
+    )
+
+    batches = _neardup_batches(spark)
+    ref, work = str(tmp_path / "ref"), str(tmp_path / "crash")
+
+    def run(work_dir, key):
+        return {
+            (r["doc_id"], r["batch"])
+            for r in incremental_neardup_ingest(
+                spark, batches, cache_key=key, auto_compact=1, work_dir=work_dir
+            ).collect()
+        }
+
+    want = run(ref, "test_neardup_crash_ref")
+    real_rename = os.rename
+    crashed = []
+
+    def rename(src, dst):
+        if not crashed and "dedup_index/fingerprints/part=" in dst:
+            crashed.append(dst)
+            raise OSError("injected crash before the id side landed")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="injected crash"):
+        run(work, "test_neardup_crash")
+    monkeypatch.setattr(os, "rename", real_rename)
+    idx = os.path.join(work, "dedup_index")
+    banded = spark.read.parquet(idx + "/banded").select("doc_id").distinct().count()
+    assert banded > spark.read.parquet(idx + "/fingerprints").count()
+    assert any(
+        "/dedup_index/fingerprints/_tmp_" in p for p in vacuum_index(None, work, dry_run=True)
+    )
+    assert run(work, "test_neardup_crash") == want
+    assert _tier_rows(spark, work) == _tier_rows(spark, ref)
+    assert read_index_stats(spark, idx) == read_index_stats(spark, ref + "/dedup_index")
+
+
 @pytest.mark.slow
 def test_ingest_dedup_with_compaction_preserves_output(spark, tmp_path):
     """Compacting the fingerprint index mid-stream must not change the
