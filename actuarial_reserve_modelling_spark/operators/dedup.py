@@ -1950,8 +1950,6 @@ def dedup_against_index_local(
     path: str,
     signed: list[tuple[int, list[int], list[int]]],
     threshold: float = 0.95,
-    max_bucket_size: int = MAX_BUCKET_SIZE,
-    exclude_same_id: bool = True,
 ) -> list[tuple[int, int, float]]:
     """``minhash_dedup_against_index_persisted``'s pruned route on the
     driver, for a local tier and a batch signed there under the tier's
@@ -1961,8 +1959,9 @@ def dedup_against_index_local(
        bucket hash) into its (band, bucket) cells;
     2. ``banded/`` is read with pyarrow, pruned to the cells' bpart
        directories and filtered to their buckets; the exact skew guard
-       counts each cell over those rows (every member of a cell lives in
-       one partition, so the counts are the true sizes);
+       (``MAX_BUCKET_SIZE``) counts each cell over those rows (every
+       member of a cell lives in one partition, so the counts are the
+       true sizes);
     3. same-id pairs are excluded, the size prune runs, and the verify
        reads ``fingerprints/`` pruned to the candidates' id-hash
        partitions (``hash_part_local``).
@@ -2004,12 +2003,10 @@ def dedup_against_index_local(
         .to_pandas()
         .merge(cells, on=["band", "bucket"])
     )
-    idx = idx[idx.groupby(["band", "bucket"])["doc_id"].transform("size") <= max_bucket_size]
+    idx = idx[idx.groupby(["band", "bucket"])["doc_id"].transform("size") <= MAX_BUCKET_SIZE]
     cand = new.merge(idx, on=["band", "bucket"])
     a, b = cand["new"].to_numpy(), cand["doc_id"].to_numpy()
-    keep = _size_compatible(new_sz[a], cand["sz"].to_numpy(), threshold)
-    if exclude_same_id:
-        keep &= new_ids[a] != b
+    keep = _size_compatible(new_sz[a], cand["sz"].to_numpy(), threshold) & (new_ids[a] != b)
     pairs = np.unique(np.stack([a[keep], b[keep]], axis=1), axis=0)
     if not len(pairs):
         return []

@@ -15,8 +15,10 @@ Crash contract (the tiers are mutated under the writer lease of
 same retry-until-success contract as every resumable sink):
 
 * **Appends are idempotent.** An append anti-joins its rows against the
-  ids the dataset already holds, reading only the partitions the rows
-  land in, so re-running a crashed append adds nothing twice.
+  ids the dataset already holds (per (id, partition) on a lookup side,
+  where an id's rows span partitions that land one file each), reading
+  only the partitions the rows land in, so re-running a crashed append
+  adds nothing twice and writes whatever did not land.
 * **Deletes converge on re-run.** A delete drops the touched partitions
   that lose every row, then dynamic-overwrites the survivors of the
   others (``overwrite_partitions``); untouched partitions keep their
@@ -182,18 +184,32 @@ def spark_hash_longs(values: np.ndarray) -> np.ndarray:
 
 # --- driver-local parquet I/O ------------------------------------------------
 
-# The largest partition (bytes on disk) ``Dataset.compact`` rewrites on the
-# driver; a larger one keeps the Spark rewrite, so the driver's memory per
-# rewrite stays bounded. tools/local_compact_cost.py on a 4-core x86 box,
-# a fingerprints/-shaped partition of 8 files: 5 MB 0.09 s (+43 MB driver
-# RSS) against Spark's 2.3 s; 18 MB 0.19 s (+57 MB) vs 3.7 s; 68 MB 0.49 s
-# (+195 MB) vs 5.6 s; 132 MB 0.83 s (+401 MB) vs 7.0 s. The driver body
-# is faster at every size, so the bound is set by memory: ~3x the
-# partition's bytes, ~200 MB at this bound.
+# The largest partition (uncompressed bytes of its row groups, read from
+# the footers) ``Dataset.compact`` rewrites on the driver; a larger one
+# keeps the Spark rewrite, so the driver's memory per rewrite stays
+# bounded. tools/local_compact_cost.py on a 4-core x86 box, 8 files per
+# partition, uncompressed MB -> driver wall (+driver peak RSS) vs Spark's
+# wall: a banded/-shaped lookup partition (cell-sorted ints) 14 MB 0.30 s
+# (+84 MB) vs 4.4 s, 49 MB 1.08 s (+169 MB) vs 7.0 s, 91 MB 1.83 s
+# (+337 MB) vs 10.5 s; a fingerprints/-shaped id partition (random long
+# lists) 19 MB 0.12 s (+55 MB) vs 2.5 s, 68 MB 0.31 s (+206 MB) vs 3.9 s,
+# 133 MB 0.61 s (+414 MB) vs 5.5 s. The driver body is faster at every
+# size, so the bound is set by memory: ~3-3.7x the uncompressed bytes
+# for both shapes, ~240 MB at this bound.
 _LOCAL_COMPACT_MAX_BYTES = 64 << 20
 
 _ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 _SPARK_VERSION = b"org.apache.spark.version"
+
+
+def _data_bytes(files: list[str]) -> int:
+    """The uncompressed bytes of ``files``' row groups, from their parquet
+    footers (no data page is read)."""
+    total = 0
+    for f in files:
+        md = pq.read_metadata(f)
+        total += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+    return total
 
 
 def _local_dir(path: str) -> str | None:
@@ -458,27 +474,40 @@ class Dataset:
     ) -> DataFrame:
         """``rows`` minus the ids this dataset already holds, reading only
         ``parts`` (which must cover the rows' own partitions) — the
-        idempotent-append check."""
+        idempotent-append check. On a lookup side an id's rows span
+        several partitions, each landing with its own file, so the check
+        is per (id, partition): a retry after a crash that landed only
+        some of an id's partitions still writes the rest."""
+        keys = [id_col, self.part_col] if self.cell else [id_col]
         existing = self.read(spark, path, parts).select(
-            F.col(id_col).cast("long").alias(id_col)
+            F.col(id_col).cast("long").alias(id_col),
+            *[F.col(c).cast("int").alias(c) for c in keys[1:]],
         )
         if self.cell:
             existing = existing.distinct()
-        return rows.join(existing, id_col, "left_anti")
+        return rows.join(existing, keys, "left_anti")
 
     def unindexed_local(self, path: str, rows: pa.Table, id_col: str) -> pa.Table:
         """``unindexed`` on the driver: ``rows`` (carrying the partition
-        column) minus the ids the dataset holds in the rows' own
-        partitions."""
-        parts = pac.unique(rows.column(self.part_col)).to_pylist()
+        column) minus what the dataset holds in the rows' own partitions,
+        per id (per (id, partition) on a lookup side)."""
+        pc = self.part_col
+        parts = pac.unique(rows.column(pc)).to_pylist()
         root = self._local_root(path)
         if not any(self._files(root, p) for p in parts):
             return rows
         ids = rows.column(id_col)
         held = self.read_local(
-            path, parts, filter=pads.field(id_col).isin(ids), columns=[id_col]
-        ).column(id_col)
-        return rows.filter(pac.invert(pac.is_in(ids, value_set=held)))
+            path, parts, filter=pads.field(id_col).isin(ids), columns=[id_col, pc]
+        )
+        if not self.cell:
+            return rows.filter(pac.invert(pac.is_in(ids, value_set=held.column(id_col))))
+        landed = set(zip(held.column(id_col).to_pylist(), held.column(pc).to_pylist()))
+        return rows.filter(
+            pa.array(
+                [k not in landed for k in zip(ids.to_pylist(), rows.column(pc).to_pylist())]
+            )
+        )
 
     def delete(
         self,
@@ -560,7 +589,7 @@ class Dataset:
         compacted.
 
         On a local root each hot partition of at most
-        ``_LOCAL_COMPACT_MAX_BYTES`` is rewritten on the driver, one at a
+        ``_LOCAL_COMPACT_MAX_BYTES`` uncompressed is rewritten on the driver, one at a
         time (``_compact_local``: the same packing, no Spark job); larger
         ones keep the Spark rewrite."""
         dataset = self.root(path)
@@ -583,8 +612,7 @@ class Dataset:
             if hot and local is not None:
                 rest = []
                 for part in hot:
-                    files = self._files(local, part)
-                    if sum(os.path.getsize(f) for f in files) > _LOCAL_COMPACT_MAX_BYTES:
+                    if _data_bytes(self._files(local, part)) > _LOCAL_COMPACT_MAX_BYTES:
                         rest.append(part)
                     else:
                         self._compact_local(local, part)

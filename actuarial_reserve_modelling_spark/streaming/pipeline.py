@@ -661,25 +661,22 @@ class _FingerprintTier:
         )
         return first, self._DS.parts_of(first)
 
-    def hits(self, first: DataFrame, fparts: list[int]) -> DataFrame:
-        """The distinct doc_ids of ``first`` whose fingerprint is indexed
-        under a DIFFERENT doc_id (same-id matches are replays, not
-        duplicates); the index read is pruned to ``fparts``."""
+    def survivors(self, first: DataFrame, fparts: list[int]) -> DataFrame:
+        """``first`` minus the doc_ids whose fingerprint is indexed under
+        a DIFFERENT doc_id (same-id matches are replays, not duplicates);
+        the index read is pruned to ``fparts``."""
+        if not self.present():
+            return first
         seen = self._DS.read(self.spark, self.path, fparts).select(
             "fingerprint", F.col("doc_id").alias("_idx_id")
         )
-        return (
+        hits = (
             first.join(seen, "fingerprint")
             .filter(F.col("doc_id") != F.col("_idx_id"))
             .select("doc_id")
             .distinct()
         )
-
-    def survivors(self, first: DataFrame, fparts: list[int]) -> DataFrame:
-        """``first`` minus its ``hits``."""
-        if not self.present():
-            return first
-        return first.join(self.hits(first, fparts), "doc_id", "left_anti")
+        return first.join(hits, "doc_id", "left_anti")
 
     def append(self, rows: DataFrame, fparts: list[int]) -> None:
         """Append the ``(doc_id, fingerprint, fpart)`` rows whose doc_id
@@ -690,9 +687,10 @@ class _FingerprintTier:
         self._DS.write(rows.select("doc_id", "fingerprint", "fpart"), self.path)
 
     def hits_local(self, docs: list[tuple[int, str, int]]) -> set[int]:
-        """``hits`` of driver-resident ``(doc_id, fingerprint, fpart)``
-        rows, through a pyarrow read of their own fpart directories
-        filtered to their fingerprints: no Spark job."""
+        """The doc_ids of driver-resident ``(doc_id, fingerprint, fpart)``
+        rows whose fingerprint is indexed under a different doc_id,
+        through a pyarrow read of their own fpart directories filtered to
+        their fingerprints: no Spark job."""
         if not docs or not self.present():
             return set()
         seen = self._DS.read_local(

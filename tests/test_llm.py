@@ -2186,7 +2186,7 @@ def test_ann_index_delete_all_leaves_readable_empty_index(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_persisted_dedup_banded_lookup_pruned(spark, tmp_path):
+def test_persisted_dedup_banded_lookup_pruned(spark, tmp_path, monkeypatch):
     """r11 banded projection (the l34 move applied to MinHash): the
     persisted tier's lookup side must (a) maintain banded/ rows 1:1
     with fingerprints·bands through persist → add (idempotent retry) →
@@ -2240,7 +2240,13 @@ def test_persisted_dedup_banded_lookup_pruned(spark, tmp_path):
 
     banded_before = set(glob.glob(path + "/banded/bpart=*/*.parquet"))
     assert_cell_sorted(banded_before)
-    compact_dedup_index(spark, path, max_files_per_partition=1)
+    # Spark's rewrite (dynamic overwrite) here; the driver body's sort is
+    # pinned against it in test_driver_local_tier_io_matches_spark
+    from actuarial_reserve_modelling_spark.sources import tiers
+
+    with monkeypatch.context() as m:
+        m.setattr(tiers, "_LOCAL_COMPACT_MAX_BYTES", -1)
+        compact_dedup_index(spark, path, max_files_per_partition=1)
     assert_cell_sorted(
         set(glob.glob(path + "/banded/bpart=*/*.parquet")) - banded_before
     )
@@ -2848,7 +2854,7 @@ def test_spark_hash_ports_match_spark(spark):
         ).tolist()
 
 
-def test_driver_local_tier_io_matches_spark(spark, tmp_path):
+def test_driver_local_tier_io_matches_spark(spark, tmp_path, monkeypatch):
     """``Dataset.write_local`` / ``compact``'s local body / the stats
     rewrite give what Spark's write gives — per-partition rows, the
     lookup side's in-file cell sort, the schema Spark infers (field
@@ -2865,6 +2871,7 @@ def test_driver_local_tier_io_matches_spark(spark, tmp_path):
         _banded_projection_local,
         build_dedup_index,
     )
+    from actuarial_reserve_modelling_spark.sources import tiers
     from actuarial_reserve_modelling_spark.sources.tiers import (
         Dataset,
         _write_index_stats,
@@ -2916,8 +2923,13 @@ def test_driver_local_tier_io_matches_spark(spark, tmp_path):
         return out
 
     assert state(local_dir) == state(spark_dir)
-    ids_ds.compact(spark, spark_dir, 1)
-    look.compact(spark, spark_dir, 1)
+    # the reference compaction takes the Spark body (dynamic overwrite)
+    # on its local root: no partition is under a negative bound
+    with monkeypatch.context() as m, fired_jobs(spark) as jobs:
+        m.setattr(tiers, "_LOCAL_COMPACT_MAX_BYTES", -1)
+        ids_ds.compact(spark, spark_dir, 1)
+        look.compact(spark, spark_dir, 1)
+    assert jobs
     with fired_jobs(spark) as jobs:
         ids_ds.compact(spark, local_dir, 1)
         look.compact(spark, local_dir, 1)

@@ -574,11 +574,14 @@ def test_neardup_ingest_steady_batch_job_budget(spark, tmp_path):
 
 
 def test_neardup_ingest_rename_crash_heals(spark, tmp_path, monkeypatch):
-    """A crash between the dedup tier's two local appends (``os.rename``
-    fails once the lookup side has landed, before the id side has)
-    leaves a tier Spark still reads, with the ``_tmp_`` staging
-    directory listed by ``vacuum_index``; the retried step heals every
-    dataset to the same per-partition rows as an uninterrupted run."""
+    """A crash in the dedup tier's local appends leaves a tier Spark
+    still reads, with the ``_tmp_`` staging directory listed by
+    ``vacuum_index``; the retried step heals every dataset to the same
+    per-partition rows as an uninterrupted run. Two crash points:
+    ``os.rename`` fails once the lookup side has landed, before the id
+    side has; and once the first ``banded/`` partition has landed, before
+    the rest of the lookup side has (the retry must still write the
+    landed docs' other partitions)."""
     from actuarial_reserve_modelling_spark.sources.sinks import vacuum_index
     from actuarial_reserve_modelling_spark.sources.tiers import read_index_stats
     from actuarial_reserve_modelling_spark.streaming.pipeline import (
@@ -586,7 +589,7 @@ def test_neardup_ingest_rename_crash_heals(spark, tmp_path, monkeypatch):
     )
 
     batches = _neardup_batches(spark)
-    ref, work = str(tmp_path / "ref"), str(tmp_path / "crash")
+    ref = str(tmp_path / "ref")
 
     def run(work_dir, key):
         return {
@@ -598,27 +601,53 @@ def test_neardup_ingest_rename_crash_heals(spark, tmp_path, monkeypatch):
 
     want = run(ref, "test_neardup_crash_ref")
     real_rename = os.rename
-    crashed = []
 
-    def rename(src, dst):
-        if not crashed and "dedup_index/fingerprints/part=" in dst:
-            crashed.append(dst)
-            raise OSError("injected crash before the id side landed")
-        return real_rename(src, dst)
+    def between_sides(dst, landed):
+        return "dedup_index/fingerprints/part=" in dst
 
-    monkeypatch.setattr(os, "rename", rename)
-    with pytest.raises(OSError, match="injected crash"):
-        run(work, "test_neardup_crash")
-    monkeypatch.setattr(os, "rename", real_rename)
-    idx = os.path.join(work, "dedup_index")
-    banded = spark.read.parquet(idx + "/banded").select("doc_id").distinct().count()
-    assert banded > spark.read.parquet(idx + "/fingerprints").count()
-    assert any(
-        "/dedup_index/fingerprints/_tmp_" in p for p in vacuum_index(None, work, dry_run=True)
-    )
-    assert run(work, "test_neardup_crash") == want
-    assert _tier_rows(spark, work) == _tier_rows(spark, ref)
-    assert read_index_stats(spark, idx) == read_index_stats(spark, ref + "/dedup_index")
+    def mid_lookup(dst, landed):
+        # a data file (not a checksum, not a compaction's directory) of a
+        # second banded/ partition, once the first one's file has landed
+        return (
+            "dedup_index/banded/bpart=" in dst
+            and dst.endswith(".parquet")
+            and not os.path.basename(dst).startswith(".")
+            and any("dedup_index/banded/bpart=" in d for d in landed)
+        )
+
+    for name, crash_at in (("sides", between_sides), ("lookup", mid_lookup)):
+        work = str(tmp_path / name)
+        landed, crashed = [], []
+
+        def rename(src, dst):
+            if not crashed and crash_at(dst, landed):
+                crashed.append(dst)
+                raise OSError("injected crash mid-append")
+            if dst.endswith(".parquet") and not os.path.basename(dst).startswith("."):
+                landed.append(dst)
+            return real_rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", rename)
+        with pytest.raises(OSError, match="injected crash"):
+            run(work, f"test_neardup_crash_{name}")
+        monkeypatch.setattr(os, "rename", real_rename)
+        idx = os.path.join(work, "dedup_index")
+        fp = spark.read.parquet(idx + "/fingerprints").count()
+        banded = spark.read.parquet(idx + "/banded").groupBy("doc_id").count()
+        if crash_at is between_sides:
+            assert banded.count() > fp
+        else:  # some doc has only part of its 16 band rows
+            assert banded.filter(F.col("count") < 16).count() > 0
+        stage = "banded" if crash_at is mid_lookup else "fingerprints"
+        assert any(
+            f"/dedup_index/{stage}/_tmp_" in p
+            for p in vacuum_index(None, work, dry_run=True)
+        )
+        assert run(work, f"test_neardup_crash_{name}") == want
+        assert _tier_rows(spark, work) == _tier_rows(spark, ref)
+        assert read_index_stats(spark, idx) == read_index_stats(
+            spark, ref + "/dedup_index"
+        )
 
 
 @pytest.mark.slow
