@@ -53,8 +53,10 @@ same retry-until-success contract as every resumable sink):
   lists as an orphan (``_tmp_*``), and the retried append anti-joins
   whatever did land, so the same crash states as a Spark write heal the
   same way. An append renames one partition at a time, lookup side
-  first; a local compaction deletes then renames in each rewritten
-  partition, the window of Spark's dynamic overwrite.
+  first; a local compaction deletes a rewritten partition's old files,
+  then renames its new one in, the window of Spark's dynamic
+  overwrite. One staging directory serves a whole call, so a partition
+  costs its file, its checksum and their renames, no directories.
 * **Stats are advisory.** The row count only routes lookups between the
   pruned and full-scan paths, which answer identically. A missing or
   unreadable ``stats/`` reads as unknown (the pruned, scale-safe path);
@@ -66,6 +68,7 @@ same retry-until-success contract as every resumable sink):
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -276,6 +279,13 @@ def _write_file(table: pa.Table, directory: str) -> str:
     return name
 
 
+def _rename_in(stage: str, name: str, directory: str) -> None:
+    """Move the staged file ``name`` and its checksum into ``directory``,
+    the checksum first: a visible data file always has its own."""
+    for n in (f".{name}.crc", name):
+        os.rename(os.path.join(stage, n), os.path.join(directory, n))
+
+
 def _mark_success(root: str) -> None:
     """The empty ``_SUCCESS`` marker a Spark write job commits at its
     output root."""
@@ -433,36 +443,43 @@ class Dataset:
         data = data.select(schema.names).cast(schema)
         starts = np.flatnonzero(np.diff(parts, prepend=parts[0] - 1))
         ends = np.append(starts[1:], len(parts))
+        # one flat staging directory per call: each partition costs a
+        # file, its checksum and their renames, not a directory pair too
         stage = os.path.join(root, f"_tmp_{uuid.uuid4().hex}")
-        staged = []
-        for lo, hi in zip(starts.tolist(), ends.tolist()):
-            rel = f"{pc}={int(parts[lo])}"
-            os.makedirs(os.path.join(stage, rel))
-            staged.append((rel, _write_file(data.slice(lo, hi - lo), os.path.join(stage, rel))))
+        os.makedirs(stage)
+        staged = [
+            (f"{pc}={int(parts[lo])}", _write_file(data.slice(lo, hi - lo), stage))
+            for lo, hi in zip(starts.tolist(), ends.tolist())
+        ]
         for rel, name in staged:
             os.makedirs(os.path.join(root, rel), exist_ok=True)
-            # the checksum first: a visible data file always has its own
-            for n in (f".{name}.crc", name):
-                os.rename(os.path.join(stage, rel, n), os.path.join(root, rel, n))
-        shutil.rmtree(stage)
+            _rename_in(stage, name, os.path.join(root, rel))
+        os.rmdir(stage)
         _mark_success(root)
         spark.catalog.refreshByPath(root)
 
-    def _compact_local(self, root: str, part: int) -> None:
-        """Rewrite one partition of the local ``root`` as one packed file:
-        staged under ``_tmp_<uuid>/``, then the old directory is deleted
-        and the staged one renamed in, the window of Spark's dynamic
-        overwrite."""
-        files = self._files(root, part)
-        schema = pq.read_schema(files[0])
-        table = self._pack_local(pads.dataset(files, schema=schema, format="parquet").to_table())
-        rel = f"{self.part_col}={part}"
+    def _compact_local(self, root: str, parts: list[int]) -> None:
+        """Rewrite each of ``parts`` of the local ``root`` as one packed
+        file, one partition at a time: staged in one ``_tmp_<uuid>/``
+        directory, then the partition's old files (and checksums) are
+        deleted and the staged file renamed in, the window of Spark's
+        dynamic overwrite. The partition directory itself stays."""
         stage = os.path.join(root, f"_tmp_{uuid.uuid4().hex}")
-        os.makedirs(os.path.join(stage, rel))
-        _write_file(table.cast(schema), os.path.join(stage, rel))
-        shutil.rmtree(os.path.join(root, rel))
-        os.rename(os.path.join(stage, rel), os.path.join(root, rel))
-        shutil.rmtree(stage)
+        os.makedirs(stage)
+        for part in parts:
+            d = f"{root}/{self.part_col}={part}"
+            files = self._files(root, part)
+            schema = pq.read_schema(files[0])
+            table = self._pack_local(
+                pads.dataset(files, schema=schema, format="parquet").to_table()
+            )
+            name = _write_file(table.cast(schema), stage)
+            for f in files:
+                os.remove(f)
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(d, f".{os.path.basename(f)}.crc"))
+            _rename_in(stage, name, d)
+        os.rmdir(stage)
 
     def unindexed(
         self,
@@ -610,12 +627,14 @@ class Dataset:
             rest = hot
             local = _local_dir(dataset)
             if hot and local is not None:
-                rest = []
-                for part in hot:
-                    if _data_bytes(self._files(local, part)) > _LOCAL_COMPACT_MAX_BYTES:
-                        rest.append(part)
-                    else:
-                        self._compact_local(local, part)
+                small = [
+                    p
+                    for p in hot
+                    if _data_bytes(self._files(local, p)) <= _LOCAL_COMPACT_MAX_BYTES
+                ]
+                rest = [p for p in hot if p not in small]
+                if small:
+                    self._compact_local(local, small)
                 _mark_success(local)
                 spark.catalog.refreshByPath(dataset)
             if rest:
@@ -846,15 +865,21 @@ def read_meta(
     missing: Callable[[AnalysisException], dict] | None = None,
 ) -> dict:
     """The tier's ``meta/`` row as ``{field: convert(value)}`` (a column
-    absent from an older layout converts None). Successful reads are
-    cached per process. A genuinely absent ``meta/`` returns
-    ``missing(e)`` — never cached, so a layout fallback is not pinned for
-    the process lifetime — or propagates when ``missing`` is None; every
-    other read failure propagates."""
+    absent from an older layout converts None). On a local root a
+    one-file ``meta/`` is read by pyarrow, without a Spark job
+    (``_one_file_local``). Successful reads are cached per process. A
+    genuinely absent ``meta/`` returns ``missing(e)`` — never cached, so
+    a layout fallback is not pinned for the process lifetime — or
+    propagates when ``missing`` is None; every other read failure
+    propagates."""
     key = (path, "meta")
     if key not in _PIECE_CACHE:
+        local = _one_file_local(path + "/meta")
         try:
-            row = spark.read.parquet(path + "/meta").first()
+            if local is None:
+                row = spark.read.parquet(path + "/meta").first()
+            else:
+                row = (pq.read_table(local).slice(0, 1).to_pylist() or [None])[0]
         except AnalysisException as e:
             if missing is None or not _is_path_missing(e):
                 raise
@@ -865,9 +890,33 @@ def read_meta(
                 f"{kind} meta at {path}/meta exists but holds no rows — "
                 f"the index is corrupt; rebuild with {persist_fn}"
             )
-        d = row.asDict()
+        d = row if isinstance(row, dict) else row.asDict()
         _PIECE_CACHE[key] = {k: conv(d.get(k)) for k, conv in fields.items()}
     return dict(_PIECE_CACHE[key])
+
+
+def _one_file_local(path: str) -> str | None:
+    """The one data file of the parquet directory ``path`` on a local
+    root, which the driver reads with pyarrow (no Spark job); None for a
+    remote root, a missing directory or any other file count, which
+    Spark's read (and its errors) then decide."""
+    local = _local_dir(path)
+    files = [e.path for e in _visible(local) if e.is_file()] if local else []
+    return files[0] if len(files) == 1 else None
+
+
+def write_local_dir(table: pa.Table, directory: str) -> None:
+    """``table`` as the new parquet directory ``directory`` on a local
+    root, laid out as a one-task Spark write leaves it: one file carrying
+    the Spark footer (``_spark_schema``) and its checksum, then
+    ``_SUCCESS``. It is staged in a ``_tmp_<uuid>`` sibling, which
+    readers skip, and renamed in whole; ``directory`` must not exist."""
+    parent = os.path.dirname(directory.rstrip("/"))
+    stage = os.path.join(parent, f"_tmp_{uuid.uuid4().hex}")
+    os.makedirs(stage)
+    _write_file(table.cast(_spark_schema(table.schema)), stage)
+    _mark_success(stage)
+    os.rename(stage, directory)
 
 
 def _one_row_meta(spark: SparkSession, **cols) -> DataFrame:

@@ -33,7 +33,11 @@ from pyspark.sql import types as T
 
 from actuarial_reserve_modelling_spark.catalog import load_table
 from actuarial_reserve_modelling_spark.sources.sinks import vacuum_index
-from actuarial_reserve_modelling_spark.sources.tiers import Dataset, hash_part
+from actuarial_reserve_modelling_spark.sources.tiers import (
+    Dataset,
+    hash_part,
+    write_local_dir,
+)
 
 
 # The most rows one micro-batch of ``incremental_neardup_ingest`` may
@@ -47,10 +51,8 @@ from actuarial_reserve_modelling_spark.sources.tiers import Dataset, hash_part
 # 1,667 rows (sf0.1 split in 3) took 0.17 s and +29 MB. The bound keeps
 # the worst case near 4 s and 0.5 GB.
 _NEARDUP_MAX_ROWS = 2_000
-# its admitted docs (the sink frame) and its fingerprint-tier rows
-_DOC_ROWS = T.StructType(
-    [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-)
+# its admitted docs (the sink table) and its fingerprint-tier rows
+_DOC_ARROW = pa.schema([("doc_id", pa.int64()), ("text", pa.string())])
 _FP_ARROW = pa.schema(
     [("doc_id", pa.int64()), ("fingerprint", pa.string()), ("fpart", pa.int32())]
 )
@@ -421,9 +423,12 @@ class _IngestGate:
       inside acquire reentrantly under it). ``locked`` runs any other
       tier mutation (t10's seed bootstrap) under the same lease.
     * **Epoch-keyed overwrite sink.** Epoch ``bid`` clears and then
-      overwrites ``<sink>/<key>/e{bid}`` (a Spark write), so a retried
-      epoch replaces its own output. ``append`` gets that directory and
-      re-reads the committed rows from it (``committed``, a cheap
+      overwrites ``<sink>/<key>/e{bid}``, so a retried epoch replaces
+      its own output. A check that returns a Spark frame gets a Spark
+      write; one that returns a driver-resident arrow table gets a
+      pyarrow write (``write_local_dir``: staged in a ``_tmp_`` sibling,
+      which readers skip, and renamed in whole). ``append`` gets that
+      directory and re-reads the committed rows from it (``committed``, a cheap
       columnar read, or a pyarrow read on the driver), so tier appends
       derive from what was committed and the check plan runs once.
     * **Idempotent appends, same-id replay convergence.** Every tier
@@ -443,11 +448,12 @@ class _IngestGate:
       exactly, so the admitted set does not depend on it.
 
     Which phases run on Spark is the gate's own choice: the loop itself
-    adds only the sink write, and a compaction on a local work dir
-    rewrites small partitions on the driver (``Dataset.compact``). The
-    t11 gate runs its steady batch's tier phases on the driver too, so
-    Spark runs only its collect and the sink; t10, t12 and t13 run
-    their checks and appends as Spark jobs.
+    adds only the sink write of a frame, and a compaction on a local
+    work dir rewrites small partitions on the driver
+    (``Dataset.compact``). The t11 gate runs its steady batch's tier
+    phases and its sink on the driver too, so Spark runs only its
+    collect; t10, t12 and t13 run their checks, sinks and appends as
+    Spark jobs.
 
     ``ARM_GATE_TIMING=1`` prints one ``ARM_GATE_TIMING <gate> batch=N
     label=seconds ...`` line per epoch: ``compact``, the gate's own
@@ -520,7 +526,9 @@ class _IngestGate:
         cols: tuple[str, ...],
         cache_key: str,
         state_partitions: int,
-        check: Callable[[DataFrame, int], tuple[DataFrame, Callable | None]],
+        check: Callable[
+            [DataFrame, int], tuple[DataFrame | pa.Table, Callable | None]
+        ],
         sink_cols: tuple[str, ...],
         out_cols: tuple[str, ...],
         tiers: list[_Tier],
@@ -561,9 +569,18 @@ class _IngestGate:
                     vacuum_index(spark, self.work, dry_run=False)
             self.mark("compact")
             admitted, append = check(batch_df, bid)
-            admitted.select(*sink_cols).withColumn(
-                "batch", F.lit(bid).cast("int")
-            ).write.mode("overwrite").parquet(out_epoch)
+            if isinstance(admitted, pa.Table):
+                admitted = admitted.select(list(sink_cols))
+                write_local_dir(
+                    admitted.append_column(
+                        "batch", pa.array([bid] * admitted.num_rows, pa.int32())
+                    ),
+                    out_epoch,
+                )
+            else:
+                admitted.select(*sink_cols).withColumn(
+                    "batch", F.lit(bid).cast("int")
+                ).write.mode("overwrite").parquet(out_epoch)
             self.mark("sink")
             if append is not None:
                 append(out_epoch)
@@ -844,7 +861,7 @@ def incremental_neardup_ingest(
        pruned to the candidates' id-hash partitions). A tier persisted
        with other signing parameters is checked with rows re-signed
        locally under ITS parameters;
-    4. the admitted docs go to the epoch sink (a Spark write), then
+    4. the admitted docs go to the epoch sink (a pyarrow write), then
        append to BOTH tiers, restricted to the ids read back from the
        committed sink with pyarrow: the dedup tier
        (``add_to_dedup_index_local``: id-anti-joined, ``banded/`` first,
@@ -852,8 +869,8 @@ def incremental_neardup_ingest(
        Rejected docs contribute NOTHING — the tiers stay linear in the
        KEPT corpus, not the ingested stream.
 
-    Spark runs the batch's collect, the epoch sink write and batch 0's
-    bootstrap: ``persist_dedup_index`` on the signed rows restricted to
+    Spark runs the batch's collect and batch 0's bootstrap:
+    ``persist_dedup_index`` on the signed rows restricted to
     its admitted ids (meta/ is written last, so its presence is the
     commit marker; a retry re-persists over partial state). Both tiers
     compact under ``_IngestGate``'s policy (``compact_dedup_index`` and
@@ -876,7 +893,6 @@ def incremental_neardup_ingest(
 
     Returns admitted rows ``(doc_id, batch)``.
     """
-    from actuarial_reserve_modelling_spark.operators.arrowkit import local_frame
     from actuarial_reserve_modelling_spark.operators.dedup import (
         HTOK,
         MINHASH_SEED,
@@ -953,8 +969,9 @@ def incremental_neardup_ingest(
                 )
             }
             docs = [r for r in docs if r["doc_id"] not in hits]
-        admitted = local_frame(
-            spark, [(r["doc_id"], r["text"]) for r in docs], _DOC_ROWS
+        admitted = pa.Table.from_pylist(
+            [{"doc_id": r["doc_id"], "text": r["text"]} for r in docs],
+            schema=_DOC_ARROW,
         )
         gate.mark("cross_batch")
 

@@ -549,8 +549,8 @@ def _tier_rows(spark, work: str) -> dict:
 
 def test_neardup_ingest_steady_batch_job_budget(spark, tmp_path):
     """Every t11 batch after the bootstrap runs its tier phases on the
-    driver: Spark runs only its collect, the epoch sink and (after the
-    bootstrap rewrote meta/) one meta read, at most 5 jobs per batch,
+    driver: Spark runs only its collect (the epoch sink and the meta
+    read after the bootstrap are pyarrow too), at most 5 jobs per batch,
     counted by the stream's ``batch = N`` job description."""
     from actuarial_reserve_modelling_spark.streaming.pipeline import (
         incremental_neardup_ingest,
